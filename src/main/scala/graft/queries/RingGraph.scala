@@ -1,0 +1,51 @@
+package graft.queries
+
+import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The shared ring test graph of the graph queries: 100 nodes
+  * (`p_partkey % 100`), ring edges id → (id + 1) % 100, plus quadratic
+  * chords id → (id² + 7) % 100 from every third node. Each form returns
+  * `(nodes, edges)`; [[sql]] is the DuckDB twin. */
+private[queries] object RingGraph {
+
+  /** Directed `src → dst` edges, deduplicated (self-loops kept). */
+  def directed(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val nodes = Tables.part(s, d)
+      .select((col("p_partkey") % 100).as("id")).distinct()
+    val edges = nodes
+      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
+      .unionByName(nodes.filter(col("id") % 3 === 0)
+        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
+      .distinct()
+    (nodes, edges)
+  }
+
+  /** Directed `a → b` edges without self-loops. */
+  def simple(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (nodes, edges) = directed(s, d)
+    (nodes, edges.filter(col("src") =!= col("dst"))
+      .select(col("src").as("a"), col("dst").as("b")))
+  }
+
+  /** Undirected edges as canonical `a < b` pairs. */
+  def undirected(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (nodes, edges) = directed(s, d)
+    (nodes, edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct())
+  }
+
+  /** CTEs `nodes`, `e` (directed), `und` (canonical pairs) and `adj`
+    * (both directions of `und`); callers append their own CTEs. */
+  val sql =
+    """WITH nodes AS MATERIALIZED (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      |e AS MATERIALIZED (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
+      |      UNION
+      |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
+      |und AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |      FROM e WHERE src <> dst),
+      |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
+}

@@ -23,17 +23,6 @@ object Round11Queries {
       |      UNION
       |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0)""".stripMargin
 
-  private def graphNodesEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-    (nodes, edges)
-  }
-
   /** Unrolled 2-iteration HITS oracle: each half-round is a sum along
     * edges + an ∞-norm rescale to e6 (scalar-subquery max). */
   private def hitsSql(iters: Int): String = {
@@ -79,7 +68,7 @@ object Round11Queries {
     //    hub mass — all-integer, so the unrolled SQL replays it exactly.
     QueryDef("q_hits",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         Graph.hits(nodes, edges, 2)
       },
       Some(hitsSql(2))),
@@ -89,7 +78,7 @@ object Round11Queries {
     //    middle ground between raw counts and 1/deg resource allocation.
     QueryDef("q_adamic_adar",
       (s, d) => {
-        val (_, edges) = graphNodesEdges(s, d)
+        val (_, edges) = RingGraph.directed(s, d)
         Graph.adamicAdar(
           edges.select(col("src").as("a"), col("dst").as("b")), 2L)
       },
@@ -118,7 +107,7 @@ object Round11Queries {
     //    path-doubling relaxation (7 rounds cover paths ≤ 128 edges).
     QueryDef("q_msf",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         Graph.minimumSpanningForest(nodes,
           edges.filter(col("src") =!= col("dst"))
             .select(least(col("src"), col("dst")).as("a"),

@@ -29,30 +29,6 @@ object Round12Queries {
       |     FROM e WHERE src <> dst),
       |we AS MATERIALIZED (SELECT a, b, a * 1000 + b AS w FROM und)""".stripMargin
 
-  /** Shared ring graph (same construction as Round8/Round11Queries),
-    * undirected-canonical form. */
-  private val ringSql =
-    """WITH nodes AS MATERIALIZED (SELECT DISTINCT p_partkey % 100 AS id FROM part),
-      |e AS MATERIALIZED (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
-      |      UNION
-      |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
-      |und AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |      FROM e WHERE src <> dst),
-      |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
-
-  private def ringGraph(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-      .filter(col("src") =!= col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-    (nodes, edges)
-  }
-
   private def bridgeGraph(s: org.apache.spark.sql.SparkSession, d: String) = {
     val nodes = Tables.part(s, d)
       .select((col("p_partkey") % 100).as("id")).distinct()
@@ -305,10 +281,10 @@ object Round12Queries {
     // ── Per-vertex local clustering coefficient on the ring graph.
     QueryDef("q_local_clustering",
       (s, d) => {
-        val (_, edges) = ringGraph(s, d)
+        val (_, edges) = RingGraph.simple(s, d)
         Graph.localClustering(edges)
       },
-      Some(ringSql +
+      Some(RingGraph.sql +
         """,
           |deg AS (SELECT u AS id, CAST(count(*) AS BIGINT) AS degree FROM adj GROUP BY u),
           |tri AS (SELECT l.u AS id, CAST(count(*) AS BIGINT) AS triangles
@@ -325,10 +301,10 @@ object Round12Queries {
     //    every undirected edge counted both ways).
     QueryDef("q_assortativity",
       (s, d) => {
-        val (_, edges) = ringGraph(s, d)
+        val (_, edges) = RingGraph.simple(s, d)
         Graph.assortativity(edges)
       },
-      Some(ringSql +
+      Some(RingGraph.sql +
         """,
           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY u),
           |pairs AS (SELECT du.d AS x, dv.d AS y
@@ -354,11 +330,11 @@ object Round12Queries {
     //    unrolled 4-round SQL replay.
     QueryDef("q_label_prop",
       (s, d) => {
-        val (nodes, edges) = ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Graph.labelPropagation(nodes, edges, 4)
       },
       Some {
-        val head = ringSql +
+        val head = RingGraph.sql +
           ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
         val rounds = (1 to 4).map { i =>
           s"""r$i AS (SELECT v AS id, label FROM (

@@ -17,33 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Round131Queries {
 
-  /** Shared ring graph (same construction as Round8/11/12Queries):
-    * 100-node ring + every-third-node quadratic chords. */
-  private val ringSql =
-    """WITH nodes AS MATERIALIZED (SELECT DISTINCT p_partkey % 100 AS id FROM part),
-      |e AS MATERIALIZED (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
-      |      UNION
-      |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
-      |und AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |      FROM e WHERE src <> dst),
-      |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
-
-  private def ringGraph(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"),
-          ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    (nodes, edges)
-  }
-
   def defs: Seq[QueryDef] = Seq(
 
     // ── Degree entropy per bipartite side: H = log2(E) − Σd·log2(d)/E
@@ -101,7 +74,7 @@ object Round131Queries {
     //    The 10-node core list broadcasts into one edge classification.
     QueryDef("q_core_periphery",
       (s, d) => {
-        val (nodes, und) = ringGraph(s, d)
+        val (nodes, und) = RingGraph.undirected(s, d)
         val deg = und.select(col("a").as("u"))
           .unionByName(und.select(col("b").as("u")))
           .groupBy(col("u")).agg(count(lit(1)).as("deg"))
@@ -130,7 +103,7 @@ object Round131Queries {
               |       ELSE m * 2000000 div ((n - 10) * (n - 11)) END
               |  AS BIGINT) AS density_e6""".stripMargin)
       },
-      Some(ringSql +
+      Some(RingGraph.sql +
         """,
           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg
           |        FROM adj GROUP BY 1),
@@ -161,7 +134,7 @@ object Round131Queries {
     //    transitivity rise or fall with connectivity.
     QueryDef("q_clustering_spectrum",
       (s, d) => {
-        val (_, und) = ringGraph(s, d)
+        val (_, und) = RingGraph.undirected(s, d)
         val adj = und.select(col("a").as("u"), col("b").as("v"))
           .unionByName(und.select(col("b").as("u"), col("a").as("v")))
           .localCheckpoint(false) // degree + both wedge legs
@@ -182,7 +155,7 @@ object Round131Queries {
           .selectExpr("CAST(deg AS BIGINT) AS deg",
             "CAST(n_nodes AS BIGINT) AS n_nodes", "mean_cc_e6")
       },
-      Some(ringSql +
+      Some(RingGraph.sql +
         """,
           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg
           |        FROM adj GROUP BY 1),

@@ -19,17 +19,6 @@ object Round14Queries {
       |      UNION
       |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0)""".stripMargin
 
-  private def graphNodesEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-    (nodes, edges)
-  }
-
   /** The chain-with-chords graph of Round12Queries (10 ten-node chains;
     * chords (c, c+4) everywhere and (c+4, c+9) on even chains). Unlike
     * the ring graph — whose every cycle is EVEN (ring steps and chords
@@ -67,7 +56,7 @@ object Round14Queries {
     //    all seeds carried by ONE labeled frontier loop.
     QueryDef("q_closeness",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         Graph.closeness(nodes.withColumn("is_seed", col("id") % 25 === 0),
           edges, "is_seed", 20)
       },
@@ -119,7 +108,7 @@ object Round14Queries {
     //    on the undirected ring graph — the tie-strength score.
     QueryDef("q_edge_jaccard",
       (s, d) => {
-        val (_, edges) = graphNodesEdges(s, d)
+        val (_, edges) = RingGraph.directed(s, d)
         Graph.edgeJaccard(edges.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("a"),
             greatest(col("src"), col("dst")).as("b")))
@@ -144,7 +133,7 @@ object Round14Queries {
     //    aggregate, both map-side combinable.
     QueryDef("q_degree_hist",
       (s, d) => {
-        val (_, edges) = graphNodesEdges(s, d)
+        val (_, edges) = RingGraph.directed(s, d)
         val und = edges.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("a"),
             greatest(col("src"), col("dst")).as("b"))

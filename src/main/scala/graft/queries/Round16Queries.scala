@@ -19,17 +19,6 @@ object Round16Queries {
       |      UNION
       |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0)""".stripMargin
 
-  private def graphNodesEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-    (nodes, edges)
-  }
-
   /** Leading-`dims` e6-quantized embedding components, as in
     * Similarity.gramMatrix / Round15's PCA oracle. */
   private def compSql(i: Int) =
@@ -76,7 +65,7 @@ object Round16Queries {
     //    labeled multi-source frontier for all seeds.
     QueryDef("q_eccentricity",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         Graph.eccentricity(nodes.withColumn("is_seed", col("id") % 25 === 0),
           edges, "is_seed", 20)
       },
@@ -98,7 +87,7 @@ object Round16Queries {
     //    smallest id); ecc(u) ≥ radius and lower-bounds the diameter.
     QueryDef("q_diameter_sweep",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         val adj = edges
           .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
           .distinct()

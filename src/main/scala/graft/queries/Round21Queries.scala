@@ -10,29 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Round21Queries {
 
-  /** Shared ring graph (same construction as Round8/11/12 queries). */
-  private[queries] val ringSql =
-    """WITH nodes AS MATERIALIZED (SELECT DISTINCT p_partkey % 100 AS id FROM part),
-      |e AS MATERIALIZED (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
-      |      UNION
-      |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
-      |und AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |      FROM e WHERE src <> dst),
-      |adj AS MATERIALIZED (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
-
-  private[queries] def ringGraph(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-      .filter(col("src") =!= col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-    (nodes, edges)
-  }
-
   def defs: Seq[QueryDef] = Seq(
 
     // ── Novelty: fraction of each doc's distinct 3-shingles first seen
@@ -61,11 +38,11 @@ object Round21Queries {
     //    bit-reproducible in any engine, no RNG state.
     QueryDef("q_deepwalk",
       (s, d) => {
-        val (_, edges) = ringGraph(s, d)
+        val (_, edges) = RingGraph.simple(s, d)
         Graph.deepwalkVisits(edges, 6)
       },
       Some {
-        val head = ringSql +
+        val head = RingGraph.sql +
           """,
             |adjr AS MATERIALIZED (
             |  SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY v) AS rk,
@@ -92,11 +69,11 @@ object Round21Queries {
     //    sign-factored e6 division.
     QueryDef("q_modularity",
       (s, d) => {
-        val (nodes, edges) = ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Graph.modularity(edges, Graph.labelPropagation(nodes, edges, 4))
       },
       Some {
-        val head = ringSql +
+        val head = RingGraph.sql +
           ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
         val rounds = (1 to 4).map { i =>
           s"""r$i AS (SELECT v AS id, label FROM (

@@ -10,10 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Round22Queries {
 
-  private val ringSql = Round21Queries.ringSql
-  private def ringGraph(s: org.apache.spark.sql.SparkSession, d: String) =
-    Round21Queries.ringGraph(s, d)
-
   private val mkChannels = Seq("view", "click", "signup", "error")
 
   /** One absorbing-chain value-iteration unroll (8 rounds) for the
@@ -60,13 +56,13 @@ object Round22Queries {
     //    the decade ground truth (id div 10) on the ring graph.
     QueryDef("q_bcubed",
       (s, d) => {
-        val (nodes, edges) = ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Stats.bcubed(Graph.labelPropagation(nodes, edges, 4)
           .select(col("id"), col("label").as("cluster"),
             expr("id div 10").as("truth")))
       },
       Some {
-        val head = ringSql +
+        val head = RingGraph.sql +
           ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
         val rounds = (1 to 4).map { i =>
           s"""r$i AS (SELECT v AS id, label FROM (

@@ -17,11 +17,11 @@ object Round24Queries {
     //    winner/loser sets must match bit-for-bit.
     QueryDef("q_luby_mis",
       (s, d) => {
-        val (nodes, edges) = Round21Queries.ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Graph.lubyMis(nodes, edges, 6)
       },
       Some {
-        val head = Round21Queries.ringSql +
+        val head = RingGraph.sql +
           ",\nund0 AS MATERIALIZED (SELECT id FROM nodes)"
         val rounds = (1 to 6).map { r =>
           val h = PortableSql.hash48(

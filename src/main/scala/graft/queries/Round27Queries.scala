@@ -44,11 +44,11 @@ object Round27Queries {
     // ── Two-hop mean aggregation on the ring graph, features x = id·100.
     QueryDef("q_gnn_aggregate",
       (s, d) => {
-        val (nodes, edges) = Round21Queries.ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Graph.gnnAggregate(edges, nodes.select(col("id"),
           (col("id") * 100L).as("x")))
       },
-      Some(Round21Queries.ringSql +
+      Some(RingGraph.sql +
         """,
           |feats AS (SELECT id, id * 100 AS x FROM nodes),
           |h1 AS MATERIALIZED (

@@ -16,13 +16,13 @@ object Round29Queries {
     //    graph: Σ 1e6 div d over nodes at distance d ≤ 12.
     QueryDef("q_harmonic",
       (s, d) => {
-        val (nodes, edges) = Round21Queries.ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         val adj = edges.select(col("a").as("src"), col("b").as("dst"))
           .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
         Graph.harmonic(nodes.withColumn("is_seed", col("id") % 10 === 0),
           adj, "is_seed", 12)
       },
-      Some((Round21Queries.ringSql +
+      Some((RingGraph.sql +
         """,
           |bfs AS (
           |  SELECT id AS seed, id, 0 AS d FROM nodes WHERE id % 10 = 0
@@ -39,10 +39,10 @@ object Round29Queries {
     //    counts, never an all-pairs product.
     QueryDef("q_jaccard_edges",
       (s, d) => {
-        val (_, edges) = Round21Queries.ringGraph(s, d)
+        val (_, edges) = RingGraph.simple(s, d)
         Graph.neighborJaccard(edges)
       },
-      Some(Round21Queries.ringSql +
+      Some(RingGraph.sql +
         """,
           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg
           |        FROM adj GROUP BY u),

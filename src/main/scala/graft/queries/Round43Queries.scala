@@ -47,7 +47,7 @@ object Round43Queries {
          |  SELECT * FROM und${r - 1}
          |  WHERE id NOT IN (SELECT id FROM win$r))""".stripMargin
     }.mkString(",\n")
-    s"""${Round21Queries.ringSql},
+    s"""${RingGraph.sql},
        |und0 AS MATERIALIZED (SELECT id, $pr AS p FROM nodes),
        |$rs
        |SELECT CAST(id AS BIGINT) AS id, CAST(color AS BIGINT) AS color,
@@ -65,7 +65,7 @@ object Round43Queries {
     //    oracle replays every round bit-for-bit.
     QueryDef("q_graph_coloring",
       (s, d) => {
-        val (nodes, edges) = Round21Queries.ringGraph(s, d)
+        val (nodes, edges) = RingGraph.simple(s, d)
         Graph.jonesPlassmann(nodes, edges, 6)
       },
       Some(jpSql(6))),

@@ -40,17 +40,6 @@ object Round8Queries {
     (head +: its).mkString(",\n") + s"\nSELECT id, pr AS pr_e6 FROM p$iters"
   }
 
-  private def graphNodesEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
-    val edges = nodes
-      .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-      .unionByName(nodes.filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * col("id") + 7) % 100).as("dst")))
-      .distinct()
-    (nodes, edges)
-  }
-
   /** Unrolled k-core peeling oracle on the broken-ring graph: ring edges
     * except multiples of 7 (chains with loose ends) + the quadratic
     * chords; `rounds` must be ≥ the peeling convergence depth. */
@@ -146,7 +135,7 @@ object Round8Queries {
     //    seeds {0, 30, 60} — "importance relative to this portfolio".
     QueryDef("q_pagerank_teleport",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         val seeds = s.createDataFrame(
           Seq((0L, 500000L), (30L, 300000L), (60L, 200000L))).toDF("seed", "w_e6")
         Graph.pageRankWeightedTeleport(nodes, edges, seeds, 6)
@@ -157,7 +146,7 @@ object Round8Queries {
     //    depth 6; the oracle is a recursive CTE taking min over paths.
     QueryDef("q_bfs_levels",
       (s, d) => {
-        val (nodes, edges) = graphNodesEdges(s, d)
+        val (nodes, edges) = RingGraph.directed(s, d)
         Graph.bfsLevels(nodes.withColumn("is_src", col("id") % 25 === 0),
           edges, "is_src", 6)
       },
@@ -175,7 +164,7 @@ object Round8Queries {
     //    test graph: distance-2 pairs scored by shared-neighbor count.
     QueryDef("q_common_neighbors",
       (s, d) => {
-        val (_, edges) = graphNodesEdges(s, d)
+        val (_, edges) = RingGraph.directed(s, d)
         Graph.commonNeighbors(edges.select(col("src").as("a"), col("dst").as("b")), 2L)
       },
       Some(graphSql +
@@ -232,7 +221,7 @@ object Round8Queries {
     //    1/deg(z) as e6 truncating integers — hubs count less.
     QueryDef("q_resource_allocation",
       (s, d) => {
-        val (_, edges) = graphNodesEdges(s, d)
+        val (_, edges) = RingGraph.directed(s, d)
         Graph.resourceAllocation(
           edges.select(col("src").as("a"), col("dst").as("b")), 2L)
       },

@@ -17,7 +17,6 @@ import org.apache.spark.sql.functions._
 class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed join + keyed agg plans zero shuffle exchanges under SMJ") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -32,7 +31,6 @@ class BucketedJoinSpec extends SparkSpec {
   }
 
   test("bucketed join result is identical to the plain shuffled join") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val bucketed = SparkEntry.queries("q_bucketed_join")(spark, sf())
     val plain = Tables.orders(spark, sf())
       .select(col("o_custkey"),

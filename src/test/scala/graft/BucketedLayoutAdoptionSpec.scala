@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
 class BucketedLayoutAdoptionSpec extends SparkSpec {
 
   test("sf0.1: bucketed orders + lineitem take the fact-fact join and keyed agg exchange-free") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -37,7 +36,6 @@ class BucketedLayoutAdoptionSpec extends SparkSpec {
   }
 
   test("sf0.1: bucketed fact-fact result is identical to the plain shuffled join") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val d = sf("sf0.1")
     val bucketed = SparkEntry.queries("q_bucketed_fact_join")(spark, d)
     val plain = Tables.lineitem(spark, d)

@@ -17,7 +17,6 @@ import graft.ops.StarComponents
 class CcRoundGateSpec extends SparkSpec {
 
   private def gate(q: String): Unit = test(s"$q: star-CC rounds plan ≤2 exchanges each") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.catalog.clearCache()
     val r0 = StarComponents.roundsCounter.get()
     val x0 = StarComponents.roundExchangesCounter.get()

@@ -4,20 +4,13 @@ package graft
   * executions produce identical multisets of rows. This is what the
   * DuckDB-oracle hash gate assumes, and what RNG-based sampling, unordered
   * collect_list, FP summation-order dependence, or time-dependent
-  * expressions would silently break. Runs at sf0.001 so the whole registry
-  * stays cheap. */
+  * expressions would silently break. Both runs come from the shared
+  * [[RegistryWalk]]. */
 class DeterminismSpec extends SparkSpec {
 
-  private def snapshot(name: String): Seq[String] = {
-    val df = SparkEntry.queries(name)(spark, sf())
-    val cols = df.columns.sorted
-    df.selectExpr(cols.map(c => s"`$c`"): _*)
-      .collect().map(_.mkString("")).sorted.toSeq
-  }
-
-  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+  RegistryWalk.names.foreach { name =>
     test(s"$name is run-to-run deterministic") {
-      assert(snapshot(name) === snapshot(name), s"$name differs between runs")
+      assert(RegistryWalk.facts(sf(), name).rerunsMatch.get, s"$name differs between runs")
     }
   }
 }

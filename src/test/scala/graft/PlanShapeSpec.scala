@@ -7,19 +7,9 @@ package graft
   * results stay correct. Each assertion is an UPPER bound on exchanges
   * (fewer is fine) plus a LOWER bound on broadcasts (a broadcast that
   * degrades to a shuffle join is exactly the failure this catches).
+  * Counts come from the shared [[RegistryWalk]] build's AQE initial plan.
   */
 class PlanShapeSpec extends SparkSpec {
-
-  private def shape(q: String): (Int, Int) = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Hermetic plan: a frame cached by an earlier spec in the same JVM
-    // swaps scans for InMemoryRelation and perturbs the exchange count
-    // (the r8 q_minhash_curve flake: 16 exchanges full-suite, 8 alone).
-    spark.catalog.clearCache()
-    val p = SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan.toString
-    ("Exchange (hash|range)partitioning".r.findAllIn(p).size,
-      "BroadcastExchange".r.findAllIn(p).size)
-  }
 
   /** (query, max exchanges, min broadcasts). */
   private val expected = Seq(
@@ -534,9 +524,9 @@ class PlanShapeSpec extends SparkSpec {
 
   expected.foreach { case (q, maxEx, minBc) =>
     test(s"$q plan shape: ≤$maxEx exchanges, ≥$minBc broadcasts") {
-      val (ex, bc) = shape(q)
-      assert(ex <= maxEx, s"$q gained a shuffle: $ex exchanges (max $maxEx)")
-      assert(bc >= minBc, s"$q lost a broadcast: $bc (min $minBc)")
+      val f = RegistryWalk.facts(sf(), q)
+      assert(f.exchanges <= maxEx, s"$q gained a shuffle: ${f.exchanges} exchanges (max $maxEx)")
+      assert(f.broadcasts >= minBc, s"$q lost a broadcast: ${f.broadcasts} (min $minBc)")
     }
   }
 }

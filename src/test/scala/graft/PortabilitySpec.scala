@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
   * check (HUGEINT promotion etc.) lives in tools/check.py's DESCRIBE
   * lint, which runs in the per-batch verify loop.
   *
-  * Only needs analysis (df.schema), not execution, so the whole registry
-  * is checked in seconds. */
+  * Reads the schema of the shared [[RegistryWalk]] build. */
 class PortabilitySpec extends SparkSpec {
 
   private def portable(dt: DataType): Boolean = dt match {
@@ -23,9 +22,9 @@ class PortabilitySpec extends SparkSpec {
     case _ => false
   }
 
-  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+  RegistryWalk.names.foreach { name =>
     test(s"$name result schema is driver-portable") {
-      val schema = SparkEntry.queries(name)(spark, sf()).schema
+      val schema = RegistryWalk.facts(sf(), name).schema
       val bad = schema.fields.filterNot(f => portable(f.dataType))
       assert(bad.isEmpty,
         s"$name has driver-unsafe result columns " +

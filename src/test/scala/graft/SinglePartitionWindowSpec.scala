@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalLimit, Window => LWindow}
+import scala.util.{Failure, Success, Try}
 
 /** The single-partition-window invariant, pinned as a gate (VERDICT r8
   * item 5): an unpartitioned `Window.orderBy` moves ALL rows to one
@@ -9,17 +9,16 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Loca
   * spine — thousands of rows at any SF, bounded by the axis, not the
   * data volume). A refactor that hoists such a window ABOVE its
   * aggregate turns a bounded sort into an all-data single-partition
-  * sort — correct results, catastrophic at 100 TB. This sweep walks the
-  * optimized logical plan of EVERY registry query and fails if any
-  * unpartitioned Window's input subtree lacks an Aggregate.
+  * sort — correct results, catastrophic at 100 TB. This sweep reads the
+  * optimized logical plan of EVERY registry query (the shared
+  * [[RegistryWalk]] build) and fails if any unpartitioned Window's input
+  * subtree lacks an Aggregate or Limit.
   *
-  * Two structural notes:
-  *  - `localCheckpoint` truncates the visible plan, so a window over a
-  *    checkpointed frame is judged against the post-checkpoint subtree;
-  *    checkpoints in this repo always materialize pre-reduced axes, so
-  *    absence of an upstream Aggregate there is still a red flag — such
-  *    sites go through the allowlist with a written rationale instead.
-  *  - `distinct()` optimizes to Aggregate, so distinct value spines pass.
+  * `localCheckpoint` truncates the visible plan, so a window over a
+  * checkpointed frame is judged against the post-checkpoint subtree;
+  * checkpoints in this repo always materialize pre-reduced axes, so
+  * absence of an upstream Aggregate there is still a red flag — such
+  * sites go through the allowlist with a written rationale instead.
   */
 class SinglePartitionWindowSpec extends SparkSpec {
 
@@ -56,46 +55,33 @@ class SinglePartitionWindowSpec extends SparkSpec {
       "(part, year) revenue rollup — post-aggregate behind the " +
       "checkpoint; the same part axis q_abc_pareto sorts with its " +
       "Aggregate visible"),
-    "q_cochrane_orcutt" -> ("residual/x/y lag windows run on the " +
-      "checkpointed calendar-month rollup (bounded by the date range) — " +
-      "same pattern and rationale as q_engle_granger below"),
-    "q_engle_granger" -> ("residual lag window runs on the checkpointed " +
-      "calendar-month revenue rollup (bounded by the date range, not " +
-      "data volume) — ONE orders scan feeds OLS moments, residuals, " +
-      "and the ADF lag; the Aggregate is truncated from the visible " +
-      "plan by the checkpoint"),
     "q_sen_slope" -> ("median-rank window input is the self-join of the " +
       "checkpointed calendar-month axis — ≤ n_months² pairs, bounded by " +
       "the date range, not data volume; the month Aggregate is " +
       "truncated from the visible plan by the checkpoint"))
 
   test("unpartitioned windows only ever run on post-aggregate axes") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val bad = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!allowlisted.contains(name)) {
-        try {
-          val plan = fn(spark, sf()).queryExecution.optimizedPlan
-          // Aggregate bounds the axis (grouped rollup / distinct spine);
-          // Limit bounds it literally (top-k) — both make an
-          // unpartitioned window safe at any scale.
-          val naked = plan.collect {
-            case w: LWindow if w.partitionSpec.isEmpty &&
-              w.child.collectFirst {
-                case _: Aggregate => (); case _: GlobalLimit => ()
-                case _: LocalLimit => ()
-              }.isEmpty => w
-          }
-          if (naked.nonEmpty)
-            bad += s"$name (${naked.size} unpartitioned window(s) on non-aggregated input)"
-        } catch {
-          case e: Throwable => bad += s"$name (plan build failed: ${e.getMessage})"
-        }
+    val bad = RegistryWalk.names.filterNot(allowlisted.contains).flatMap { name =>
+      Try(RegistryWalk.facts(sf(), name).nakedWindows) match {
+        case Success(0) => None
+        case Success(n) => Some(s"$name ($n unpartitioned window(s) on non-aggregated input)")
+        case Failure(e) => Some(s"$name (plan build failed: ${e.getMessage})")
       }
     }
     assert(bad.isEmpty,
       "unpartitioned Window.orderBy over a non-aggregated input — a " +
         "single-partition sort over raw data at scale:\n  " +
         bad.mkString("\n  "))
+  }
+
+  test("every allowlisted query is registered and still needs its waiver") {
+    val stale = allowlisted.keys.toSeq.sorted.flatMap { name =>
+      if (!RegistryWalk.names.contains(name)) Some(s"$name (not in the registry)")
+      else if (RegistryWalk.facts(sf(), name).nakedWindows == 0)
+        Some(s"$name (no unpartitioned window on non-aggregated input left)")
+      else None
+    }
+    assert(stale.isEmpty,
+      "stale window-allowlist entries — remove them:\n  " + stale.mkString("\n  "))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.util.control.NonFatal
+
 /** Shared local SparkSession for specs — one session per JVM (suites run
   * forked in a single JVM; getOrCreate dedupes).
   *
@@ -20,6 +22,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Run `body` on the RocksDB state store (transformWithState needs its
+    * column families), restoring the previous provider afterwards. */
+  def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   override protected def afterAll(): Unit = {
     SparkSpec.drainActiveJobs()
     super.afterAll()
@@ -29,18 +44,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 object SparkSpec {
   /** Block (bounded) until no Spark job is active on the shared context.
     * Cheap when nothing is in flight (single statusTracker call); bounded
-    * at 60 s so a genuinely hung job can never deadlock the test runner. */
+    * at 60 s so a genuinely hung job can never deadlock the test runner.
+    * A no-op when no session was ever created: it never starts one. */
   def drainActiveJobs(): Unit = {
-    try {
-      val sc = session.sparkContext
-      if (!sc.isStopped) {
+    try SparkSession.getDefaultSession.map(_.sparkContext)
+      .filterNot(_.isStopped).foreach { sc =>
         val tracker = sc.statusTracker
         val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
         while (tracker.getActiveJobIds().nonEmpty &&
                System.nanoTime() < deadline)
           Thread.sleep(25)
       }
-    } catch { case _: Throwable => () }
+    catch {
+      case _: InterruptedException => Thread.currentThread().interrupt()
+      case NonFatal(_) => ()
+    }
   }
 
   lazy val session: SparkSession = {

@@ -12,17 +12,6 @@ class StreamDdsketchSpec extends SparkSpec {
   private val kE6 = 250000L // quarter-decade log2 buckets
   private val ps = Seq(500000L, 950000L)
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("streaming sketch converges to the batch sketch across batch splits") { withRocksDb {
     implicit val sqlCtx = spark.sqlContext
     val values = (1L to 400L).map(i => (i * i * 7919L) % 100000L + 1L)

@@ -26,19 +26,6 @@ import org.apache.spark.sql.functions._
 class StreamEpochReplaySpec extends SparkSpec {
   import spark.implicits._
 
-  /** transformWithState ops need the RocksDB provider (multiple column
-    * families); same scoped override as TwsDetectorsSpec. */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Drive `batches` one epoch at a time; return each epoch's NEW rows
     * as a multiset (memory sink only appends, so the per-epoch delta is
     * the row-count suffix — but rows can repeat across epochs, so diff

@@ -7,17 +7,6 @@ import StreamRateLimit.{Ev, RateRow}
 class StreamRateLimitSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val sec = 1000000L
 
   /** Run the limiter over `evs` split at the given boundaries; return

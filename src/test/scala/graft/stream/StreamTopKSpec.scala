@@ -7,17 +7,6 @@ import StreamTopK.TopKOut
 class StreamTopKSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def run(capacity: Int, batches: Seq[Seq[(Long, String, String)]],
                   name: String): Seq[TopKOut] = withRocksDb {
     implicit val sqlCtx = spark.sqlContext

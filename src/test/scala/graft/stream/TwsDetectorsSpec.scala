@@ -22,17 +22,6 @@ import StreamPageHinkley.{PhOut, Point}
 class TwsDetectorsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private val sec = 1000000L
   // Mean shift: 30 points at x=1.0 then 30 at x=3.0 (e6 fixed point);
   // delta=0.2, threshold=5.0 → alarms well inside the second regime.
