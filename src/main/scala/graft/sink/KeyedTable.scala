@@ -18,10 +18,17 @@ trait KeyedTable {
   def snapshot(spark: SparkSession): DataFrame
 }
 
-/** Driver-memory implementation mirroring the reference's driver-side
-  * `toLocalIterator` + bulk-upsert loop (W9/W5, `heatmap_stream.py:163,
-  * 191-196,210,230-235`). Fine at reference scale; the 100 TB path is
-  * [[ParquetKeyedTable]] (fully distributed merge).
+/** Driver-memory implementation of the reference's driver-side bulk-upsert
+  * loop (W9/W5, `heatmap_stream.py:163,191-196,210,230-235`). Each merge
+  * brings the whole batch to the driver with one `collect()`: one Spark job
+  * whose tasks run in parallel. The reference's `toLocalIterator` ran one
+  * job per partition, one after another, which made it the largest fixed
+  * cost of a stream epoch. Holding the batch on the driver is bounded by
+  * the store itself: a tiles batch holds only the tiles that changed, and a
+  * latest batch is already reduced per key on the executors, so a batch is
+  * never larger than what this table keeps in driver memory anyway. Fine at
+  * reference scale; the scale path is [[ParquetKeyedTable]] (fully
+  * distributed merge, no driver loop).
   *
   * @param keyCols   composite key (reference synthesizes `a|b|c` ids — P9)
   * @param guardCols if non-empty, an incoming row only replaces the stored
@@ -37,7 +44,9 @@ final class InMemoryKeyedTable(keyCols: Seq[String], guardCols: Seq[String])
   def this(keyCols: Seq[String], guardCol: Option[String]) =
     this(keyCols, guardCol.toSeq)
 
-  private val store = TrieMap.empty[String, Row]
+  // keyed by the key values themselves: a joined string would merge
+  // ("a|b", "c") with ("a", "b|c") and a null part with the string "null"
+  private val store = TrieMap.empty[Seq[Any], Row]
   @volatile private var schema: StructType = _
 
   private def cmp(o: Any, n: Any): Int = (o, n) match {
@@ -50,12 +59,16 @@ final class InMemoryKeyedTable(keyCols: Seq[String], guardCols: Seq[String])
 
   override def merge(batch: DataFrame): Unit = {
     if (schema == null) schema = batch.schema
+    // snapshot labels every stored row with the first batch's schema
+    require(batch.schema == schema,
+      s"batch schema <${batch.schema.toDDL}> differs from the table's <${schema.toDDL}>")
     val keyIdx = keyCols.map(batch.schema.fieldIndex)
     val guardIdx = guardCols.map(batch.schema.fieldIndex)
-    // Reference-faithful driver-side iteration (W9); chunking is implicit in
-    // toLocalIterator's partition streaming.
-    batch.toLocalIterator().forEachRemaining { row =>
-      val key = keyIdx.map(i => String.valueOf(row.get(i))).mkString("|")
+    // Driver-side upsert loop (W9) over one collect(): a single job, rows in
+    // partition order, so last-writer-wins and guard outcomes match a fold
+    // over the batch in that order.
+    batch.collect().foreach { row =>
+      val key = keyIdx.map(row.get)
       store.updateWith(key) {
         case None => Some(row)
         case Some(old) if guardIdx.isEmpty => Some(row)
