@@ -331,7 +331,8 @@ object Behavior {
   }
 
   /** Stationary distribution of the event-type Markov chain by `iters`
-    * rounds of integer power iteration over the [[transitions]] matrix:
+    * rounds of integer power iteration ([[Graph.propagate]]) over the
+    * [[transitions]] matrix:
     * π'(d) = Σ_s π(s)·prob_e6(s→d) div 1e6, every term truncating —
     * all-integer, so the unrolled SQL oracle replays it exactly. Starts
     * from the uniform e6 vector; states with no inbound transitions
@@ -347,16 +348,11 @@ object Behavior {
     val states = tr.select(col("src").as("state"))
       .unionByName(tr.select(col("dst").as("state")))
       .distinct().localCheckpoint(false)
-    var pi = states.select(col("state"), lit(1000000L).as("pi_e6"))
-    for (_ <- 1 to iters) {
-      val mass = tr.join(pi, tr("src") === pi("state"))
-        .select(col("dst"), expr("pi_e6 * prob_e6 div 1000000L").as("m"))
-        .groupBy(col("dst")).agg(sum(col("m")).as("mass"))
-      pi = states.join(mass, states("state") === mass("dst"), "left")
-        .select(col("state"), coalesce(col("mass"), lit(0L)).as("pi_e6"))
-        .localCheckpoint(false)
-    }
-    pi
+    Graph.propagateFor(iters,
+        states.select(col("state"), lit(1000000L).as("pi_e6")))(
+      Graph.propagate(tr, states, Seq("state"),
+        expr("pi_e6 * prob_e6 div 1000000L"), expr("coalesce(in_mass, 0L)"),
+        "pi_e6"))
   }
 
   /** Session entry/exit/bounce profile: sessions are maximal runs with

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,19 +17,30 @@ import org.apache.spark.sql.functions._
   * dagLongestPath, …) still materialize every round through their
   * per-round count/sum gate, so their peak footprint is one round frame
   * plus the accumulated result. FIXED-iteration loops with no per-round
-  * action (pageRank×5, hits, katz, labelPropagation, lubyMis,
-  * jonesPlassmann, deepwalkVisits, Similarity.powerIteration) run with NO
-  * driver action inside the loop — the caller's FIRST action computes the
-  * whole iters-deep persisted-RDD chain in one job. Two costs on a
-  * cluster, accepted deliberately: (a) peak storage memory briefly pins
-  * every round's frame at once (the ContextCleaner unpersists superseded
-  * rounds only after their references drop); (b) localCheckpoint truncates
-  * lineage, so losing an executor mid-chain is unrecoverable — the job
-  * fails and restarts, it does not recompute. Deployments that prefer the
-  * eager per-round profile (smaller peak, one driver round trip per
-  * iteration) or durable recovery should swap `localCheckpoint(false)` →
-  * `(true)` / `checkpoint()` at these sites; at bench scale lazy measured
-  * 15-30 % fewer jobs per query (OPTIMIZATION_r12.md §1).
+  * action (the PageRank family, [[Behavior.markovStationary]], Katz,
+  * hits, labelPropagation, lubyMis, jonesPlassmann, deepwalkVisits,
+  * Similarity.powerIteration) run with NO driver action inside the loop —
+  * the caller's FIRST action computes the whole iters-deep persisted-RDD
+  * chain in one job. Two costs on a cluster, accepted deliberately: (a)
+  * peak storage memory briefly pins every round's frame at once (the
+  * ContextCleaner unpersists superseded rounds only after their
+  * references drop); (b) localCheckpoint truncates lineage, so losing an
+  * executor mid-chain is unrecoverable — the job fails and restarts, it
+  * does not recompute. Deployments that prefer the eager per-round
+  * profile (smaller peak, one driver round trip per iteration) or durable
+  * recovery should swap `localCheckpoint(false)` → `(true)` /
+  * `checkpoint()`; at bench scale lazy measured 15-30 % fewer jobs per
+  * query (OPTIMIZATION_r12.md §1). Three shared kernels hold the round
+  * checkpoint for eleven loops, so the swap is made once per family:
+  *   - [[propagate]] — the power-iteration round (five PageRank variants,
+  *     [[Behavior.markovStationary]], q_katz_centrality);
+  *   - [[frontierBfs]] — the frontier BFS ([[bfsLevels]],
+  *     [[multiSourceBfs]] and everything built on them);
+  *   - [[relaxBounded]] — bounded path relaxation ([[shortestPaths]],
+  *     [[widestPaths]]).
+  * The other loops (hits, labelPropagation, lubyMis, jonesPlassmann,
+  * deepwalkVisits, kCore, kTruss, bridges, minimumSpanningForest,
+  * sccMinLabel, dagLongestPath, betweenness' σ layers) keep their own.
   */
 object Graph {
 
@@ -38,6 +49,12 @@ object Graph {
     edges.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .filter(col("a") < col("b")).distinct()
+
+  /** Both directions of an undirected (a, b) edge list as (u, v) rows —
+    * the adjacency every wedge, degree and neighbor join here starts from. */
+  private def bidirected(e: DataFrame): DataFrame =
+    e.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
 
   /** Per-node degree over the canonical edge list. */
   def degrees(edges: DataFrame): DataFrame =
@@ -54,17 +71,67 @@ object Graph {
     * callers that care should pre-add self-loops.
     *
     * Scale: per round, one join (ranks ⋈ edges on src) and one aggregate
-    * (sum by dst) — the canonical 2-shuffle distributed PageRank. Edges
-    * with out-degree are checkpointed once and reused every round;
-    * `localCheckpoint` truncates the growing lineage so round N's plan
-    * does not replay rounds 1..N-1 (on a cluster this would be
-    * `checkpoint` to reliable storage). Rank state stays partitioned by
-    * id; AQE coalesces the tiny per-round aggregates.
+    * (sum by dst) — the canonical 2-shuffle distributed PageRank
+    * ([[propagate]]). Edges with out-degree are checkpointed once and
+    * reused every round; `localCheckpoint` truncates the growing lineage
+    * so round N's plan does not replay rounds 1..N-1 (on a cluster this
+    * would be `checkpoint` to reliable storage). Rank state stays
+    * partitioned by id; AQE coalesces the tiny per-round aggregates.
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
     pageRankWeighted(nodes,
       edges.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L)),
       iters)
+
+  /** The PageRank update on top of a per-node teleport term: 0.85 of the
+    * truncated incoming mass, `in_mass` as summed by [[propagate]]. */
+  private val damped = "(85 * coalesce(in_mass, 0L)) div 100"
+
+  /** Deduplicated (src, dst) edges carrying the source's out-degree
+    * `outdeg` — the uniform-split edge frame of the PageRank variants,
+    * checkpointed once and reused by every round. */
+  private def outDegreeEdges(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).distinct()
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    e.join(deg, "src").localCheckpoint(false)
+  }
+
+  /** ONE propagation round — the shared body of every power-iteration
+    * loop (the PageRank family, [[Behavior.markovStationary]], Katz):
+    * `state` ⋈ `edges` on `src` = `state(keys.head)`, the per-edge
+    * `share` (over the edge and state columns) summed by `dst` and the
+    * remaining `keys` into `in_mass`, left-joined back onto `base` (which
+    * carries every key, so nodes without in-mass survive), and `combine`
+    * (over the `base` columns and `in_mass`) becomes the new state column
+    * `out`. Two joins and one aggregate are the round's whole plan.
+    *
+    * The round ends in the lazy `localCheckpoint(false)` of the header:
+    * this line is where the checkpoint policy of every fixed-iteration
+    * rank loop lives. Extra keys are renamed `m_<key>` on the mass side,
+    * since `base` carries the same names. */
+  private[graft] def propagate(edges: DataFrame, base: DataFrame,
+                               keys: Seq[String], share: Column,
+                               combine: Column, out: String)(
+                               state: DataFrame): DataFrame = {
+    val extra = keys.tail
+    val mass = extra.foldLeft(
+      edges.join(state, edges("src") === state(keys.head))
+        .select(col("dst") +: extra.map(col) :+ share.as("c"): _*)
+        .groupBy(col("dst") +: extra.map(col): _*)
+        .agg(sum(col("c")).as("in_mass")))(
+      (m, k) => m.withColumnRenamed(k, s"m_$k"))
+    val on = extra.foldLeft(base(keys.head) === mass("dst"))(
+      (c, k) => c && base(k) === mass(s"m_$k"))
+    base.join(mass, on, "left")
+      .select(keys.map(base(_)) :+ combine.as(out): _*)
+      .localCheckpoint(false)
+  }
+
+  /** Fixed-iteration driver: `iters` applications of `round` (a
+    * [[propagate]] round) to `init`, with no driver action in between. */
+  private[graft] def propagateFor(iters: Int, init: DataFrame)(
+      round: DataFrame => DataFrame): DataFrame =
+    (1 to iters).foldLeft(init)((s, _) => round(s))
 
   /** Weight-proportional PageRank: each round a node's mass splits over
     * its out-edges as `(pr · w) div Σ_src w` instead of uniformly —
@@ -78,17 +145,9 @@ object Graph {
     val e = edges.select(col("src"), col("dst"), col("w"))
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val ew = e.join(sw, "src").localCheckpoint(false)
-    var pr = nodes.select(col("id"), lit(1000000L).as("pr_e6"))
-    for (_ <- 1 to iters) {
-      val mass = ew.join(pr, ew("src") === pr("id"))
-        .select(col("dst"), expr("(pr_e6 * w) div sw").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      pr = nodes.join(mass, nodes("id") === mass("dst"), "left")
-        .select(nodes("id"),
-          expr("150000L + (85 * coalesce(in_mass, 0L)) div 100").as("pr_e6"))
-        .localCheckpoint(false)
-    }
-    pr
+    propagateFor(iters, nodes.select(col("id"), lit(1000000L).as("pr_e6")))(
+      propagate(ew, nodes, Seq("id"), expr("(pr_e6 * w) div sw"),
+        expr(s"150000L + $damped"), "pr_e6"))
   }
 
   /** Personalized PageRank: teleport mass restarts only at the source set
@@ -105,24 +164,14 @@ object Graph {
   def pageRankPersonalized(nodes: DataFrame, edges: DataFrame,
                            sourceCol: String, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").localCheckpoint(false)
+    val ed = outDegreeEdges(edges)
     val n = nodes.select(col("id"),
       when(col(sourceCol), lit(150000L)).otherwise(lit(0L)).as("base"))
       .localCheckpoint(false)
-    var pr = n.select(col("id"),
-      when(col("base") > 0L, lit(1000000L)).otherwise(lit(0L)).as("pr_e6"))
-    for (_ <- 1 to iters) {
-      val mass = ed.join(pr, ed("src") === pr("id"))
-        .select(col("dst"), expr("pr_e6 div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      pr = n.join(mass, n("id") === mass("dst"), "left")
-        .select(n("id"),
-          expr("base + (85 * coalesce(in_mass, 0L)) div 100").as("pr_e6"))
-        .localCheckpoint(false)
-    }
-    pr
+    propagateFor(iters, n.select(col("id"),
+        when(col("base") > 0L, lit(1000000L)).otherwise(lit(0L)).as("pr_e6")))(
+      propagate(ed, n, Seq("id"),
+        expr("pr_e6 div outdeg"), expr(s"base + $damped"), "pr_e6"))
   }
 
   /** Multi-seed personalized PageRank in ONE pass: computes the PPR of
@@ -142,37 +191,30 @@ object Graph {
   def pageRankMultiSeed(nodes: DataFrame, edges: DataFrame,
                         seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").localCheckpoint(false)
+    val ed = outDegreeEdges(edges)
     val base = nodes.select(col("id"))
       .crossJoin(broadcast(seeds.select(col("seed"))))
       .withColumn("base",
         when(col("id") === col("seed"), lit(150000L)).otherwise(lit(0L)))
       .localCheckpoint(false)
-    var pr = base.select(col("id"), col("seed"),
-      when(col("base") > 0L, lit(1000000L)).otherwise(lit(0L)).as("pr_e6"))
-    for (_ <- 1 to iters) {
-      val mass = ed.join(pr, ed("src") === pr("id"))
-        .select(col("dst"), col("seed"), expr("pr_e6 div outdeg").as("c"))
-        .groupBy(col("dst"), col("seed")).agg(sum(col("c")).as("in_mass"))
-        .withColumnRenamed("seed", "m_seed")
-      pr = base.join(mass,
-          base("id") === mass("dst") && base("seed") === mass("m_seed"), "left")
-        .select(base("id"), base("seed"),
-          expr("base + (85 * coalesce(in_mass, 0L)) div 100").as("pr_e6"))
-        .localCheckpoint(false)
-    }
-    pr
+    propagateFor(iters, base.select(col("id"), col("seed"),
+        when(col("base") > 0L, lit(1000000L)).otherwise(lit(0L)).as("pr_e6")))(
+      propagate(ed, base, Seq("id", "seed"),
+        expr("pr_e6 div outdeg"), expr(s"base + $damped"), "pr_e6"))
   }
 
   /** Personalized PageRank with a WEIGHTED teleport vector: restart mass
     * is distributed over the seed set per `seeds` (columns `seed`,
-    * `w_e6` — e6-scaled weights the caller normalizes to Σ ≈ 1e6), so
-    * "importance relative to this portfolio" instead of each seed
-    * counting equally. Round: pr = (15·w) div 100 + 0.85·incoming, all
-    * truncating integer arithmetic; [[pageRankPersonalized]] is the
-    * uniform-weights special case.
+    * `w_e6` — e6-scaled restart weights, typically normalized so the
+    * seeds' w_e6 sum to ≈ 1e6), so "importance relative to this
+    * portfolio" instead of each seed counting equally. Round:
+    * pr = (15·w) div 100 + 0.85·incoming, all truncating integer
+    * arithmetic; seeds start at pr = w_e6, every other node at 0.
+    * [[pageRankPersonalized]] is the special case w_e6 = 1e6 for EVERY
+    * seed (so k seeds sum to k·1e6, not 1e6): then both the start vector
+    * and the per-node teleport term (15·1e6) div 100 = 150000 match it
+    * exactly, round for round. A normalized vector (w_e6 = 1e6 / k)
+    * scales every rank by ≈ 1/k instead, with different truncation.
     *
     * Same 2-shuffle round as [[pageRank]]; the teleport vector is
     * broadcast onto the node frame ONCE before the loop (seeds are tiny
@@ -181,26 +223,16 @@ object Graph {
   def pageRankWeightedTeleport(nodes: DataFrame, edges: DataFrame,
                                seeds: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, "iters must be in [1, 50]")
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").localCheckpoint(false)
+    val ed = outDegreeEdges(edges)
     val n = nodes.select(col("id"))
       .join(broadcast(seeds.select(col("seed"), col("w_e6"))),
         col("id") === col("seed"), "left")
       .select(col("id"), coalesce(col("w_e6"), lit(0L)).as("v"))
       .withColumn("base", expr("(15 * v) div 100"))
       .localCheckpoint(false)
-    var pr = n.select(col("id"), col("v").as("pr_e6"))
-    for (_ <- 1 to iters) {
-      val mass = ed.join(pr, ed("src") === pr("id"))
-        .select(col("dst"), expr("pr_e6 div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      pr = n.join(mass, n("id") === mass("dst"), "left")
-        .select(n("id"),
-          expr("base + (85 * coalesce(in_mass, 0L)) div 100").as("pr_e6"))
-        .localCheckpoint(false)
-    }
-    pr
+    propagateFor(iters, n.select(col("id"), col("v").as("pr_e6")))(
+      propagate(ed, n, Seq("id"), expr("pr_e6 div outdeg"),
+        expr(s"base + $damped"), "pr_e6"))
   }
 
   /** Minimum-hop BFS distance from a seed set (nodes where `sourceCol` is
@@ -222,12 +254,17 @@ object Graph {
                 maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 64, "maxDepth must be in [1, 64]")
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(false)
-    bfsLevelsPre(nodes, e, sourceCol, maxDepth)
+    frontierBfs(nodes.filter(col(sourceCol)).select(col("id")), e, Seq("id"),
+      maxDepth)
   }
 
-  /** [[bfsLevels]] over an edge frame the CALLER already deduped and
-    * checkpointed — lets multi-sweep callers (double-sweep diameter,
-    * bowtie) pay the edge scan once instead of per sweep.
+  /** The frontier BFS loop behind [[bfsLevels]] and [[multiSourceBfs]],
+    * over an edge frame `e` (`src`, `dst`) the CALLER already deduped
+    * and checkpointed — so multi-sweep callers (double-sweep diameter,
+    * bowtie, betweenness' σ layers) pay the edge scan once instead of
+    * per sweep. `seeds` holds the depth-0 rows as exactly the `keys`
+    * columns, node id last: `Seq("id")` for one BFS, `Seq("seed", "id")`
+    * for one labeled BFS per seed. Output: the keys plus `dist`.
     *
     * Round shape — MEASURED optimal; three r12 alternatives all LOST,
     * recorded here so they are not re-chased:
@@ -274,19 +311,18 @@ object Graph {
     * collapse into 1; the visited union materializes inside the NEXT
     * round's anti-join job. Before/after numbers: OPTIMIZATION_r12.md
     * (plan shape and oracle hashes unchanged). */
-  private[graft] def bfsLevelsPre(nodes: DataFrame, e: DataFrame,
-                                  sourceCol: String, maxDepth: Int): DataFrame = {
-    var dist = nodes.filter(col(sourceCol))
-      .select(col("id"), lit(0L).as("dist")).localCheckpoint(false)
-    var frontier = dist.select(col("id"))
+  private[graft] def frontierBfs(seeds: DataFrame, e: DataFrame,
+                                 keys: Seq[String], maxDepth: Int): DataFrame = {
+    var dist = seeds.withColumn("dist", lit(0L)).localCheckpoint(false)
+    var frontier = dist.select(keys.map(col): _*)
     var depth = 0
     var done = false
     while (depth < maxDepth && !done) {
       depth += 1
       val next = graft.PlanTap.tap(
         frontier.join(e, frontier("id") === e("src"))
-          .select(e("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti"),
+          .select(keys.init.map(col) :+ e("dst").as("id"): _*).distinct()
+          .join(dist, keys, "left_anti"),
         "bfs.round_expansion_pre_checkpoint")
         .localCheckpoint(false)
       if (next.count() == 0L) done = true
@@ -312,8 +348,7 @@ object Graph {
     */
   def commonNeighbors(edges: DataFrame, minCommon: Long): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val wedge = adj.as("l").join(adj.as("r"),
         col("l.v") === col("r.u") && col("l.u") < col("r.v"))
       .select(col("l.u").as("a"), col("r.v").as("b"))
@@ -339,22 +374,16 @@ object Graph {
                         epsE6: Long, maxIters: Int): DataFrame = {
     require(maxIters >= 1 && maxIters <= 100, "maxIters must be in [1, 100]")
     require(epsE6 >= 0L, "epsE6 must be non-negative")
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").localCheckpoint(false)
+    val ed = outDegreeEdges(edges)
     val n = nodes.select(col("id")).localCheckpoint(false)
+    val round = propagate(ed, n, Seq("id"), expr("pr_e6 div outdeg"),
+      expr(s"150000L + $damped"), "pr_e6") _
     var pr = n.select(col("id"), lit(1000000L).as("pr_e6"))
       .localCheckpoint(false)
     var rounds = 0
     var converged = false
     while (rounds < maxIters && !converged) {
-      val mass = ed.join(pr, ed("src") === pr("id"))
-        .select(col("dst"), expr("pr_e6 div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-      val next = n.join(mass, n("id") === mass("dst"), "left")
-        .select(n("id"),
-          expr("150000L + (85 * coalesce(in_mass, 0L)) div 100").as("pr_e6"))
-        .localCheckpoint(false)
+      val next = round(pr)
       rounds += 1
       val delta = next.as("b").join(pr.as("a"), col("a.id") === col("b.id"))
         .agg(sum(abs(col("b.pr_e6") - col("a.pr_e6"))).as("d"))
@@ -378,8 +407,7 @@ object Graph {
     */
   def resourceAllocation(edges: DataFrame, minCommon: Long): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val deg = adj.groupBy(col("u").as("z")).agg(count(lit(1)).as("degz"))
     val wedge = adj.as("l")
       .join(adj.as("r"), col("l.v") === col("r.u") && col("l.u") < col("r.v"))
@@ -405,30 +433,47 @@ object Graph {
     * nothing (one scalar count action per round).
     */
   def shortestPaths(nodes: DataFrame, edges: DataFrame, sourceCol: String,
-                    maxHops: Int): DataFrame = {
+                    maxHops: Int): DataFrame =
+    relaxBounded(nodes, edges, sourceCol, maxHops, "cost", 0L,
+      _ + _, min(_), _ < _)
+
+  /** The bounded relaxation loop of [[shortestPaths]] and [[widestPaths]],
+    * over the path semiring (`extend`, `pick`, `better`): parallel edges
+    * collapse to their `pick`ed weight, sources start at `init`, and
+    * round h sets `v`(dst) = `pick` over `v`(dst) and `extend`(`v`(src),
+    * w) for every edge — so after H rounds `v` is the best value over
+    * paths of ≤ H edges. The round is one join (state ⋈ edges on src) +
+    * one `pick` aggregate by node, checkpoint-truncated; its one driver
+    * action counts the nodes whose value got strictly `better` (or that
+    * are new), and the loop stops early when none did. */
+  private def relaxBounded(nodes: DataFrame, edges: DataFrame,
+                           sourceCol: String, maxHops: Int, v: String,
+                           init: Long, extend: (Column, Column) => Column,
+                           pick: Column => Column,
+                           better: (Column, Column) => Column): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64, "maxHops must be in [1, 64]")
     val e = edges.select(col("src"), col("dst"), col("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
+      .groupBy(col("src"), col("dst")).agg(pick(col("w")).as("w"))
       .localCheckpoint(false)
-    var dist = nodes.filter(col(sourceCol))
-      .select(col("id"), lit(0L).as("cost")).localCheckpoint(false)
+    var best = nodes.filter(col(sourceCol))
+      .select(col("id"), lit(init).as(v)).localCheckpoint(false)
     var hops = 0
     var done = false
     while (hops < maxHops && !done) {
       hops += 1
-      val relaxed = dist.join(e, dist("id") === e("src"))
-        .select(e("dst").as("id"), (col("cost") + col("w")).as("cost"))
-        .unionByName(dist)
-        .groupBy(col("id")).agg(min(col("cost")).as("cost"))
+      val relaxed = best.join(e, best("id") === e("src"))
+        .select(e("dst").as("id"), extend(col(v), col("w")).as(v))
+        .unionByName(best)
+        .groupBy(col("id")).agg(pick(col(v)).as(v))
         .localCheckpoint(false)
-      val improved = relaxed.as("n").join(dist.as("o"),
+      val improved = relaxed.as("n").join(best.as("o"),
           col("n.id") === col("o.id"), "left")
-        .filter(col("o.cost").isNull || col("n.cost") < col("o.cost"))
+        .filter(col(s"o.$v").isNull || better(col(s"n.$v"), col(s"o.$v")))
         .count()
       if (improved == 0L) done = true
-      dist = relaxed
+      best = relaxed
     }
-    dist
+    best
   }
 
   /** k-core of the undirected graph: the maximal subgraph where every
@@ -489,8 +534,7 @@ object Graph {
     */
   def maximalTriangles(edges: DataFrame): DataFrame = {
     val e = canonical(edges).localCheckpoint(false)
-    val adj = e.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(e)
     val tri = e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
       .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
       .join(e.as("e3"),
@@ -518,31 +562,9 @@ object Graph {
     * checkpoint-truncated lineage, early exit when nothing widens.
     */
   def widestPaths(nodes: DataFrame, edges: DataFrame, sourceCol: String,
-                  maxHops: Int): DataFrame = {
-    require(maxHops >= 1 && maxHops <= 64, "maxHops must be in [1, 64]")
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .groupBy(col("src"), col("dst")).agg(max(col("w")).as("w"))
-      .localCheckpoint(false)
-    var cap = nodes.filter(col(sourceCol))
-      .select(col("id"), lit(Long.MaxValue).as("cap")).localCheckpoint(false)
-    var hops = 0
-    var done = false
-    while (hops < maxHops && !done) {
-      hops += 1
-      val relaxed = cap.join(e, cap("id") === e("src"))
-        .select(e("dst").as("id"), least(col("cap"), col("w")).as("cap"))
-        .unionByName(cap)
-        .groupBy(col("id")).agg(max(col("cap")).as("cap"))
-        .localCheckpoint(false)
-      val improved = relaxed.as("n").join(cap.as("o"),
-          col("n.id") === col("o.id"), "left")
-        .filter(col("o.cap").isNull || col("n.cap") > col("o.cap"))
-        .count()
-      if (improved == 0L) done = true
-      cap = relaxed
-    }
-    cap
-  }
+                  maxHops: Int): DataFrame =
+    relaxBounded(nodes, edges, sourceCol, maxHops, "cap", Long.MaxValue,
+      least(_, _), max(_), _ > _)
 
   /** k-truss of the undirected graph: the maximal subgraph where every
     * EDGE sits in at least k−2 triangles (of the truss itself) — the
@@ -561,8 +583,7 @@ object Graph {
     require(k >= 2 && maxRounds >= 1 && maxRounds <= 64,
       "need k >= 2 and maxRounds in [1, 64]")
     def support(e: DataFrame): DataFrame = {
-      val adj = e.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(e.select(col("b").as("u"), col("a").as("v")))
+      val adj = bidirected(e)
       e.join(adj.as("na"), col("a") === col("na.u"))
         .join(adj.as("nb"),
           col("b") === col("nb.u") && col("na.v") === col("nb.v"))
@@ -729,8 +750,7 @@ object Graph {
     * pre-joined onto the pivot side. */
   def adamicAdar(edges: DataFrame, minCommon: Long): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val deg = adj.groupBy(col("u").as("z")).agg(count(lit(1)).as("degz"))
     val wedge = adj.as("l")
       .join(adj.as("r"), col("l.v") === col("r.u") && col("l.u") < col("r.v"))
@@ -756,8 +776,7 @@ object Graph {
     * canonical edge list) — all keyed shuffles, no all-pairs. */
   def localClustering(edges: DataFrame): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val deg = adj.groupBy(col("u").as("id")).agg(count(lit(1)).as("degree"))
     val tri = adj.as("l")
       .join(adj.as("r"), col("l.u") === col("r.u") && col("l.v") < col("r.v"))
@@ -781,8 +800,7 @@ object Graph {
     * determinism recipe). Output one row: (n_dir, r). */
   def assortativity(edges: DataFrame): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
     adj.join(deg, "u")
       .join(deg.select(col("u").as("v"), col("d").as("dv")), "v")
@@ -818,10 +836,7 @@ object Graph {
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
                        iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, "iters must be in [1, 20]")
-    val und = canonical(edges)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(false)
+    val adj = bidirected(canonical(edges)).localCheckpoint(false)
     val n = nodes.select(col("id")).distinct().localCheckpoint(false)
     var lbl = n.select(col("id"), col("id").as("label"))
     for (_ <- 1 to iters) {
@@ -893,8 +908,7 @@ object Graph {
     val verdicts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
     while (round < maxRounds && rem.count() > 0L) {
-      val adj = rem.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(rem.select(col("b").as("u"), col("a").as("v")))
+      val adj = bidirected(rem)
       val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
       // leaves; when BOTH endpoints are leaves (a 2-vertex tree) only the
       // smaller id acts, so the edge is pruned exactly once
@@ -935,30 +949,8 @@ object Graph {
                      maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 64, "maxDepth must be in [1, 64]")
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(false)
-    // Same measured-optimal round shape as [[bfsLevelsPre]] (see the
-    // negative results AND the r12 lazy-checkpoint refinement recorded
-    // there: one count() gate per round is the only driver sync), keyed
-    // (seed, id).
-    var dist = nodes.filter(col(seedCol))
-      .select(col("id").as("seed"), col("id"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var frontier = dist.select(col("seed"), col("id"))
-    var depth = 0
-    var done = false
-    while (depth < maxDepth && !done) {
-      depth += 1
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(col("seed"), e("dst").as("id")).distinct()
-        .join(dist, Seq("seed", "id"), "left_anti")
-        .localCheckpoint(false)
-      if (next.count() == 0L) done = true
-      else {
-        dist = dist.unionByName(next.withColumn("dist", lit(depth.toLong)))
-          .localCheckpoint(false)
-        frontier = next
-      }
-    }
-    dist
+    frontierBfs(nodes.filter(col(seedCol)).select(col("id").as("seed"), col("id")),
+      e, Seq("seed", "id"), maxDepth)
   }
 
   /** Closeness centrality of the seed nodes over their reachable sets:
@@ -998,9 +990,7 @@ object Graph {
     * (a, b, deg_a, deg_b, common, j_e6). */
   def neighborJaccard(edges: DataFrame): DataFrame = {
     val und = canonical(edges).localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(false)
+    val adj = bidirected(und).localCheckpoint(false)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val common = und
       .join(adj.select(col("u").as("a"), col("v").as("w")), Seq("a"))
@@ -1040,14 +1030,16 @@ object Graph {
     require(maxDepth >= 1 && maxDepth <= 64, "maxDepth must be in [1, 64]")
     // Dedup + checkpoint the edges ONCE — both sweeps reuse the frame.
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(false)
-    val d0 = bfsLevelsPre(nodes, e, rootCol, maxDepth)
+    val d0 = frontierBfs(nodes.filter(col(rootCol)).select(col("id")), e,
+      Seq("id"), maxDepth)
     val far = d0
       .agg(max(struct(col("dist"), (-col("id")).as("ni"))).as("f"))
       .select((-col("f.ni")).as("u"), col("f.dist").as("ecc_root"))
       .localCheckpoint(false)
     val seeded = nodes.crossJoin(broadcast(far))
       .withColumn("is_far", col("id") === col("u"))
-    bfsLevelsPre(seeded, e, "is_far", maxDepth)
+    frontierBfs(seeded.filter(col("is_far")).select(col("id")), e,
+      Seq("id"), maxDepth)
       .agg(max(col("dist")).as("diameter_lb"), count(lit(1)).as("n_reached"))
       .crossJoin(broadcast(far))
       .select(col("u"), col("ecc_root"), col("diameter_lb"), col("n_reached"))
@@ -1057,7 +1049,8 @@ object Graph {
     * pair-dependency identity: bc(v) = Σ_{s≠v≠t} σ_sv·σ_vt·10⁶ div σ_st
     * over ordered pairs with dist(s,v) + dist(v,t) = dist(s,t).
     * Three stages, all joins on node ids:
-    *   1. [[multiSourceBfs]] from EVERY node (one labeled frontier);
+    *   1. the labeled [[multiSourceBfs]] frontier from EVERY node, over
+    *      the same deduped edge frame the σ layers reuse;
     *   2. shortest-path COUNTS σ by layered accumulation — layer d sums
     *      predecessor σ over edges from layer d−1, exactly Brandes'
     *      forward pass, one join per BFS round;
@@ -1081,11 +1074,13 @@ object Graph {
     * bc is the ordered-pair result halved. Output: (v, bc_e6). */
   def betweenness(nodes: DataFrame, edges: DataFrame,
                   maxDepth: Int, seedCol: Option[String] = None): DataFrame = {
-    val seeded = seedCol.fold(nodes.withColumn("every_node", lit(true)))(
-      c => nodes.withColumn("every_node", col(c)))
-    val dist = multiSourceBfs(seeded, edges, "every_node", maxDepth)
-      .localCheckpoint(false) // reused by every layer filter below
+    require(maxDepth >= 1 && maxDepth <= 64, "maxDepth must be in [1, 64]")
+    // Dedup + checkpoint the edges ONCE — the BFS and the σ layers share it.
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(false)
+    val seeds = seedCol.fold(nodes)(c => nodes.filter(col(c)))
+      .select(col("id").as("seed"), col("id"))
+    val dist = frontierBfs(seeds, e, Seq("seed", "id"), maxDepth)
+      .localCheckpoint(false) // reused by every layer filter below
     var front = dist.filter(col("dist") === 0L)
       .select(col("seed"), col("id"), lit(1L).as("sig"))
       .localCheckpoint(false)
@@ -1230,8 +1225,7 @@ object Graph {
     * Output: (a, b, n_common, jac_e6). */
   def edgeJaccard(edges: DataFrame): DataFrame = {
     val und = edges.select(col("a"), col("b")).distinct().localCheckpoint(false)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(und)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
     val common = adj.select(col("u").as("p"), col("v").as("x"))
       .join(adj.select(col("u").as("p"), col("v").as("y")), Seq("p"))
@@ -1262,9 +1256,7 @@ object Graph {
     * dimension. */
   def deepwalkVisits(edges: DataFrame, steps: Int): DataFrame = {
     require(steps >= 1 && steps <= 64)
-    val und = canonical(edges)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(canonical(edges))
     val ranked = adj
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("u")).orderBy(col("v"))))
@@ -1298,10 +1290,7 @@ object Graph {
     * mean aggregate — the canonical message-passing shape; k hops cost
     * k joins, never materializing multi-hop neighborhoods. */
   def gnnAggregate(edges: DataFrame, feats: DataFrame): DataFrame = {
-    val und = canonical(edges)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(false)
+    val adj = bidirected(canonical(edges)).localCheckpoint(false)
     val h1 = adj.join(feats.select(col("id").as("v"), col("x")), "v")
       .groupBy(col("u").as("id"))
       .agg(count(lit(1)).as("deg"), sum(col("x")).as("sx"))
@@ -1332,10 +1321,7 @@ object Graph {
   def lubyMis(nodes: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 32)
     val und0 = nodes.select(col("id")).distinct()
-    val cedges = canonical(edges)
-    val adj = cedges.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(cedges.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(false)
+    val adj = bidirected(canonical(edges)).localCheckpoint(false)
     var und = und0.localCheckpoint(false)
     var decided = und0.sparkSession.emptyDataFrame
     var haveDecided = false
@@ -1386,10 +1372,7 @@ object Graph {
       when(expr(s"mask div ${1L << b} % 2") === 0, lit(b.toLong))
         .otherwise(acc)
     }
-    val cedges = canonical(edges)
-    val adj = cedges.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(cedges.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(false)
+    val adj = bidirected(canonical(edges)).localCheckpoint(false)
     val pri0 = nodes.select(col("id")).distinct()
       .withColumn("p", Dedup.hash48(col("id").cast("string"), lit("jp")))
       .localCheckpoint(false)
@@ -1439,9 +1422,7 @@ object Graph {
     * (labels join on node keys); the epilogue is scalar. */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val und = canonical(edges)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
+    val adj = bidirected(canonical(edges))
     val lab = labels.select(col("id"), col("label"))
     val j = adj
       .join(lab.select(col("id").as("u"), col("label").as("lu")), "u")

@@ -201,6 +201,18 @@ object Similarity {
   private def sdiv(v: String, d: String): String =
     s"(CASE WHEN ($v) >= 0 THEN ($v) div ($d) ELSE -((-($v)) div ($d)) END)"
 
+  /** The upper-triangle [[gramMatrix]] output mirrored to the full
+    * symmetric matrix and row-scaled to covariance: (i, j, g) with
+    * g = g_e12 div n_rows, checkpointed for reuse. */
+  private def scaledGram(gram: DataFrame): DataFrame = {
+    val g0 = gram.localCheckpoint(false)
+    val sym = g0.select(col("i"), col("j"), col("g_e12"), col("n_rows"))
+      .unionByName(g0.filter(col("i") =!= col("j"))
+        .select(col("j").as("i"), col("i").as("j"), col("g_e12"), col("n_rows")))
+    sym.select(col("i"), col("j"), expr(sdiv("g_e12", "n_rows")).as("g"))
+      .localCheckpoint(false)
+  }
+
   /** Top-eigenvector estimate of the [[gramMatrix]] output by `iters`
     * rounds of power iteration, entirely in integers: the matrix is
     * row-scaled to per-row covariance (g div n_rows), the vector lives
@@ -211,15 +223,8 @@ object Similarity {
     * data pass. Output: (i, x_e4). */
   def powerIteration(gram: DataFrame, dims: Int, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8, "iters in [1, 8]")
-    val spark = gram.sparkSession
-    val g0 = gram.localCheckpoint(false)
-    val sym = g0.select(col("i"), col("j"), col("g_e12"), col("n_rows"))
-      .unionByName(g0.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("g_e12"), col("n_rows")))
-    val gsc = sym.select(col("i"), col("j"),
-        expr(sdiv("g_e12", "n_rows")).as("g"))
-      .localCheckpoint(false)
-    var x = spark.range(dims).select(col("id").as("j"), lit(10000L).as("x"))
+    val gsc = scaledGram(gram)
+    var x = gram.sparkSession.range(dims).select(col("id").as("j"), lit(10000L).as("x"))
     for (_ <- 1 to iters) {
       val y = gsc.join(x, Seq("j"))
         .groupBy(col("i")).agg(sum(col("g") * col("x")).as("y"))
@@ -252,15 +257,7 @@ object Similarity {
                              iters: Int): DataFrame = {
     val dec = "decimal(38,0)"
     val x1 = powerIteration(gram, dims, iters).localCheckpoint(false)
-    // same scaled symmetric covariance powerIteration builds internally
-    val g0 = gram.localCheckpoint(false)
-    val sym = g0.select(col("i"), col("j"), col("g_e12"), col("n_rows"))
-      .unionByName(g0.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("g_e12"),
-          col("n_rows")))
-    val gsc = sym.select(col("i"), col("j"),
-        expr(sdiv("g_e12", "n_rows")).as("g"))
-      .localCheckpoint(false)
+    val gsc = scaledGram(gram)
     val xx = x1.agg(sum(col("x_e4") * col("x_e4")).as("xx"))
     val gx = gsc.join(x1.select(col("i").as("j"), col("x_e4").as("xj")), "j")
       .groupBy(col("i")).agg(sum(col("g") * col("xj")).as("gx"))

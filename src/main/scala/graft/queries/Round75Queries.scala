@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.ops.Bm25
+import graft.ops.{Bm25, Graph}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -72,16 +72,10 @@ object Round75Queries {
           .localCheckpoint(false) // reused by all 3 rounds
         val nodes = e.select(col("src").as("id"))
           .union(e.select(col("dst").as("id"))).distinct()
-        var x = nodes.withColumn("x", lit(1000000L))
-        for (_ <- 1 to 3) {
-          val in = e.join(x.select(col("id").as("src"), col("x")), "src")
-            .groupBy(col("dst").as("id")).agg(sum(col("x")).as("sx"))
-          x = nodes.join(in, Seq("id"), "left")
-            .select(col("id"),
-              (lit(1000000L) + expr("coalesce(sx, 0L) div 10")).as("x"))
-            .localCheckpoint(false)
-        }
-        x.select(col("id"), col("x").as("katz_e6"))
+        Graph.propagateFor(3, nodes.withColumn("x", lit(1000000L)))(
+          Graph.propagate(e, nodes, Seq("id"), col("x"),
+            expr("1000000L + coalesce(in_mass, 0L) div 10"), "x"))
+          .select(col("id"), col("x").as("katz_e6"))
       },
       Some {
         def round(k: Int) =
