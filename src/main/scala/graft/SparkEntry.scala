@@ -8,96 +8,34 @@ case class QueryDef(name: String,
                     fn: (SparkSession, String) => DataFrame,
                     oracle: Option[String])
 
-/** Registry of every implemented operator query (SURVEY.md §2 coverage). */
+/** A topic catalog of registry queries: one object per topic under
+  * `graft.queries`, listed once in [[Registry.catalogs]]. */
+trait QueryCatalog {
+  def defs: Seq[QueryDef]
+
+  /** The catalog's heading in QUERIES.md. */
+  def name: String = getClass.getSimpleName.stripSuffix("$")
+}
+
+/** Registry of every implemented operator query, derived from the topic
+  * catalogs. */
 object Registry {
-  def all: Seq[QueryDef] =
-    queries.CoreQueries.defs ++ queries.RelationalQueries.defs ++
-      queries.DedupQueries.defs ++ queries.SimilarityQueries.defs ++
-      queries.TextQueries.defs ++ queries.ExtensionQueries.defs ++
-      queries.WindowingQueries.defs ++ queries.CurationQueries.defs ++
-      queries.Round3Queries.defs ++ queries.BehaviorQueries.defs ++
-      queries.Round6Queries.defs ++ queries.Round7Queries.defs ++
-      queries.Round7bQueries.defs ++ queries.Round8Queries.defs ++
-      queries.Round9Queries.defs ++ queries.Round10Queries.defs ++
-      queries.Round11Queries.defs ++ queries.Round12Queries.defs ++
-      queries.Round13Queries.defs ++ queries.Round14Queries.defs ++
-      queries.Round15Queries.defs ++ queries.Round16Queries.defs ++
-      queries.Round17Queries.defs ++ queries.Round18Queries.defs ++
-      queries.Round19Queries.defs ++ queries.Round20Queries.defs ++
-      queries.Round21Queries.defs ++ queries.Round22Queries.defs ++
-      queries.Round23Queries.defs ++ queries.Round24Queries.defs ++
-      queries.Round25Queries.defs ++ queries.Round26Queries.defs ++
-      queries.Round27Queries.defs ++ queries.Round28Queries.defs ++
-      queries.Round29Queries.defs ++ queries.Round30Queries.defs ++
-      queries.Round31Queries.defs ++ queries.Round32Queries.defs ++
-      queries.Round33Queries.defs ++ queries.Round34Queries.defs ++
-      queries.Round35Queries.defs ++ queries.Round36Queries.defs ++
-      queries.Round37Queries.defs ++ queries.Round38Queries.defs ++
-      queries.Round39Queries.defs ++ queries.Round40Queries.defs ++
-      queries.Round41Queries.defs ++ queries.Round42Queries.defs ++
-      queries.Round43Queries.defs ++ queries.Round44Queries.defs ++
-      queries.Round45Queries.defs ++ queries.Round46Queries.defs ++
-      queries.Round47Queries.defs ++ queries.Round48Queries.defs ++
-      queries.Round49Queries.defs ++ queries.Round50Queries.defs ++
-      queries.Round51Queries.defs ++ queries.Round52Queries.defs ++
-      queries.Round53Queries.defs ++ queries.Round54Queries.defs ++
-      queries.Round55Queries.defs ++ queries.Round56Queries.defs ++
-      queries.Round57Queries.defs ++ queries.Round58Queries.defs ++
-      queries.Round59Queries.defs ++ queries.Round60Queries.defs ++
-      queries.Round61Queries.defs ++ queries.Round62Queries.defs ++ queries.Round63Queries.defs ++ queries.Round64Queries.defs ++ queries.Round65Queries.defs ++ queries.Round66Queries.defs ++ queries.Round67Queries.defs ++ queries.Round68Queries.defs ++ queries.Round69Queries.defs ++ queries.Round70Queries.defs ++ queries.Round71Queries.defs ++ queries.Round72Queries.defs ++ queries.Round73Queries.defs ++ queries.Round74Queries.defs ++ queries.Round75Queries.defs ++ queries.Round76Queries.defs ++ queries.Round77Queries.defs ++ queries.Round78Queries.defs ++ queries.Round79Queries.defs ++ queries.Round80Queries.defs ++ queries.Round81Queries.defs ++ queries.Round82Queries.defs ++ queries.Round83Queries.defs ++ queries.Round84Queries.defs ++ queries.Round85Queries.defs ++ queries.Round86Queries.defs ++ queries.Round87Queries.defs ++ queries.Round88Queries.defs ++ queries.Round89Queries.defs ++ queries.Round90Queries.defs ++ queries.Round91Queries.defs ++ queries.Round92Queries.defs ++
-      queries.Round93Queries.defs ++ queries.Round94Queries.defs ++
-      queries.Round95Queries.defs ++ queries.Round96Queries.defs ++
-      queries.Round97Queries.defs ++ queries.Round98Queries.defs ++
-      queries.Round99Queries.defs ++ queries.Round100Queries.defs ++
-      queries.Round101Queries.defs ++ queries.Round102Queries.defs ++
-      queries.Round103Queries.defs ++ queries.Round104Queries.defs ++
-      queries.Round105Queries.defs ++ queries.Round106Queries.defs ++
-      queries.Round107Queries.defs ++ queries.Round108Queries.defs ++
-      queries.Round109Queries.defs ++ queries.Round110Queries.defs ++
-      queries.Round111Queries.defs ++ queries.Round112Queries.defs ++
-      queries.Round113Queries.defs ++ queries.Round114Queries.defs ++
-      queries.Round115Queries.defs ++ queries.Round116Queries.defs ++
-      queries.Round117Queries.defs ++ queries.Round118Queries.defs ++
-      queries.Round119Queries.defs ++ queries.Round120Queries.defs ++
-      queries.Round121Queries.defs ++ queries.Round122Queries.defs ++
-      queries.Round123Queries.defs ++ queries.Round124Queries.defs ++
-      queries.Round125Queries.defs ++ queries.Round126Queries.defs ++
-      queries.Round127Queries.defs ++ queries.Round128Queries.defs ++
-      queries.Round129Queries.defs ++ queries.Round130Queries.defs ++
-      queries.Round131Queries.defs ++ queries.Round132Queries.defs ++
-      queries.Round133Queries.defs ++ queries.Round134Queries.defs ++
-      queries.Round135Queries.defs ++ queries.Round136Queries.defs ++
-      queries.Round137Queries.defs ++ queries.Round138Queries.defs ++
-      queries.Round139Queries.defs ++ queries.Round140Queries.defs ++
-      queries.Round141Queries.defs ++ queries.Round142Queries.defs ++
-      queries.Round143Queries.defs ++ queries.Round144Queries.defs ++
-      queries.Round145Queries.defs ++ queries.Round146Queries.defs ++
-      queries.Round147Queries.defs ++ queries.Round148Queries.defs ++
-      queries.Round149Queries.defs ++ queries.Round150Queries.defs ++
-      queries.Round151Queries.defs ++ queries.Round152Queries.defs ++
-      queries.Round153Queries.defs ++ queries.Round154Queries.defs ++
-      queries.Round155Queries.defs ++ queries.Round156Queries.defs ++
-      queries.Round157Queries.defs ++ queries.Round158Queries.defs ++
-      queries.Round159Queries.defs ++ queries.Round160Queries.defs ++
-      queries.Round161Queries.defs ++ queries.Round162Queries.defs ++
-      queries.Round163Queries.defs ++ queries.Round164Queries.defs ++
-      queries.Round165Queries.defs ++ queries.Round166Queries.defs ++
-      queries.Round167Queries.defs ++ queries.Round168Queries.defs ++
-      queries.Round169Queries.defs ++ queries.Round170Queries.defs ++
-      queries.Round171Queries.defs ++ queries.Round172Queries.defs ++
-      queries.Round173Queries.defs ++ queries.Round174Queries.defs ++
-      queries.Round175Queries.defs ++ queries.Round176Queries.defs ++
-      queries.Round177Queries.defs ++ queries.Round178Queries.defs ++
-      queries.Round179Queries.defs ++ queries.Round180Queries.defs ++
-      queries.Round181Queries.defs ++ queries.Round182Queries.defs ++
-      queries.Round183Queries.defs ++ queries.Round184Queries.defs ++
-      queries.Round185Queries.defs ++ queries.Round186Queries.defs ++
-      queries.Round187Queries.defs ++ queries.Round188Queries.defs ++
-      queries.Round189Queries.defs ++ queries.Round190Queries.defs ++
-      queries.Round191Queries.defs ++ queries.Round192Queries.defs ++
-      queries.Round193Queries.defs ++ queries.Round194Queries.defs ++
-      queries.Round195Queries.defs ++ queries.Round196Queries.defs ++
-      queries.Round197Queries.defs ++ queries.Round198Queries.defs
+  import queries._
+
+  val catalogs: Seq[QueryCatalog] = Seq(
+    CoreQueries, MobilityQueries, SpatialQueries, BehaviorQueries,
+    CustomerQueries, RelationalQueries, TpchQueries, LayoutQueries,
+    SupplyChainQueries, PricingQueries, GraphCentralityQueries,
+    GraphStructureQueries, GraphCommunityQueries, DedupQueries,
+    SimilarityQueries, ClusteringQueries, TextQueries, CorpusStatsQueries,
+    RetrievalQueries, CurationQueries, AuditQueries, ModelQueries,
+    ModelEvalQueries, RegressionQueries, TwoSampleQueries, RankTestQueries,
+    AssociationQueries, InequalityQueries, DivergenceQueries,
+    AgreementQueries, SpcQueries, ForecastQueries, TimeSeriesQueries,
+    SeriesShapeQueries, ExtremesQueries, SurvivalQueries, CausalQueries,
+    ExperimentQueries, SketchQueries, DescriptiveQueries)
+
+  def all: Seq[QueryDef] = catalogs.flatMap(_.defs)
 }
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */

@@ -12,21 +12,25 @@ import org.apache.spark.sql.functions._
   *
   * == Lazy-checkpoint trade-off (all iterative loops in this file) ==
   * Every loop round ends in `localCheckpoint(eager = false)`: the logical
-  * plan flattens to a LogicalRDD leaf immediately, but materialization
-  * defers into the next driver action. Convergence-gated loops (BFS, CC,
-  * dagLongestPath, …) still materialize every round through their
-  * per-round count/sum gate, so their peak footprint is one round frame
-  * plus the accumulated result. FIXED-iteration loops with no per-round
-  * action (the PageRank family, [[Behavior.markovStationary]], Katz,
+  * plan flattens to a LogicalRDD leaf immediately. "Lazy" covers only the
+  * round's final stage. Creating the checkpoint executes the round's
+  * physical plan, and under AQE that runs every shuffle and broadcast
+  * stage of the round as Spark jobs right there, inside the loop; only
+  * the last stage (the partitions of the persisted RDD) waits for the
+  * next driver action. Convergence-gated loops (BFS, CC, dagLongestPath,
+  * …) also run their per-round count/sum gate. FIXED-iteration loops with
+  * no gate (the PageRank family, [[Behavior.markovStationary]], Katz,
   * hits, labelPropagation, lubyMis, jonesPlassmann, deepwalkVisits,
-  * Similarity.powerIteration) run with NO driver action inside the loop —
-  * the caller's FIRST action computes the whole iters-deep persisted-RDD
-  * chain in one job. Two costs on a cluster, accepted deliberately: (a)
-  * peak storage memory briefly pins every round's frame at once (the
-  * ContextCleaner unpersists superseded rounds only after their
-  * references drop); (b) localCheckpoint truncates lineage, so losing an
-  * executor mid-chain is unrecoverable — the job fails and restarts, it
-  * does not recompute. Deployments that prefer the eager per-round
+  * Similarity.powerIteration) therefore still pay at least one job per
+  * round while the query is being built: q_pagerank runs 21 jobs while
+  * its 20-round loop is constructed and 1 in the caller's action (22 in
+  * all at sf0.01). What the lazy form saves is the separate
+  * materialization job of each round's output. Two costs on a cluster,
+  * accepted deliberately: (a) peak storage memory briefly pins several
+  * rounds' frames at once (the ContextCleaner unpersists superseded
+  * rounds only after their references drop); (b) localCheckpoint
+  * truncates lineage, so losing an executor mid-chain is unrecoverable —
+  * the job fails and restarts, it does not recompute. Deployments that prefer the eager per-round
   * profile (smaller peak, one driver round trip per iteration) or durable
   * recovery should swap `localCheckpoint(false)` → `(true)` /
   * `checkpoint()`; at bench scale lazy measured 15-30 % fewer jobs per
@@ -71,9 +75,11 @@ object Graph {
     * callers that care should pre-add self-loops.
     *
     * Scale: per round, one join (ranks ⋈ edges on src) and one aggregate
-    * (sum by dst) — the canonical 2-shuffle distributed PageRank
-    * ([[propagate]]). Edges with out-degree are checkpointed once and
-    * reused every round; `localCheckpoint` truncates the growing lineage
+    * (sum by dst), the distributed PageRank round of [[propagate]]: on a
+    * small graph at default settings it plans 1 shuffle + 2 broadcasts,
+    * and 4 shuffles with broadcast joins off (GraphRoundGateSpec). Edges
+    * with out-degree are checkpointed once and reused every round;
+    * `localCheckpoint` truncates the growing lineage
     * so round N's plan does not replay rounds 1..N-1 (on a cluster this
     * would be `checkpoint` to reliable storage). Rank state stays
     * partitioned by id; AQE coalesces the tiny per-round aggregates.
@@ -135,7 +141,7 @@ object Graph {
 
   /** Weight-proportional PageRank: each round a node's mass splits over
     * its out-edges as `(pr · w) div Σ_src w` instead of uniformly —
-    * same 2-shuffle round shape, same all-integer e6 exactness.
+    * the same round shape as [[pageRank]], same all-integer e6 exactness.
     * [[pageRank]] is the w ≡ 1 special case. Edges must carry positive
     * integer `w`; duplicate (src, dst) edges are NOT collapsed (their
     * weights both count, matching a multigraph). */
@@ -158,7 +164,7 @@ object Graph {
     * hold rank only while mass flows to them, so sinks far from the seeds
     * decay to 0 — exactly the PPR locality property.
     *
-    * Same 2-shuffle round shape as [[pageRankWeighted]]; the per-node base
+    * Same round shape as [[pageRankWeighted]]; the per-node base
     * term rides the node frame (no extra join).
     */
   def pageRankPersonalized(nodes: DataFrame, edges: DataFrame,
@@ -216,7 +222,7 @@ object Graph {
     * exactly, round for round. A normalized vector (w_e6 = 1e6 / k)
     * scales every rank by ≈ 1/k instead, with different truncation.
     *
-    * Same 2-shuffle round as [[pageRank]]; the teleport vector is
+    * Same round shape as [[pageRank]]; the teleport vector is
     * broadcast onto the node frame ONCE before the loop (seeds are tiny
     * by definition — a dashboard's portfolio, not a table).
     */
@@ -428,7 +434,7 @@ object Graph {
     * the negative-cycle worry: weights must be positive integers).
     *
     * Scale: per round one join (dist ⋈ edges on src) + one min-aggregate
-    * by node — the same 2-shuffle round as [[pageRank]], with
+    * by node — the same round shape as [[pageRank]], with
     * checkpoint-truncated lineage. Early exit when a round improves
     * nothing (one scalar count action per round).
     */
@@ -558,7 +564,7 @@ object Graph {
     * throughput to each node". The relax step swaps [[shortestPaths]]'
     * (min, +) semiring for (max, min): cap′(v) = max(cap(v),
     * max over in-edges min(cap(src), w)); seeds start at Long.MaxValue
-    * (unconstrained until an edge bounds them). Same 2-shuffle round,
+    * (unconstrained until an edge bounds them). Same round shape,
     * checkpoint-truncated lineage, early exit when nothing widens.
     */
   def widestPaths(nodes: DataFrame, edges: DataFrame, sourceCol: String,
@@ -636,8 +642,9 @@ object Graph {
     * authority (resp. hub) 0.
     *
     * Scale: each half-round is one join (scores ⋈ edges) + one keyed
-    * aggregate + a broadcast of the scalar max — the same 2-shuffle
-    * round shape as [[pageRank]], with checkpoint-truncated lineage.
+    * aggregate + a broadcast of the scalar max — the join + aggregate
+    * round of [[pageRank]] plus that broadcast, with checkpoint-truncated
+    * lineage.
     * Raw sums are ≤ maxdeg·1e6 and the rescale multiplies by 1e6, so
     * values stay ≤ ~1e15 — inside long for any feasible degree. */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * open/close use min_by/max_by over the UNIQUE (ts, tick_id) struct
   * order: within one engine that is deterministic (no engine-arbitrary
   * tie the verify recipe warns about, because the key is total). The
-  * batch twin `q_ohlc_candles` (Round157Queries) re-expresses the same
-  * semantics with rank windows and carries the DuckDB oracle row.
+  * batch twin `q_ohlc_candles` ([[graft.queries.CoreQueries]])
+  * re-expresses the same semantics with rank windows and carries the
+  * DuckDB oracle row.
   *
   * Reference anchor: the reference's tumbling tile aggregation
   * (heatmap_stream.py:105-125) is the same windowed-agg shape with

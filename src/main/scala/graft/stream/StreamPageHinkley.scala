@@ -4,9 +4,9 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Page–Hinkley mean-shift detector — the stateful twin of
-  * the batch `q_page_hinkley` prefix-sum unroll (Round100Queries). The
-  * batch form sees the whole series and expresses the recursion as
-  * three window passes; online, the recursion is O(1) state per key —
+  * the batch `q_page_hinkley` prefix-sum unroll
+  * ([[graft.queries.SpcQueries]]). The batch form sees the whole series
+  * and expresses the recursion as three window passes; online, the recursion is O(1) state per key —
   * four longs (count, value prefix-sum, PH cumulative sum, its running
   * minimum) — so billions of keys fit the state store and each event
   * costs constant work.

@@ -42,6 +42,27 @@ class QueriesIndexSpec extends AnyFunSuite {
         dupes.mkString(", "))
   }
 
+  /** `## <Catalog>` heading → names of the query bullets under it. */
+  private lazy val sections: Map[String, Set[String]] = {
+    val heading = "^## (\\S+)\\s*$".r
+    val entry = "^- `(q_[a-z0-9_]+)`.*".r
+    indexText.split("\n").foldLeft(("", Map.empty[String, Set[String]])) {
+      case ((_, acc), heading(h)) => (h, acc + (h -> acc.getOrElse(h, Set.empty)))
+      case ((h, acc), entry(q)) => (h, acc + (h -> (acc.getOrElse(h, Set.empty) + q)))
+      case (state, _) => state
+    }._2
+  }
+
+  test("every query is listed under the heading of the catalog that defines it") {
+    val misplaced = for {
+      c <- Registry.catalogs
+      q <- c.defs if !sections.getOrElse(c.name, Set.empty).contains(q.name)
+    } yield s"${q.name} (defined in ${c.name})"
+    assert(misplaced.isEmpty,
+      s"QUERIES.md lists ${misplaced.size} queries outside their catalog's " +
+        "## heading: " + misplaced.mkString(", "))
+  }
+
   test("the headline count in QUERIES.md matches the registry size") {
     val n = SparkEntry.queries.size
     assert(indexText.contains(s"$n oracle-checked queries"),
