@@ -35,7 +35,7 @@ object Registry {
     SeriesShapeQueries, ExtremesQueries, SurvivalQueries, CausalQueries,
     ExperimentQueries, SketchQueries, DescriptiveQueries)
 
-  def all: Seq[QueryDef] = catalogs.flatMap(_.defs)
+  lazy val all: Seq[QueryDef] = catalogs.flatMap(_.defs)
 }
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -44,12 +44,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_pipeline_tiles")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2; built once. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     Registry.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

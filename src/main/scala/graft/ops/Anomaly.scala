@@ -30,7 +30,6 @@ object Anomaly {
     val stats = cents.groupBy(col(grpCol))
       .agg(count(lit(1)).as("n"), sum(col("x_c")).as("s"),
         sum(col("x_c") * col("x_c")).as("q"))
-    val dec = "decimal(38,0)"
     val lhs = (col("n") * col("x_c") - col("s")).cast(dec)
     val rhs = (col("n").cast(dec) * col("q").cast(dec)
       - col("s").cast(dec) * col("s").cast(dec)) * lit(z * z)

@@ -121,7 +121,6 @@ object Curation {
     * axis then self-aggregates, totals broadcast. */
   def mixReweight(df: DataFrame, nBuckets: Int): DataFrame = {
     require(nBuckets >= 2)
-    val dec = "decimal(38,0)"
     val buckets = df.groupBy(col("bucket")).agg(count(lit(1)).as("c"))
       .localCheckpoint(false) // bucket axis: ≤ nBuckets rows; ONE scan
     val tot = buckets.agg(sum(col("c")).as("n"))

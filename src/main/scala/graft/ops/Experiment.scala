@@ -33,7 +33,6 @@ object Experiment {
       sum(when(v === 0, c).otherwise(lit(0L))).as("conv_a"),
       sum(when(v === 1, 1L).otherwise(0L)).as("n_b"),
       sum(when(v === 1, c).otherwise(lit(0L))).as("conv_b"))
-    val dec = "decimal(38,0)"
     val n = (col("n_a") + col("n_b")).cast(dec)
     val cc = (col("conv_a") + col("conv_b")).cast(dec)
     val diff = (col("conv_a").cast(dec) * col("n_b").cast(dec)
@@ -112,7 +111,6 @@ object Experiment {
   def cuped(units: DataFrame, variantCol: String, xCol: String,
             yCol: String): DataFrame = {
     val v = col(variantCol)
-    val dec = "decimal(38,0)"
     val x = col(xCol).cast(dec)
     val y = col(yCol).cast(dec)
     units.agg(
@@ -242,7 +240,6 @@ object Experiment {
     * Scale: ONE segment-keyed moment aggregate off the raw scan;
     * everything after is per-segment scalar arithmetic. */
   def mde(df: DataFrame, segCol: String, centsCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     df.select(col(segCol).as("seg"), col(centsCol).cast(dec).as("v"))
       .groupBy(col("seg"))
       .agg(count(lit(1)).cast(dec).as("n"), sum(col("v")).as("s"),
@@ -279,7 +276,6 @@ object Experiment {
     * data volume) — at 100 TB the window input is unchanged. */
   def chebyshevBh(df: DataFrame, keyCols: Seq[String],
                   valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val t = df.select(keyCols.map(col) :+ col(valueCol).cast(dec).as("v"): _*)
     val cells = t.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).cast(dec).as("ng"), sum(col("v")).as("sg"))

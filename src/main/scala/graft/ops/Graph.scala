@@ -1428,7 +1428,6 @@ object Graph {
     * Scale: two label-keyed aggregates off one adjacency⋈labels join
     * (labels join on node keys); the epilogue is scalar. */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val adj = bidirected(canonical(edges))
     val lab = labels.select(col("id"), col("label"))
     val j = adj

@@ -83,7 +83,6 @@ object Mobility {
     * then a second keyed pass for the centered squares — both on the
     * vehicle key, no windows. */
   def radiusOfGyration(pos: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
     val pts = pos.select(col("vehicleId").as("veh"),
         floor(col("lat") * 100 + 0.5).cast(dec).as("x"),
         floor(col("lon") * 100 + 0.5).cast(dec).as("y"))

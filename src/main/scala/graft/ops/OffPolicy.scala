@@ -32,7 +32,6 @@ object OffPolicy {
     * is never shuffled twice. */
   def evaluateGreedy(log: DataFrame, ctxCol: String, actionCol: String,
                      rewardCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val t = log.select(col(ctxCol).as("ctx"), col(actionCol).as("act"),
       col(rewardCol).cast("long").as("r"))
     val cells = t.groupBy(col("ctx"), col("act"))

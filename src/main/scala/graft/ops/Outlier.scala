@@ -34,7 +34,6 @@ object Outlier {
     * reuse one knn exchange; nothing joins the raw vectors twice. */
   def lofWithinLabel(emb: DataFrame, k: Int, topPerLabel: Int): DataFrame = {
     require(k >= 1 && topPerLabel >= 1)
-    val dec = "decimal(38,0)"
     val q = emb.select(col("vec_id").cast("long").as("vec_id"),
       col("label").cast("long").as("label"),
       expr("transform(CAST(embedding AS ARRAY<DOUBLE>), " +
@@ -43,14 +42,13 @@ object Outlier {
     // pairs across the session's shuffle width BEFORE the 64-wide
     // distance fold so it runs on every core (the knnClassify lesson —
     // fusing the fold into the skewed join stage measured ~3× slower).
-    // r12 (guide §2.3/§8): the pair frame that crosses that exchange
-    // carries ONLY ids — the two 64-long vectors attach AFTER the
-    // repartition via equi-joins against the (tiny, broadcastable)
-    // vector table, so the shuffle moves O(pairs·24B) instead of
-    // O(pairs·1KB) of duplicated array payload. At 100 TB the same plan
-    // degrades gracefully: the attach joins become shuffles of the
-    // vector table (O(n) array movement), never O(n·k) duplication
-    // through the exchange.
+    // The pair frame that crosses that exchange carries ONLY ids — the
+    // two 64-long vectors attach AFTER the repartition via broadcast
+    // equi-joins against the vector table, so the shuffle moves
+    // O(pairs·24B) instead of O(pairs·1KB) of duplicated array payload.
+    // The vector table holds one row per input vector, so the whole
+    // corpus (n vectors × ~0.5 KB), not one label block, must fit a
+    // broadcast.
     val qv = q.select(col("vec_id"), col("qv")).localCheckpoint(false)
     val idsOnly = q.select(col("label"), col("vec_id"))
     val width = emb.sparkSession.sessionState.conf.numShufflePartitions
@@ -58,13 +56,13 @@ object Outlier {
       .join(idsOnly.select(col("label"), col("vec_id").as("ib")), "label")
       .where(col("vec_id") =!= col("ib"))
       .repartition(width)
-      // r13 (ADVICE): qv is a checkpointed LogicalRDD with no stats, so
-      // without the hint both attach joins planned as SortMergeJoins with
-      // their own hash exchanges — destroying the round-robin spread the
-      // repartition exists to provide. broadcast() pins the BHJ the
-      // comment above always assumed; the label-blocked contract bounds
-      // qv (one vector per corpus row of the blocked subset), and at
-      // corpus scale callers swap the blocking key before this operator.
+      // qv is a checkpointed LogicalRDD with no stats, so without the
+      // hint both attach joins planned as SortMergeJoins with their own
+      // hash exchanges — destroying the round-robin spread the
+      // repartition exists to provide. broadcast() forces the BHJ for
+      // every input size: label blocking bounds the pairs, not qv, so
+      // the limit of this operator is the total corpus size fitting one
+      // broadcast (there is no shuffle fallback).
       .join(broadcast(qv), "vec_id")
       .join(broadcast(qv.select(col("vec_id").as("ib"), col("qv").as("bv"))),
         "ib")

@@ -255,7 +255,6 @@ object Similarity {
     * after the ONE Gram aggregate nothing touches the data again. */
   def powerIterationDeflated(gram: DataFrame, dims: Int,
                              iters: Int): DataFrame = {
-    val dec = "decimal(38,0)"
     val x1 = powerIteration(gram, dims, iters).localCheckpoint(false)
     val gsc = scaledGram(gram)
     val xx = x1.agg(sum(col("x_e4") * col("x_e4")).as("xx"))

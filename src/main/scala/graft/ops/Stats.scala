@@ -240,7 +240,6 @@ object Stats {
     * per unordered pair: (pair, n, corr). */
   def corrMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "need at least two columns")
-    val dec = "decimal(38,0)"
     val pairs = for (i <- cols.indices; j <- i + 1 until cols.size)
       yield (cols(i), cols(j))
     val aggs = Seq(count(lit(1)).as("n")) ++
@@ -275,7 +274,6 @@ object Stats {
     * no cross-key window. */
   def spearmanByKey(df: DataFrame, keyCol: String, xCol: String,
                     yCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     def r2(c: String) =
       (lit(2L) * rank().over(Window.partitionBy(col("key")).orderBy(col(c)))
         .cast("long") +
@@ -307,7 +305,6 @@ object Stats {
     * then the cumulative walk on the DISTINCT value axis. */
   def mannWhitneyU(df: DataFrame, sampleCol: String,
                    valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ord = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.select(col(sampleCol).as("s"), col(valueCol).as("v"))
@@ -338,7 +335,6 @@ object Stats {
     * epilogue. */
   def linearRegression2(df: DataFrame, yCol: String, x1Col: String,
                         x2Col: String): DataFrame = {
-    val dec = "decimal(38,0)"
     df.select(col(yCol).cast(dec).as("y"), col(x1Col).cast(dec).as("x1"),
         col(x2Col).cast(dec).as("x2"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("sy"),
@@ -381,7 +377,6 @@ object Stats {
     *
     * Scale: ONE map-side-combinable groupBy, then a k-row reduce. */
   def anovaF(df: DataFrame, keyCol: String, xCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val sq = (s: String, n: String) =>
       s"""CAST(floor(CAST($s AS DOUBLE) * CAST($s AS DOUBLE) /
          |     CAST($n AS DOUBLE) + CAST('0.5' AS DOUBLE)) AS BIGINT)""".stripMargin
@@ -417,7 +412,6 @@ object Stats {
     * key-keyed reduce over the class axis. */
   def etaSquared(df: DataFrame, keyCol: String, classCol: String,
                  xCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val sq = (s: String, n: String) =>
       s"""CAST(floor(CAST($s AS DOUBLE) * CAST($s AS DOUBLE) /
          |     CAST($n AS DOUBLE) + CAST('0.5' AS DOUBLE)) AS BIGINT)""".stripMargin
@@ -458,7 +452,6 @@ object Stats {
     * DISTINCT feature axis (bounded; checkpointed). */
   def decisionStump(df: DataFrame, targetCol: String,
                     featureCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ord = Window.orderBy(col("f"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cells = df
@@ -498,7 +491,6 @@ object Stats {
     * calibration bins — d is small by construction, checkpointed). */
   def isotonicFit(df: DataFrame, bucketCol: String,
                   valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val ord = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ax = df
@@ -536,7 +528,6 @@ object Stats {
     *
     * Scale: ONE map-side-combinable aggregate; the solve is scalar. */
   def welchT(df: DataFrame, sampleCol: String, valueCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     df.select(col(sampleCol).as("s"), col(valueCol).cast(dec).as("v"))
       .agg(
         sum(when(col("s") === 0L, 1L).otherwise(0L)).cast(dec).as("n1"),
@@ -783,7 +774,6 @@ object Stats {
     * row out; no second pass, no window. */
   def partialCorr(df: DataFrame, xCol: String, yCol: String,
                   zCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     val t = df.select(col(xCol).cast(dec).as("x"),
       col(yCol).cast(dec).as("y"), col(zCol).cast(dec).as("z"))
     def r(a: String, b: String) =

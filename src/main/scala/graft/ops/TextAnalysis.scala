@@ -344,7 +344,6 @@ object TextAnalysis {
     val ranked = top.withColumn("rk", row_number().over(
       org.apache.spark.sql.expressions.Window
         .orderBy(col("f").desc, col("wd").asc)))
-    val dec = "decimal(38,0)"
     ranked
       .select(Bm25.log2E6(col("rk")).cast(dec).as("x"),
         Bm25.log2E6(col("f")).cast(dec).as("y"))
@@ -371,7 +370,6 @@ object TextAnalysis {
     * cumulative walk runs on the per-source DOC axis (keyed windows);
     * the LS reduce is map-side combinable. */
   def vocabGrowth(docs: DataFrame, srcCol: String = "source"): DataFrame = {
-    val dec = "decimal(38,0)"
     val tok = docs
       .select(col("doc_id"), col(srcCol).as("src"),
         explode(split(col("text"), " ")).as("word"))

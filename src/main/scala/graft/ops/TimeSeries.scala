@@ -443,7 +443,6 @@ object TimeSeries {
     * Scale: two map-side-combinable aggregates, both keyed. */
   def fanoFactor(df: DataFrame, keyCol: String,
                  bucketCol: String): DataFrame = {
-    val dec = "decimal(38,0)"
     df.groupBy(col(keyCol).as("key"), col(bucketCol).as("bucket"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("key"))
@@ -468,7 +467,6 @@ object TimeSeries {
   def acf(df: DataFrame, keyCol: String, dayCol: String,
           maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 64)
-    val dec = "decimal(38,0)"
     val ax = df.groupBy(col(keyCol).as("key"), col(dayCol).as("day"))
       .agg(count(lit(1)).cast(dec).as("x"))
       .localCheckpoint(false) // day axis: bounded; ONE raw scan

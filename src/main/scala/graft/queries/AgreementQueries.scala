@@ -130,7 +130,6 @@ object AgreementQueries extends QueryCatalog {
     //    long/short by different rules; exact n²-scaled agreement.
     QueryDef("q_fleiss_kappa",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val r = Tables.documents(s, d)
           .select(col("doc_id"), col("n_chars"),
             (col("n_chars") >= 500).as("r1"),
@@ -227,7 +226,6 @@ object AgreementQueries extends QueryCatalog {
             count(lit(1)).over(Window.partitionBy(col(c))) - 1L).as(s"r$c")
         val ranked = per.select(col("g"), r2("m1"), r2("m2"), r2("m3"))
           .withColumn("rsum2", expr("rm1 + rm2 + rm3"))
-        val dec = "decimal(38,0)"
         ranked.agg(count(lit(1)).cast(dec).as("n"),
             sum(col("rsum2").cast(dec)).as("s"),
             sum(col("rsum2").cast(dec) * col("rsum2").cast(dec)).as("q"))
@@ -289,12 +287,7 @@ object AgreementQueries extends QueryCatalog {
           sum(expr("CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END")).as("c"))
         .selectExpr("CAST(b AS BIGINT) AS b", "CAST(c AS BIGINT) AS c",
           "(b - c) * (b - c) * 1000000 div greatest(b + c, 1) AS chi2_e6"),
-      Some("""WITH u AS (SELECT user_id,
-             |                  max(CASE WHEN event_type = 'click'
-             |                      THEN 1 ELSE 0 END) AS x,
-             |                  max(CASE WHEN event_type = 'purchase'
-             |                      THEN 1 ELSE 0 END) AS y
-             |           FROM events GROUP BY 1)
+      Some(s"""WITH $clickPurchaseUsersSql
              |SELECT CAST(sum(CASE WHEN x = 1 AND y = 0 THEN 1 ELSE 0 END)
              |         AS BIGINT) AS b,
              |       CAST(sum(CASE WHEN x = 0 AND y = 1 THEN 1 ELSE 0 END)

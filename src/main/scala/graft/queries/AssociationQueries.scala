@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Stats}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Association and dependence measures: correlation (linear, rank,
@@ -52,6 +53,40 @@ object AssociationQueries extends QueryCatalog {
       .groupBy(col("i"), col("j")).agg(count(lit(1)).as("o"))
       .localCheckpoint(false) // ≤ 36 cells, self-joined
 
+  /** Per month (mo = yyyymm) the counts of priority-1 (x) and
+    * priority-2 (y) orders: the paired samples of the month-pair
+    * association tests. */
+  private def monthPrio12(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .groupBy(expr("year(o_orderdate) * 100 + month(o_orderdate)")
+        .as("mo"))
+      .agg(
+        sum(when(substring(col("o_orderpriority"), 1, 1) === "1", 1L)
+          .otherwise(0L)).as("x"),
+        sum(when(substring(col("o_orderpriority"), 1, 1) === "2", 1L)
+          .otherwise(0L)).as("y"))
+
+  /** DuckDB twin of [[monthPrio12]] (CTE `m`). */
+  private val monthPrio12Sql =
+    """m AS (
+      |  SELECT year(o_orderdate) * 100 + month(o_orderdate) AS mo,
+      |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
+      |             = '1' THEN 1 ELSE 0 END) AS BIGINT) AS x,
+      |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
+      |             = '2' THEN 1 ELSE 0 END) AS BIGINT) AS y
+      |  FROM orders GROUP BY 1)""".stripMargin
+
+  /** Event type against day of week (days since epoch mod 7): (x, y). */
+  private def typeWeekday(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type").as("x"),
+        expr("(unix_micros(ts) div 86400000000) % 7").as("y"))
+
+  /** DuckDB twin of [[typeWeekday]] (CTE `e`). */
+  private val typeWeekdaySql =
+    """e AS (SELECT event_type AS x,
+      |                 (epoch_us(ts) // 86400000000) % 7 AS y FROM events)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── Chi-square independence of event_type × day-of-week (epoch-day
@@ -59,12 +94,9 @@ object AssociationQueries extends QueryCatalog {
     //    Per-cell e6 rounding before the integer cross-cell sum.
     QueryDef("q_chi_square",
       (s, d) => Stats.chiSquare(
-        Tables.events(s, d)
-          .select(col("event_type").as("x"),
-            expr("(unix_micros(ts) div 86400000000) % 7").as("y")),
+        typeWeekday(s, d),
         "x", "y"),
-      Some("""WITH e AS (SELECT event_type AS x,
-             |                 (epoch_us(ts) // 86400000000) % 7 AS y FROM events),
+      Some(s"""WITH $typeWeekdaySql,
              |cells AS (SELECT x, y, CAST(count(*) AS BIGINT) AS o FROM e GROUP BY x, y),
              |rm AS (SELECT x, CAST(sum(o) AS BIGINT) AS r FROM cells GROUP BY x),
              |cm AS (SELECT y, CAST(sum(o) AS BIGINT) AS c FROM cells GROUP BY y),
@@ -91,14 +123,11 @@ object AssociationQueries extends QueryCatalog {
     //    via the shared fixed-point log₂.
     QueryDef("q_mutual_info",
       (s, d) => Stats.mutualInfo(
-        Tables.events(s, d)
-          .select(col("event_type").as("x"),
-            expr("(unix_micros(ts) div 86400000000) % 7").as("y")),
+        typeWeekday(s, d),
         "x", "y"),
       Some {
         val lg = Bm25.log2E6Sql("(cxy * n)") + " - " + Bm25.log2E6Sql("(cx * cy)")
-        s"""WITH e AS (SELECT event_type AS x,
-           |                 (epoch_us(ts) // 86400000000) % 7 AS y FROM events),
+        s"""WITH $typeWeekdaySql,
            |cells AS (SELECT x, y, CAST(count(*) AS BIGINT) AS cxy FROM e GROUP BY x, y),
            |rm AS (SELECT x, CAST(sum(cxy) AS BIGINT) AS cx FROM cells GROUP BY x),
            |cm AS (SELECT y, CAST(sum(cxy) AS BIGINT) AS cy FROM cells GROUP BY y),
@@ -179,15 +208,12 @@ object AssociationQueries extends QueryCatalog {
     //    final ratio.
     QueryDef("q_theils_u",
       (s, d) => Stats.theilsU(
-        Tables.events(s, d)
-          .select(col("event_type").as("x"),
-            expr("(unix_micros(ts) div 86400000000) % 7").as("y")),
+        typeWeekday(s, d),
         "x", "y"),
       Some {
         val lg = Bm25.log2E6Sql("(cxy * n)") + " - " + Bm25.log2E6Sql("(cx * cy)")
         val hg = Bm25.log2E6Sql("n") + " - " + Bm25.log2E6Sql("cx")
-        s"""WITH e AS (SELECT event_type AS x,
-           |                 (epoch_us(ts) // 86400000000) % 7 AS y FROM events),
+        s"""WITH $typeWeekdaySql,
            |cells AS (SELECT x, y, CAST(count(*) AS BIGINT) AS cxy
            |          FROM e GROUP BY x, y),
            |rm AS (SELECT x, CAST(sum(cxy) AS BIGINT) AS cx FROM cells GROUP BY x),
@@ -300,7 +326,6 @@ object AssociationQueries extends QueryCatalog {
     //    brand contradict the pooled trend? Sign-only — no division.
     QueryDef("q_simpson_reversal",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val li = Tables.lineitem(s, d)
           .join(Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
             col("l_partkey") === col("p_partkey"))
@@ -410,7 +435,6 @@ object AssociationQueries extends QueryCatalog {
     //    integer arithmetic end to end.
     QueryDef("q_mantel_haenszel",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val strat = Tables.orders(s, d)
           .join(Tables.customer(s, d).select(col("c_custkey"),
             col("c_nationkey")), col("o_custkey") === col("c_custkey"))
@@ -481,14 +505,7 @@ object AssociationQueries extends QueryCatalog {
     //    γ = (C−D)/(C+D) sign-factored e6.
     QueryDef("q_gk_gamma",
       (s, d) => {
-        val m = Tables.orders(s, d)
-          .groupBy(expr("year(o_orderdate) * 100 + month(o_orderdate)")
-            .as("mo"))
-          .agg(
-            sum(when(substring(col("o_orderpriority"), 1, 1) === "1", 1L)
-              .otherwise(0L)).as("x"),
-            sum(when(substring(col("o_orderpriority"), 1, 1) === "2", 1L)
-              .otherwise(0L)).as("y"))
+        val m = monthPrio12(s, d)
           .localCheckpoint(false) // month axis: tiny; pair grid below
         m.as("a").join(m.as("b"), col("a.mo") < col("b.mo"))
           .agg(
@@ -506,13 +523,7 @@ object AssociationQueries extends QueryCatalog {
               |     ELSE -((dd - c) * 1000000 div (c + dd))
               |END AS gamma_e6""".stripMargin)
       },
-      Some("""WITH m AS (
-             |  SELECT year(o_orderdate) * 100 + month(o_orderdate) AS mo,
-             |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
-             |             = '1' THEN 1 ELSE 0 END) AS BIGINT) AS x,
-             |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
-             |             = '2' THEN 1 ELSE 0 END) AS BIGINT) AS y
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $monthPrio12Sql,
              |p AS (SELECT
              |        CAST(sum(CASE WHEN (a.x < b.x AND a.y < b.y)
              |            OR (a.x > b.x AND a.y > b.y) THEN 1 ELSE 0
@@ -536,14 +547,7 @@ object AssociationQueries extends QueryCatalog {
     //    d_e6 = that numerator ·1e6 div n(n−1)(n−2)(n−3)(n−4).
     QueryDef("q_hoeffding_d",
       (s, d) => {
-        val m = Tables.orders(s, d)
-          .groupBy(expr("year(o_orderdate) * 100 + month(o_orderdate)")
-            .as("mo"))
-          .agg(
-            sum(when(substring(col("o_orderpriority"), 1, 1) === "1", 1L)
-              .otherwise(0L)).as("x"),
-            sum(when(substring(col("o_orderpriority"), 1, 1) === "2", 1L)
-              .otherwise(0L)).as("y"))
+        val m = monthPrio12(s, d)
           .localCheckpoint(false) // month axis; self-join below
         val q = m.as("a").join(m.as("b"), col("a.mo") =!= col("b.mo"))
           .groupBy(col("a.mo").as("mo"))
@@ -571,13 +575,7 @@ object AssociationQueries extends QueryCatalog {
               |       div (n * (n - 1) * (n - 2) * (n - 3) * (n - 4)))
               |END AS BIGINT) AS d_e6""".stripMargin)
       },
-      Some("""WITH m AS (
-             |  SELECT year(o_orderdate) * 100 + month(o_orderdate) AS mo,
-             |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
-             |             = '1' THEN 1 ELSE 0 END) AS BIGINT) AS x,
-             |         CAST(sum(CASE WHEN substring(o_orderpriority, 1, 1)
-             |             = '2' THEN 1 ELSE 0 END) AS BIGINT) AS y
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $monthPrio12Sql,
              |q AS (SELECT a.mo,
              |             CAST(sum(CASE WHEN b.x < a.x THEN 1 ELSE 0
              |               END) + 1 AS BIGINT) AS r,
@@ -1072,19 +1070,7 @@ object AssociationQueries extends QueryCatalog {
     // ── Theil's U: directional + symmetric uncertainty coefficients.
     QueryDef("q_theil_u",
       (s, d) => {
-        val cells = Tables.orders(s, d)
-          .select(col("o_orderpriority").as("v"),
-            (col("o_totalprice") >= 150000.0).as("yy"))
-          .groupBy(col("v"), col("yy")).agg(count(lit(1)).as("c"))
-          .localCheckpoint(false)
-        val tc = cells.agg(sum(col("c")).as("n"),
-          sum(col("c") * Bm25.log2E6(col("c"))).as("t_cells"))
-        val tv = cells.groupBy(col("v")).agg(sum(col("c")).as("nv"))
-          .agg(sum(col("nv") * Bm25.log2E6(col("nv"))).as("t_v"))
-        val ty = cells.groupBy(col("yy")).agg(sum(col("c")).as("cy"))
-          .agg(sum(col("cy") * Bm25.log2E6(col("cy"))).as("t_y"))
-        tc.crossJoin(broadcast(tv)).crossJoin(broadcast(ty))
-          .withColumn("t_n", col("n") * Bm25.log2E6(col("n")))
+        prioCellEntropy(s, d)
           .withColumn("mi", expr("t_cells - t_v - t_y + t_n"))
           .withColumn("hy", expr("t_n - t_y"))
           .withColumn("hv", expr("t_n - t_v"))
@@ -1103,19 +1089,8 @@ object AssociationQueries extends QueryCatalog {
       },
       Some {
         def L(v: String) = Bm25.log2E6Sql(v)
-        prioCellsSql +
+        prioCellEntropySql +
           s""",
-             |tc AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-             |         CAST(sum(c * CAST(${L("c")} AS BIGINT)) AS BIGINT)
-             |           AS t_cells FROM cells),
-             |tv AS (SELECT CAST(sum(nv * CAST(${L("nv")} AS BIGINT))
-             |           AS BIGINT) AS t_v
-             |       FROM (SELECT CAST(sum(c) AS BIGINT) AS nv FROM cells
-             |             GROUP BY v)),
-             |ty AS (SELECT CAST(sum(cy * CAST(${L("cy")} AS BIGINT))
-             |           AS BIGINT) AS t_y
-             |       FROM (SELECT CAST(sum(c) AS BIGINT) AS cy FROM cells
-             |             GROUP BY yy)),
              |j AS (SELECT n, t_cells - t_v - t_y
              |        + n * CAST(${L("n")} AS BIGINT) AS mi,
              |        n * CAST(${L("n")} AS BIGINT) - t_y AS hy,

@@ -4,6 +4,7 @@ import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Behavior, Bm25, Engagement, Identity, IntervalJoin,
   Segmentation}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Event-sequence analytics over the keyed, time-ordered `events` feed:
@@ -43,6 +44,14 @@ object BehaviorQueries extends QueryCatalog {
   }
 
   private val chs = Seq("view", "click", "signup", "error")
+  /** Distinct (event type, user) pairs and the users per type: CTEs
+    * `tu` (t, u), `sz` (t, nu). */
+  private val typeUsersSql =
+    """tu AS (SELECT DISTINCT event_type AS t, user_id AS u
+      |            FROM events),
+      |sz AS (SELECT t, CAST(count(*) AS BIGINT) AS nu
+      |       FROM tu GROUP BY 1)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     /* Behavioral / event-sequence analytics over the keyed, time-ordered
@@ -896,10 +905,7 @@ object BehaviorQueries extends QueryCatalog {
     //    (max count, then min hour).
     QueryDef("q_peak_to_mean",
       (s, d) => {
-        val prof = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            expr("(unix_micros(ts) div 3600000000) % 24").as("hod"))
-          .agg(count(lit(1)).as("c"))
+        val prof = Fixtures.hourProfile(s, d)
         prof
           .withColumn("pk", max(col("c")).over(
             Window.partitionBy(col("event_type"))))
@@ -952,10 +958,7 @@ object BehaviorQueries extends QueryCatalog {
             "CAST(na AS BIGINT) AS na", "CAST(nb AS BIGINT) AS nb",
             "ninter * 1000000 div (na + nb - ninter) AS jaccard_e6")
       },
-      Some("""WITH tu AS (SELECT DISTINCT event_type AS t, user_id AS u
-             |            FROM events),
-             |sz AS (SELECT t, CAST(count(*) AS BIGINT) AS nu
-             |       FROM tu GROUP BY 1),
+      Some(s"""WITH $typeUsersSql,
              |inter AS (SELECT a.t AS ta, b.t AS tb,
              |                 CAST(count(*) AS BIGINT) AS ninter
              |          FROM tu a JOIN tu b ON a.u = b.u AND a.t < b.t
@@ -995,10 +998,7 @@ object BehaviorQueries extends QueryCatalog {
               |div (CAST(na AS DECIMAL(38,0)) * nb) AS BIGINT)
               |AS lift_e6""".stripMargin)
       },
-      Some("""WITH tu AS (SELECT DISTINCT event_type AS t, user_id AS u
-             |            FROM events),
-             |sz AS (SELECT t, CAST(count(*) AS BIGINT) AS nu
-             |       FROM tu GROUP BY 1),
+      Some(s"""WITH $typeUsersSql,
              |nus AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS n
              |        FROM tu),
              |pr AS (SELECT a.t AS ta, b.t AS tb,

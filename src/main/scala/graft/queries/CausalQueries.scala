@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Experiment}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Causal inference: diff-in-diff, event study, IV, regression
@@ -49,6 +50,22 @@ object CausalQueries extends QueryCatalog {
     grid.join(rev, Seq("nk", "m"), "left")
       .select(col("nk"), col("m"), coalesce(col("c"), lit(0L)).as("c"))
   }
+
+  /** Treated-minus-control mean difference over the moments (nt, st,
+    * nc, sc) of a treatment split, as SQL text valid in both engines. */
+  private val eff =
+    """(CAST(st AS DOUBLE) / CAST(nt AS DOUBLE)
+      |- CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE))""".stripMargin
+
+  /** Squared standard error of [[eff]] over the moments (n, s, q) of
+    * both arms. */
+  private val se2 =
+    """(CAST(nt * qt - st * st AS DOUBLE)
+      |/ (CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)
+      |   * CAST(nt AS DOUBLE))
+      |+ CAST(nc * qc - sc * sc AS DOUBLE)
+      |/ (CAST(nc AS DOUBLE) * CAST(nc AS DOUBLE)
+      |   * CAST(nc AS DOUBLE)))""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -190,11 +207,7 @@ object CausalQueries extends QueryCatalog {
     //    β = (Σy₁n₀ − Σy₀n₁)/(Σx₁n₀ − Σx₀n₁) — the n₁n₀ cancels.
     QueryDef("q_iv_wald",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("spend"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"), "left")
+        val u = customerSpend(s, d)
           .select((col("c_custkey") % 5 === 0).as("z"),
             (col("c_custkey") % 5 === 0 ||
               floor(col("c_acctbal") * 100 + 0.5) > 500000).as("x"),
@@ -220,10 +233,7 @@ object CausalQueries extends QueryCatalog {
               |          / CAST(sx1 * n0 - sx0 * n1 AS DOUBLE), 6)
               |END AS beta_wald""".stripMargin)
       },
-      Some("""WITH spend AS (SELECT o_custkey,
-             |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |                   AS BIGINT)) AS BIGINT) AS spend
-             |               FROM orders GROUP BY 1),
+      Some(s"""WITH $customerSpendSql,
              |u AS (SELECT c_custkey % 5 = 0 AS z,
              |             c_custkey % 5 = 0
              |               OR floor(c_acctbal * 100 + 0.5) > 500000 AS x,
@@ -260,11 +270,7 @@ object CausalQueries extends QueryCatalog {
     //    local-linear intercept gap (exact moments, double close).
     QueryDef("q_reg_discontinuity",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("spend"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"), "left")
+        val u = customerSpend(s, d)
           .select(floor(col("c_acctbal") * 100 + 0.5).cast("long").as("r"),
             coalesce(col("spend"), lit(0L)).as("y"))
           .where(col("r") >= -200000L && col("r") < 200000L)
@@ -291,10 +297,7 @@ object CausalQueries extends QueryCatalog {
           "round(my_r - my_l, 6) AS naive_diff",
           "round(ic_r - ic_l, 6) AS rd_effect")
       },
-      Some("""WITH spend AS (SELECT o_custkey,
-             |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |                   AS BIGINT)) AS BIGINT) AS spend
-             |               FROM orders GROUP BY 1),
+      Some(s"""WITH $customerSpendSql,
              |u AS (SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS r,
              |             coalesce(spend, 0) AS y,
              |             CASE WHEN floor(c_acctbal * 100 + 0.5) >= 0
@@ -490,16 +493,6 @@ object CausalQueries extends QueryCatalog {
             sum(when(!col("t"), col("y") * col("y"))
               .otherwise(lit(0).cast(dec))).as("qc"))
         }
-        val eff =
-          """(CAST(st AS DOUBLE) / CAST(nt AS DOUBLE)
-            |- CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE))""".stripMargin
-        val se2 =
-          """(CAST(nt * qt - st * st AS DOUBLE)
-            |/ (CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)
-            |   * CAST(nt AS DOUBLE))
-            |+ CAST(nc * qc - sc * sc AS DOUBLE)
-            |/ (CAST(nc AS DOUBLE) * CAST(nc AS DOUBLE)
-            |   * CAST(nc AS DOUBLE)))""".stripMargin
         val segs = mom(u, Seq("seg"))
           .selectExpr("seg", "CAST(nt AS BIGINT) AS n_t",
             "CAST(nc AS BIGINT) AS n_c", s"$eff AS effect0",
@@ -514,16 +507,6 @@ object CausalQueries extends QueryCatalog {
               |AS z_het""".stripMargin)
       },
       Some {
-        val eff =
-          """(CAST(st AS DOUBLE) / CAST(nt AS DOUBLE)
-            |- CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE))""".stripMargin
-        val se2 =
-          """(CAST(nt * qt - st * st AS DOUBLE)
-            |/ (CAST(nt AS DOUBLE) * CAST(nt AS DOUBLE)
-            |   * CAST(nt AS DOUBLE))
-            |+ CAST(nc * qc - sc * sc AS DOUBLE)
-            |/ (CAST(nc AS DOUBLE) * CAST(nc AS DOUBLE)
-            |   * CAST(nc AS DOUBLE)))""".stripMargin
         def momSql(grp: String, proj: String) =
           s"""SELECT $proj
              |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS HUGEINT) AS nt,
@@ -535,10 +518,7 @@ object CausalQueries extends QueryCatalog {
              |  sum(CASE WHEN t THEN 0
              |      ELSE CAST(y AS HUGEINT) * CAST(y AS HUGEINT) END) AS qc
              |FROM u $grp""".stripMargin
-        s"""WITH spend AS (SELECT o_custkey,
-           |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-           |                   AS BIGINT)) AS BIGINT) AS y
-           |               FROM orders GROUP BY 1),
+        s"""WITH $spendYSql,
            |u AS (SELECT c_mktsegment AS seg, c_custkey % 3 = 0 AS t,
            |             coalesce(y, 0) AS y
            |      FROM customer LEFT JOIN spend ON c_custkey = o_custkey),

@@ -104,19 +104,6 @@ object ClusteringQueries extends QueryCatalog {
             expr("id div 10").as("truth")))
       },
       Some {
-        val head = RingGraph.sql +
-          ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
-        val rounds = (1 to 4).map { i =>
-          s"""r$i AS (SELECT v AS id, label FROM (
-             |        SELECT v, label, row_number() OVER
-             |            (PARTITION BY v ORDER BY cnt DESC, label ASC) AS rn
-             |        FROM (SELECT adj.v, p.label, count(*) AS cnt
-             |              FROM adj JOIN l${i - 1} p ON p.id = adj.u
-             |              GROUP BY adj.v, p.label))
-             |      WHERE rn = 1),
-             |l$i AS MATERIALIZED (SELECT n.id, coalesce(r$i.label, n.label) AS label
-             |      FROM l${i - 1} n LEFT JOIN r$i ON r$i.id = n.id)""".stripMargin
-        }
         val tail =
           """asg AS (SELECT id, label AS cluster, id // 10 AS truth FROM l4),
             |cells AS (SELECT cluster, truth, count(*) AS sct
@@ -137,18 +124,14 @@ object ClusteringQueries extends QueryCatalog {
             |                 // (precision_e6 + recall_e6) AS BIGINT)
             |       END AS f1_e6
             |FROM pr""".stripMargin
-        (head +: rounds.map("," + _)).mkString("\n") + ",\n" + tail
+        RingGraph.labelPropSql + ",\n" + tail
       }),
 
     // ── Simplified silhouette per label over the embeddings table:
     //    squared-distance score in e6 fixed point (see ClusterEval).
     QueryDef("q_silhouette",
       (s, d) => ClusterEval.centroidSilhouette(Tables.embeddings(s, d)),
-      Some("""WITH q AS MATERIALIZED (
-             |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-             |         list_transform(CAST(embedding AS DOUBLE[]),
-             |           x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS qv
-             |  FROM embeddings),
+      Some(s"""WITH $quantEmbeddingsSql,
              |comp AS MATERIALIZED (
              |  SELECT vec_id, label, unnest(qv) AS v,
              |         unnest(range(1, len(qv) + 1)) AS i
@@ -257,11 +240,7 @@ object ClusteringQueries extends QueryCatalog {
     // ── LOF k=5 within each label block, top-10 outliers per label.
     QueryDef("q_lof",
       (s, d) => Outlier.lofWithinLabel(Tables.embeddings(s, d), 5, 10),
-      Some("""WITH q AS MATERIALIZED (
-             |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-             |         list_transform(CAST(embedding AS DOUBLE[]),
-             |           x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS qv
-             |  FROM embeddings),
+      Some(s"""WITH $quantEmbeddingsSql,
              |knn AS MATERIALIZED (
              |  SELECT * FROM (
              |    SELECT a.label, a.vec_id AS ia, b.vec_id AS ib,
@@ -311,7 +290,6 @@ object ClusteringQueries extends QueryCatalog {
     //    arithmetic on the bounded label axis.
     QueryDef("q_davies_bouldin",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), col("label").cast("long").as("label"),
             posexplode(expr("transform(CAST(embedding AS ARRAY<DOUBLE>), " +

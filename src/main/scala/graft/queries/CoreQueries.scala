@@ -261,12 +261,7 @@ object CoreQueries extends QueryCatalog {
     //    and z bounds show each bucket covers one contiguous spatial blob.
     QueryDef("q_zorder_layout",
       (s, d) => {
-        val cells = Pipeline.snap(Pipeline.sanitize(Tables.positions(s, d)), res)
-          .groupBy(col("cellId")).agg(count(lit(1)).as("cnt"))
-          .withColumn("parts", split(col("cellId"), ":"))
-          .select(col("cnt"),
-            element_at(col("parts"), 2).cast("long").as("qi"),
-            element_at(col("parts"), 3).cast("long").as("ri"))
+        val cells = cellCounts(s, d, res)
         cells.withColumn("z", graft.geo.ZOrder.zvalue(col("qi"), col("ri")))
           .groupBy((col("z") / lit(1L << 12)).cast("long").as("z_bucket"))
           .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_events"),
@@ -373,13 +368,7 @@ object CoreQueries extends QueryCatalog {
           .select(explode(col("items")).as("x"))
           .select(col("x.vec_id").as("vec_id"), col("x.cos").as("cos"))
       },
-      Some("""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings WHERE vec_id > 0)
-             |SELECT vec_id,
-             |       round(list_dot_product(ev, qv) /
-             |             (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(qv, qv))), 6) AS cos
-             |FROM e, q
-             |ORDER BY cos DESC, vec_id ASC LIMIT 10""".stripMargin)),
+      Some(cosineTop10Sql)),
 
     // ── Column-level data profiling (single-pass wide aggregation) — the
     //    pre-ingest quality gate of a training-data pipeline.

@@ -686,10 +686,7 @@ object CorpusStatsQueries extends QueryCatalog {
      * source, K = 10⁴·(Σm²V(m) − N)/N² — exact integers end to end. */
     // ── Yule's K per source: 10⁴·(Σm²V(m) − N)/N², e6.
     QueryDef("q_yule_k",
-      (s, d) => Tables.documents(s, d)
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("m"))
+      (s, d) => sourceWordCounts(s, d)
         .groupBy(col("source"))
         .agg(sum(col("m")).as("n_tokens"),
           count(lit(1)).as("vocab"),
@@ -698,11 +695,7 @@ object CorpusStatsQueries extends QueryCatalog {
           s"CAST((s2 - n_tokens) * 10000000000" +
             s" div (CAST(n_tokens AS $dec) * n_tokens) AS BIGINT)" +
             " AS yule_k_e6"),
-      Some("""WITH wc AS (
-             |  SELECT source, w, CAST(count(*) AS BIGINT) AS m
-             |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
-             |        FROM documents)
-             |  GROUP BY 1, 2),
+      Some(s"""WITH $sourceWordCountsSql,
              |agg AS (SELECT source, CAST(sum(m) AS BIGINT) AS n_tokens,
              |          CAST(count(*) AS BIGINT) AS vocab,
              |          sum(CAST(m AS HUGEINT) * m) AS s2
@@ -718,10 +711,7 @@ object CorpusStatsQueries extends QueryCatalog {
      * the shared integer log₂) and R = V/√N (one portable double). */
     // ── Herdan's C + Guiraud's R per source.
     QueryDef("q_herdan_guiraud",
-      (s, d) => Tables.documents(s, d)
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("m"))
+      (s, d) => sourceWordCounts(s, d)
         .groupBy(col("source"))
         .agg(sum(col("m")).as("n_tokens"), count(lit(1)).as("vocab"))
         .withColumn("lv", Bm25.log2E6(col("vocab")))
@@ -734,11 +724,7 @@ object CorpusStatsQueries extends QueryCatalog {
       Some {
         val lv = Bm25.log2E6Sql("vocab")
         val ln = Bm25.log2E6Sql("n_tokens")
-        s"""WITH wc AS (
-           |  SELECT source, w, CAST(count(*) AS BIGINT) AS m
-           |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
-           |        FROM documents)
-           |  GROUP BY 1, 2),
+        s"""WITH $sourceWordCountsSql,
            |agg AS (SELECT source, CAST(sum(m) AS BIGINT) AS n_tokens,
            |          CAST(count(*) AS BIGINT) AS vocab
            |        FROM wc GROUP BY 1)

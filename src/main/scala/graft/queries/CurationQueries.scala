@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Curation, Dedup, Sampling, TextAnalysis}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data curation (LLM data pipeline): splits, packing, chunking,
@@ -15,6 +15,33 @@ object CurationQueries extends QueryCatalog {
 
   private val hourUs = 3600000000L
   private val dayUs = 86400000000L
+  /** Document tokens with their 1-based split position: CTE `tok0`
+    * (doc_id, lang, pos, w), empty tokens kept. */
+  private val tok0Sql =
+    """tok0 AS (SELECT doc_id, lang,
+      |                   generate_subscripts(string_split(text, ' '),
+      |                                       1) AS pos,
+      |                   unnest(string_split(text, ' ')) AS w
+      |            FROM documents)""".stripMargin
+
+  /** Non-empty document tokens numbered in order: (doc_id, lang, pos,
+    * w, rn); [[tokRankSql]] is the DuckDB twin. */
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
+      .filter(col("w") =!= "")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
+
+  /** [[tok0Sql]] plus the non-empty tokens numbered in order: CTE `tok`
+    * (doc_id, lang, w, rn). */
+  private val tokRankSql = tok0Sql + """,
+    |tok AS (SELECT doc_id, lang, w,
+    |               row_number() OVER (PARTITION BY doc_id
+    |                                  ORDER BY pos) AS rn
+    |        FROM tok0 WHERE w <> '')""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── Deterministic train/val/test split (90/5/5 by id hash), observed
@@ -212,19 +239,7 @@ object CurationQueries extends QueryCatalog {
     QueryDef("q_uncertainty_sample",
       (s, d) => TextAnalysis.uncertaintySample(
         Tables.documents(s, d).select(col("doc_id"), col("text")), 256, 20),
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-              |  FROM documents),
-              |f AS (
-              |  SELECT doc_id,
-              |         ${PortableSql.hash48("token", "'fh'")} % 256 AS dim
-              |  FROM tok WHERE token <> ''),
-              |w AS (
-              |  SELECT doc_id,
-              |         ${PortableSql.hash48(
-                          "CAST(dim AS VARCHAR)", "'lw'")} % 2001 - 1000
-              |           AS wt
-              |  FROM f),
+      Some(s"""WITH $hashedWeightsSql,
               |m AS (
               |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
               |         CAST(sum(wt) AS BIGINT) AS margin
@@ -567,12 +582,7 @@ object CurationQueries extends QueryCatalog {
         // re-plan the rank subtree under the broadcast
         val tot = docs.agg(count(lit(1)).as("nt"))
         ranked.crossJoin(broadcast(tot))
-          .withColumn("decile", expr(
-            """CASE WHEN r <= (nt % 10) * (nt div 10 + 1)
-              |     THEN (r - 1) div (nt div 10 + 1) + 1
-              |     ELSE (nt % 10) +
-              |          (r - (nt % 10) * (nt div 10 + 1) - 1) div (nt div 10) + 1
-              |END""".stripMargin).cast("long"))
+          .withColumn("decile", expr(decileOfRank).cast("long"))
           .groupBy(col("decile"))
           .agg(count(lit(1)).as("n_docs"),
             min(col("difficulty_e6")).as("min_diff_e6"),
@@ -891,12 +901,7 @@ object CurationQueries extends QueryCatalog {
     //    is the same keyed exchange a dedup pass already pays.
     QueryDef("q_gram_coverage",
       (s, d) => {
-        val tok = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-          .filter(col("w") =!= "")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
+        val tok = docTokens(s, d)
         val wd = Window.partitionBy(col("doc_id")).orderBy(col("rn"))
         val grams = tok
           .withColumn("g", concat_ws(" ", col("w"),
@@ -919,15 +924,7 @@ object CurationQueries extends QueryCatalog {
             "CAST(n_dup AS BIGINT) AS n_dup",
             "n_dup * 1000000 div n_grams AS dup_cov_e6")
       },
-      Some("""WITH tok0 AS (SELECT doc_id, lang,
-             |                   generate_subscripts(string_split(text, ' '),
-             |                                       1) AS pos,
-             |                   unnest(string_split(text, ' ')) AS w
-             |            FROM documents),
-             |tok AS (SELECT doc_id, lang, w,
-             |               row_number() OVER (PARTITION BY doc_id
-             |                                  ORDER BY pos) AS rn
-             |        FROM tok0 WHERE w <> ''),
+      Some(s"""WITH $tokRankSql,
              |grams AS (SELECT doc_id, lang,
              |                 concat_ws(' ', w,
              |                   lead(w, 1) OVER wd, lead(w, 2) OVER wd,
@@ -955,12 +952,7 @@ object CurationQueries extends QueryCatalog {
     //    token pass. Rolled up per language with the longest run.
     QueryDef("q_repetition_loops",
       (s, d) => {
-        val tok = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
-          .filter(col("w") =!= "")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
+        val tok = docTokens(s, d)
           .withColumn("isl", col("rn") - row_number().over(
             Window.partitionBy(col("doc_id"), col("w"))
               .orderBy(col("pos"))))
@@ -978,11 +970,7 @@ object CurationQueries extends QueryCatalog {
             "CAST(max_run AS BIGINT) AS max_run",
             "CAST(looped_tokens AS BIGINT) AS looped_tokens")
       },
-      Some("""WITH tok0 AS (SELECT doc_id, lang,
-             |                   generate_subscripts(string_split(text, ' '),
-             |                                       1) AS pos,
-             |                   unnest(string_split(text, ' ')) AS w
-             |            FROM documents),
+      Some(s"""WITH $tok0Sql,
              |tok AS (SELECT doc_id, lang, w,
              |               row_number() OVER (PARTITION BY doc_id
              |                                  ORDER BY pos) AS rn,
@@ -1033,15 +1021,7 @@ object CurationQueries extends QueryCatalog {
             "CAST(n_langs AS BIGINT) AS n_langs",
             "CAST(rk AS BIGINT) AS rk")
       },
-      Some("""WITH tok0 AS (SELECT doc_id, lang,
-             |                   generate_subscripts(string_split(text, ' '),
-             |                                       1) AS pos,
-             |                   unnest(string_split(text, ' ')) AS w
-             |            FROM documents),
-             |tok AS (SELECT doc_id, lang, w,
-             |               row_number() OVER (PARTITION BY doc_id
-             |                                  ORDER BY pos) AS rn
-             |        FROM tok0 WHERE w <> ''),
+      Some(s"""WITH $tokRankSql,
              |head AS (SELECT doc_id, lang,
              |                concat_ws(' ',
              |                  max(CASE WHEN rn = 1 THEN w END),

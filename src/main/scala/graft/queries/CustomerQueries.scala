@@ -732,10 +732,7 @@ object CustomerQueries extends QueryCatalog {
     // ── Day-of-week seasonal index of daily revenue.
     QueryDef("q_weekday_effect",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .groupBy(col("o_orderdate").as("dt"))
-          .agg(sum(expr("CAST(floor(o_totalprice / 100 + 0.5) AS BIGINT)"))
-            .as("x"))
+        val daily = ordersDailyHecto(s, d)
           .localCheckpoint(false) // calendar-bounded
         // dow 0 = Monday via epoch-day arithmetic — Spark's dayofweek
         // (Sun=1) and DuckDB's (Sun=0) disagree, this does not.
@@ -751,11 +748,7 @@ object CustomerQueries extends QueryCatalog {
                |  div (CAST(rt AS $dec) * days) AS BIGINT)
                |  AS index_e6""".stripMargin)
       },
-      Some("""WITH daily AS (
-             |  SELECT CAST(o_orderdate AS DATE) AS dt,
-             |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS x
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersDailyHectoSql,
              |dow AS (SELECT CAST(datediff('day', DATE '1970-01-05', dt)
              |            % 7 AS BIGINT) AS dow,
              |          CAST(count(*) AS BIGINT) AS days,

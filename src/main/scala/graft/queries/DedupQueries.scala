@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Dedup, FuzzyJoin, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication and entity resolution over the documents, parts and
@@ -111,6 +112,32 @@ object DedupQueries extends QueryCatalog {
        | WHERE i.inter * 1000000 >= $tauE6 * (sa.sz + sb.sz - i.inter))"""
       .stripMargin
 
+  /** [[nearAug]] and its connected components (id, cluster_id) over the
+    * strong candidate pairs (n_eq ≥ 6 of 8). */
+  private def nearDupClusters(s: org.apache.spark.sql.SparkSession,
+                              d: String) = {
+    val docs = nearAug(s, d)
+    val cand = Dedup.candidates(Dedup.minhash(Dedup.shingles(docs)))
+    val edges = cand.filter(col("n_eq") >= 6)
+      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+    (docs, Dedup.connectedComponents(docs.select(col("doc_id").as("id")), edges))
+  }
+
+  /** DuckDB twin of [[nearDupClusters]] before the min-label rollup:
+    * CTEs `cand`, `e2`, `nodes` and the recursive closure `reach`
+    * (id, label); the caller's WITH must be RECURSIVE. */
+  private val nearDupReachSql =
+    s"""cand AS (SELECT * FROM ${candSql(nearAugSql)} c0),
+      |e2 AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE n_eq >= 6
+      |       UNION ALL
+      |       SELECT doc_b AS a, doc_a AS b FROM cand WHERE n_eq >= 6),
+      |nodes AS (SELECT doc_id FROM $nearAugSql docs),
+      |reach(id, label) AS (
+      |  SELECT doc_id, doc_id FROM nodes
+      |  UNION
+      |  SELECT e2.b, r.label FROM reach r JOIN e2 ON e2.a = r.id
+      |)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     /* Deduplication over the `documents` table (SURVEY.md §7.4 / the
@@ -137,25 +164,11 @@ object DedupQueries extends QueryCatalog {
     //    min-label transitive closure as a recursive CTE.
     QueryDef("q_dedup_clusters",
       (s, d) => {
-        val docs = nearAug(s, d)
-        val cand = Dedup.candidates(Dedup.minhash(Dedup.shingles(docs)))
-        val edges = cand.filter(col("n_eq") >= 6)
-          .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        val cc = Dedup.connectedComponents(docs.select(col("doc_id").as("id")), edges)
-          .withColumnRenamed("id", "doc_id")
+        val cc = nearDupClusters(s, d)._2.withColumnRenamed("id", "doc_id")
         val sz = cc.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_sz"))
         cc.join(sz, "cluster_id").select("doc_id", "cluster_id", "cluster_sz")
       },
-      Some(s"""WITH RECURSIVE cand AS (SELECT * FROM ${candSql(nearAugSql)} c0),
-              |e2 AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE n_eq >= 6
-              |       UNION ALL
-              |       SELECT doc_b AS a, doc_a AS b FROM cand WHERE n_eq >= 6),
-              |nodes AS (SELECT doc_id FROM $nearAugSql docs),
-              |reach(id, label) AS (
-              |  SELECT doc_id, doc_id FROM nodes
-              |  UNION
-              |  SELECT e2.b, r.label FROM reach r JOIN e2 ON e2.a = r.id
-              |),
+      Some(s"""WITH RECURSIVE $nearDupReachSql,
               |cc AS (SELECT id AS doc_id, min(label) AS cluster_id FROM reach GROUP BY id),
               |sz AS (SELECT cluster_id, count(*) AS cluster_sz FROM cc GROUP BY 1)
               |SELECT cc.doc_id, cc.cluster_id, sz.cluster_sz
@@ -184,26 +197,13 @@ object DedupQueries extends QueryCatalog {
     //    clusters. Observed as counts so the result is stable-size.
     QueryDef("q_dedup_keep",
       (s, d) => {
-        val docs = nearAug(s, d)
-        val cand = Dedup.candidates(Dedup.minhash(Dedup.shingles(docs)))
-        val edges = cand.filter(col("n_eq") >= 6)
-          .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        val cc = Dedup.connectedComponents(docs.select(col("doc_id").as("id")), edges)
+        val (docs, cc) = nearDupClusters(s, d)
         val kept = cc.filter(col("id") === col("cluster_id"))
         kept.agg(count(lit(1)).as("kept"))
           .crossJoin(docs.agg(count(lit(1)).as("total")))
           .select(col("total"), col("kept"), (col("total") - col("kept")).as("dropped"))
       },
-      Some(s"""WITH RECURSIVE cand AS (SELECT * FROM ${candSql(nearAugSql)} c0),
-              |e2 AS (SELECT doc_a AS a, doc_b AS b FROM cand WHERE n_eq >= 6
-              |       UNION ALL
-              |       SELECT doc_b AS a, doc_a AS b FROM cand WHERE n_eq >= 6),
-              |nodes AS (SELECT doc_id FROM $nearAugSql docs),
-              |reach(id, label) AS (
-              |  SELECT doc_id, doc_id FROM nodes
-              |  UNION
-              |  SELECT e2.b, r.label FROM reach r JOIN e2 ON e2.a = r.id
-              |),
+      Some(s"""WITH RECURSIVE $nearDupReachSql,
               |cc AS (SELECT id, min(label) AS cluster_id FROM reach GROUP BY id)
               |SELECT (SELECT count(*) FROM nodes) AS total,
               |       count(*) AS kept,

@@ -4,6 +4,7 @@ import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Anomaly, Quantiles, Ranks}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Descriptive and robust statistics: exact percentiles and medians, robust
@@ -12,6 +13,24 @@ import org.apache.spark.sql.functions._
 object DescriptiveQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** Customer balances in cents ranked within their segment: (seg, ck,
+    * v, rn, n = segment size). */
+  private def segBalanceRanks(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d)
+      .select(col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
+        floor(col("c_acctbal") * 100 + 0.5).cast("long").as("v"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("seg")).orderBy(col("v"), col("ck"))))
+      .withColumn("n", count(lit(1)).over(
+        Window.partitionBy(col("seg"))))
+
+  /** Customer balance cents per segment: CTE `u` (seg, ck, v). */
+  private val segBalanceSql =
+    """u AS (SELECT c_mktsegment AS seg, c_custkey AS ck,
+      |                 CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
+      |                   AS v
+      |          FROM customer)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -404,14 +423,7 @@ object DescriptiveQueries extends QueryCatalog {
     //    balance cents per segment.
     QueryDef("q_robust_shape",
       (s, d) => {
-        val u = Tables.customer(s, d)
-          .select(col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
-            floor(col("c_acctbal") * 100 + 0.5).cast("long").as("v"))
-        val ranked = u
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("seg")).orderBy(col("v"), col("ck"))))
-          .withColumn("n", count(lit(1)).over(
-            Window.partitionBy(col("seg"))))
+        val ranked = segBalanceRanks(s, d)
           .localCheckpoint(false) // 7 octile picks off one rank pass
         val oct = (1 to 7).map { k =>
           ranked.where(col("rn") === expr(s"($k * n + 7) div 8"))
@@ -436,10 +448,7 @@ object DescriptiveQueries extends QueryCatalog {
           s"""SELECT seg, n, $k AS k, v AS e FROM ranked
              |WHERE rn = ($k * n + 7) // 8""".stripMargin
         }.mkString("\nUNION ALL\n")
-        s"""WITH u AS (SELECT c_mktsegment AS seg, c_custkey AS ck,
-           |                 CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-           |                   AS v
-           |          FROM customer),
+        s"""WITH $segBalanceSql,
            |ranked AS (SELECT seg, v,
            |                  row_number() OVER (PARTITION BY seg
            |                    ORDER BY v, ck) AS rn,
@@ -509,14 +518,7 @@ object DescriptiveQueries extends QueryCatalog {
     //    floor/ceil to integers identically in both engines).
     QueryDef("q_median_ci",
       (s, d) => {
-        val u = Tables.customer(s, d)
-          .select(col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
-            floor(col("c_acctbal") * 100 + 0.5).cast("long").as("v"))
-        val ranked = u
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("seg")).orderBy(col("v"), col("ck"))))
-          .withColumn("n", count(lit(1)).over(
-            Window.partitionBy(col("seg"))))
+        val ranked = segBalanceRanks(s, d)
           .withColumn("lo_rn", expr(
             "greatest(CAST(floor((CAST(n AS DOUBLE) - CAST('1.96' AS " +
               "DOUBLE) * sqrt(CAST(n AS DOUBLE))) / CAST('2.0' AS DOUBLE))" +
@@ -535,10 +537,7 @@ object DescriptiveQueries extends QueryCatalog {
       Some {
         def pick(cond: String, nm: String) =
           s"""SELECT seg, n, v AS $nm FROM ranked WHERE $cond"""
-        s"""WITH u AS (SELECT c_mktsegment AS seg, c_custkey AS ck,
-           |                 CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)
-           |                   AS v
-           |          FROM customer),
+        s"""WITH $segBalanceSql,
            |ranked AS (
            |  SELECT seg, v,
            |         row_number() OVER (PARTITION BY seg ORDER BY v, ck)
@@ -600,11 +599,7 @@ object DescriptiveQueries extends QueryCatalog {
     //    an exactly-representable integer argument (< 2^53).
     QueryDef("q_grubbs",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
-          .groupBy(col("day"))
-          .agg(sum(col("cents")).as("sc"), count(lit(1)).as("cnt"))
+        val daily = eventsDailyCents(s, d)
           .withColumn("x", expr("sc div cnt"))
         val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(expr("x * x")).as("sxx"))
@@ -621,11 +616,7 @@ object DescriptiveQueries extends QueryCatalog {
               |  CAST(n * (n * sxx - sx * sx) AS DOUBLE)
               |    / CAST(n - 1 AS DOUBLE))) AS BIGINT)) AS g_e6""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(sum(CAST(floor(value * 100 + 0.5)
-             |                        AS BIGINT)) AS BIGINT) AS sc,
-             |                      CAST(count(*) AS BIGINT) AS cnt
-             |               FROM events GROUP BY 1),
+      Some(s"""WITH $eventsDailyCentsSql,
              |x AS (SELECT day, sc // cnt AS x FROM daily),
              |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
              |               CAST(sum(x) AS BIGINT) AS sx,
@@ -693,9 +684,7 @@ object DescriptiveQueries extends QueryCatalog {
     //    constant c = 1.1926 is applied in e4 fixed point.
     QueryDef("q_sn_scale",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = eventsPerDay(s, d)
           .localCheckpoint(false) // both sides of the pair grid
         val pairs = daily.as("a")
           .crossJoin(daily.as("b"))
@@ -717,9 +706,7 @@ object DescriptiveQueries extends QueryCatalog {
             "CAST(di AS BIGINT) AS sn_raw",
             "di * 11926 div 10000 AS sn_e0")
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDaySql,
              |pairs AS (SELECT a.day AS day, abs(a.c - b.c) AS ad
              |          FROM daily a CROSS JOIN daily b
              |          WHERE a.day <> b.day),

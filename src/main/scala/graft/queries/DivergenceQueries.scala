@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Sketches, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distribution divergences and distances: KL, JS, Hellinger, Renyi, PSI,
@@ -10,6 +11,103 @@ import org.apache.spark.sql.functions._
 object DivergenceQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** Region × segment marginals of the Sinkhorn queries: row sums
+    * (rg, r) and column sums with the segment index (seg, cm, sj). */
+  private def sinkhornAxes(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val base = Tables.orders(s, d)
+      .join(broadcast(Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_nationkey"),
+          col("c_mktsegment").as("seg"))),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)
+        .select(col("n_nationkey"), col("n_regionkey").as("rg"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .selectExpr("CAST(rg AS BIGINT) AS rg", "seg")
+      .localCheckpoint(false) // row + column marginals
+    val rowM = base.groupBy(col("rg")).agg(count(lit(1)).as("r"))
+    val colM = base.groupBy(col("seg")).agg(count(lit(1)).as("cm"))
+    (rowM, colM.selectExpr("seg", "cm",
+      """CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0 WHEN 'BUILDING' THEN 1
+        |WHEN 'FURNITURE' THEN 2 WHEN 'HOUSEHOLD' THEN 3
+        |ELSE 4 END AS BIGINT) AS sj""".stripMargin))
+  }
+
+  /** Two Sinkhorn iterations (row scale, column scale, integer e6
+    * ratios) over the kernel `grid` (rg, seg, r, cm, p), then the plan
+    * with the marginal L1 errors of the final pass (plan mass is e6
+    * units). */
+  private def sinkhornPlan(grid: DataFrame): DataFrame = {
+    def rowScale(df: DataFrame) = df
+      .withColumn("rs", sum(col("p")).over(Window.partitionBy("rg")))
+      .selectExpr("rg", "seg", "r", "cm",
+        s"CAST(p AS $dec) * r * 1000000 div rs AS p")
+    def colScale(df: DataFrame) = df
+      .withColumn("cs", sum(col("p")).over(Window.partitionBy("seg")))
+      .selectExpr("rg", "seg", "r", "cm",
+        s"CAST(p AS $dec) * cm * 1000000 div cs AS p")
+    val c2 = colScale(rowScale(colScale(rowScale(grid))))
+      .localCheckpoint(false)
+    val rowErr = c2.groupBy(col("rg"), col("r"))
+      .agg(sum(col("p")).as("rs"))
+      .agg(sum(expr(s"abs(rs - CAST(r AS $dec) * 1000000)"))
+        .as("row_l1_e6"))
+    val colErr = c2.groupBy(col("seg"), col("cm"))
+      .agg(sum(col("p")).as("cs"))
+      .agg(sum(expr(s"abs(cs - CAST(cm AS $dec) * 1000000)"))
+        .as("col_l1_e6"))
+    c2.selectExpr("rg", "seg", "CAST(p AS BIGINT) AS plan_e6")
+      .crossJoin(broadcast(rowErr
+        .selectExpr("CAST(row_l1_e6 AS BIGINT) AS row_l1_e6")))
+      .crossJoin(broadcast(colErr
+        .selectExpr("CAST(col_l1_e6 AS BIGINT) AS col_l1_e6")))
+  }
+
+  /** DuckDB twin of [[sinkhornAxes]]: CTEs `base`, `rm` (rg, r), `cm0`,
+    * `si` (seg, cm, sj). */
+  private val sinkhornAxesSql =
+    """base AS (
+      |  SELECT CAST(n_regionkey AS BIGINT) AS rg,
+      |         c_mktsegment AS seg
+      |  FROM orders
+      |  JOIN customer ON c_custkey = o_custkey
+      |  JOIN nation ON n_nationkey = c_nationkey),
+      |rm AS (SELECT rg, CAST(count(*) AS BIGINT) AS r
+      |       FROM base GROUP BY 1),
+      |cm0 AS (SELECT seg, CAST(count(*) AS BIGINT) AS cm
+      |        FROM base GROUP BY 1),
+      |si AS (SELECT seg, cm,
+      |         CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0
+      |           WHEN 'BUILDING' THEN 1 WHEN 'FURNITURE' THEN 2
+      |           WHEN 'HOUSEHOLD' THEN 3 ELSE 4 END AS BIGINT)
+      |           AS sj
+      |       FROM cm0)""".stripMargin
+
+  /** DuckDB twin of [[sinkhornPlan]] over CTE `grid`. */
+  private val sinkhornIterSql =
+    """r1 AS (SELECT rg, seg, r, cm,
+      |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
+      |           AS p FROM grid),
+      |c1 AS (SELECT rg, seg, r, cm,
+      |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
+      |           AS p FROM r1),
+      |r2 AS (SELECT rg, seg, r, cm,
+      |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
+      |           AS p FROM c1),
+      |c2 AS (SELECT rg, seg, r, cm,
+      |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
+      |           AS p FROM r2),
+      |re AS (SELECT CAST(sum(abs(rs - CAST(r AS HUGEINT)
+      |         * 1000000)) AS BIGINT) AS row_l1_e6
+      |       FROM (SELECT rg, r, sum(p) AS rs FROM c2
+      |             GROUP BY 1, 2)),
+      |ce AS (SELECT CAST(sum(abs(cs - CAST(cm AS HUGEINT)
+      |         * 1000000)) AS BIGINT) AS col_l1_e6
+      |       FROM (SELECT seg, cm, sum(p) AS cs FROM c2
+      |             GROUP BY 1, 2))
+      |SELECT rg, seg, CAST(p AS BIGINT) AS plan_e6,
+      |       row_l1_e6, col_l1_e6
+      |FROM c2 CROSS JOIN re CROSS JOIN ce""".stripMargin
 
   /** Sign-factored truncating division (SURVEY.md:152 convention):
     * Spark `div` truncates, DuckDB `//` floors — they agree only on
@@ -161,7 +259,6 @@ object DivergenceQueries extends QueryCatalog {
     //    one double close.
     QueryDef("q_energy_distance",
       (s, d) => {
-        val dec = "decimal(38,0)"
         // Gap sweep over the distinct-VALUE axis: rows within a tie
         // contribute zero gap, so cumulative counts at each distinct
         // value (inclusive of its ties) reproduce the per-doc sweep
@@ -374,106 +471,19 @@ object DivergenceQueries extends QueryCatalog {
     // ── Two Sinkhorn iterations on the region×segment matrix.
     QueryDef("q_sinkhorn_plan",
       (s, d) => {
-        val base = Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_nationkey"),
-              col("c_mktsegment").as("seg"))),
-            col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_regionkey").as("rg"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .selectExpr("CAST(rg AS BIGINT) AS rg", "seg")
-          .localCheckpoint(false) // row + column marginals
-        val rowM = base.groupBy(col("rg")).agg(count(lit(1)).as("r"))
-        val colM = base.groupBy(col("seg")).agg(count(lit(1)).as("cm"))
-        val segIdx = colM.selectExpr("seg", "cm",
-          """CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0 WHEN 'BUILDING' THEN 1
-            |WHEN 'FURNITURE' THEN 2 WHEN 'HOUSEHOLD' THEN 3
-            |ELSE 4 END AS BIGINT) AS sj""".stripMargin)
+        val (rowM, segIdx) = sinkhornAxes(s, d)
         // kernel grid: K = 1e6 div (1 + |rg − sj|), plan p0 = K
         val grid = rowM.crossJoin(broadcast(segIdx))
           .selectExpr("rg", "seg", "r", "cm",
             "1000000 div (1 + abs(rg - sj)) AS p")
-        // iteration 1: row scale then column scale (integer e6 ratios)
-        val r1 = grid
-          .withColumn("rs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("rg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * r * 1000000 div rs AS p")
-        val c1 = r1
-          .withColumn("cs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("seg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * cm * 1000000 div cs AS p")
-        val r2 = c1
-          .withColumn("rs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("rg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * r * 1000000 div rs AS p")
-        val c2 = r2
-          .withColumn("cs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("seg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * cm * 1000000 div cs AS p")
-          .localCheckpoint(false)
-        // marginal errors of the final plan (plan mass is e6 units)
-        val rowErr = c2.groupBy(col("rg"), col("r"))
-          .agg(sum(col("p")).as("rs"))
-          .agg(sum(expr(s"abs(rs - CAST(r AS $dec) * 1000000)"))
-            .as("row_l1_e6"))
-        val colErr = c2.groupBy(col("seg"), col("cm"))
-          .agg(sum(col("p")).as("cs"))
-          .agg(sum(expr(s"abs(cs - CAST(cm AS $dec) * 1000000)"))
-            .as("col_l1_e6"))
-        c2.selectExpr("rg", "seg", "CAST(p AS BIGINT) AS plan_e6")
-          .crossJoin(broadcast(rowErr
-            .selectExpr("CAST(row_l1_e6 AS BIGINT) AS row_l1_e6")))
-          .crossJoin(broadcast(colErr
-            .selectExpr("CAST(col_l1_e6 AS BIGINT) AS col_l1_e6")))
+        sinkhornPlan(grid)
       },
-      Some("""WITH base AS (
-             |  SELECT CAST(n_regionkey AS BIGINT) AS rg,
-             |         c_mktsegment AS seg
-             |  FROM orders
-             |  JOIN customer ON c_custkey = o_custkey
-             |  JOIN nation ON n_nationkey = c_nationkey),
-             |rm AS (SELECT rg, CAST(count(*) AS BIGINT) AS r
-             |       FROM base GROUP BY 1),
-             |cm0 AS (SELECT seg, CAST(count(*) AS BIGINT) AS cm
-             |        FROM base GROUP BY 1),
-             |si AS (SELECT seg, cm,
-             |         CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0
-             |           WHEN 'BUILDING' THEN 1 WHEN 'FURNITURE' THEN 2
-             |           WHEN 'HOUSEHOLD' THEN 3 ELSE 4 END AS BIGINT)
-             |           AS sj
-             |       FROM cm0),
+      Some(s"""WITH $sinkhornAxesSql,
              |grid AS (SELECT rg, seg, r, cm,
              |           CAST(1000000 // (1 + abs(rg - sj)) AS HUGEINT)
              |             AS p
              |         FROM rm CROSS JOIN si),
-             |r1 AS (SELECT rg, seg, r, cm,
-             |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
-             |           AS p FROM grid),
-             |c1 AS (SELECT rg, seg, r, cm,
-             |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
-             |           AS p FROM r1),
-             |r2 AS (SELECT rg, seg, r, cm,
-             |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
-             |           AS p FROM c1),
-             |c2 AS (SELECT rg, seg, r, cm,
-             |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
-             |           AS p FROM r2),
-             |re AS (SELECT CAST(sum(abs(rs - CAST(r AS HUGEINT)
-             |         * 1000000)) AS BIGINT) AS row_l1_e6
-             |       FROM (SELECT rg, r, sum(p) AS rs FROM c2
-             |             GROUP BY 1, 2)),
-             |ce AS (SELECT CAST(sum(abs(cs - CAST(cm AS HUGEINT)
-             |         * 1000000)) AS BIGINT) AS col_l1_e6
-             |       FROM (SELECT seg, cm, sum(p) AS cs FROM c2
-             |             GROUP BY 1, 2))
-             |SELECT rg, seg, CAST(p AS BIGINT) AS plan_e6,
-             |       row_l1_e6, col_l1_e6
-             |FROM c2 CROSS JOIN re CROSS JOIN ce""".stripMargin)),
+             |$sinkhornIterSql""".stripMargin)),
 
     /* Gibbs-kernel Sinkhorn (`q_sinkhorn_gibbs`): the entropic-OT-
      * faithful kernel K = e^(−cost/ε) = 2^(−cost·log₂e/ε) through the
@@ -484,97 +494,21 @@ object DivergenceQueries extends QueryCatalog {
     // ── Sinkhorn with the entropic Gibbs kernel 2^(−cost·log₂e/ε).
     QueryDef("q_sinkhorn_gibbs",
       (s, d) => {
-        val base = Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_nationkey"),
-              col("c_mktsegment").as("seg"))),
-            col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_regionkey").as("rg"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .selectExpr("CAST(rg AS BIGINT) AS rg", "seg")
-          .localCheckpoint(false)
-        val rowM = base.groupBy(col("rg")).agg(count(lit(1)).as("r"))
-        val colM = base.groupBy(col("seg")).agg(count(lit(1)).as("cm"))
-        val segIdx = colM.selectExpr("seg", "cm",
-          """CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0 WHEN 'BUILDING' THEN 1
-            |WHEN 'FURNITURE' THEN 2 WHEN 'HOUSEHOLD' THEN 3
-            |ELSE 4 END AS BIGINT) AS sj""".stripMargin)
+        val (rowM, segIdx) = sinkhornAxes(s, d)
         // ε = 2: exponent y = |rg−sj| · log₂e / 2 in e6 units
         val grid = rowM.crossJoin(broadcast(segIdx))
           .withColumn("y", expr("abs(rg - sj) * 1442695 div 2"))
           .withColumn("p", Sketches.pow2NegE6Expr("y"))
           .selectExpr("rg", "seg", "r", "cm", "p")
-        def rowScale(df: org.apache.spark.sql.DataFrame) = df
-          .withColumn("rs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("rg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * r * 1000000 div rs AS p")
-        def colScale(df: org.apache.spark.sql.DataFrame) = df
-          .withColumn("cs", sum(col("p")).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("seg")))
-          .selectExpr("rg", "seg", "r", "cm",
-            s"CAST(p AS $dec) * cm * 1000000 div cs AS p")
-        val c2 = colScale(rowScale(colScale(rowScale(grid))))
-          .localCheckpoint(false)
-        val rowErr = c2.groupBy(col("rg"), col("r"))
-          .agg(sum(col("p")).as("rs"))
-          .agg(sum(expr(s"abs(rs - CAST(r AS $dec) * 1000000)"))
-            .as("row_l1_e6"))
-        val colErr = c2.groupBy(col("seg"), col("cm"))
-          .agg(sum(col("p")).as("cs"))
-          .agg(sum(expr(s"abs(cs - CAST(cm AS $dec) * 1000000)"))
-            .as("col_l1_e6"))
-        c2.selectExpr("rg", "seg", "CAST(p AS BIGINT) AS plan_e6")
-          .crossJoin(broadcast(rowErr
-            .selectExpr("CAST(row_l1_e6 AS BIGINT) AS row_l1_e6")))
-          .crossJoin(broadcast(colErr
-            .selectExpr("CAST(col_l1_e6 AS BIGINT) AS col_l1_e6")))
+        sinkhornPlan(grid)
       },
       Some {
         val p0 = Sketches.pow2NegE6Sql("abs(rg - sj) * 1442695 // 2")
-        s"""WITH base AS (
-           |  SELECT CAST(n_regionkey AS BIGINT) AS rg,
-           |         c_mktsegment AS seg
-           |  FROM orders
-           |  JOIN customer ON c_custkey = o_custkey
-           |  JOIN nation ON n_nationkey = c_nationkey),
-           |rm AS (SELECT rg, CAST(count(*) AS BIGINT) AS r
-           |       FROM base GROUP BY 1),
-           |cm0 AS (SELECT seg, CAST(count(*) AS BIGINT) AS cm
-           |        FROM base GROUP BY 1),
-           |si AS (SELECT seg, cm,
-           |         CAST(CASE seg WHEN 'AUTOMOBILE' THEN 0
-           |           WHEN 'BUILDING' THEN 1 WHEN 'FURNITURE' THEN 2
-           |           WHEN 'HOUSEHOLD' THEN 3 ELSE 4 END AS BIGINT)
-           |           AS sj
-           |       FROM cm0),
+        s"""WITH $sinkhornAxesSql,
            |grid AS (SELECT rg, seg, r, cm,
            |           CAST($p0 AS HUGEINT) AS p
            |         FROM rm CROSS JOIN si),
-           |r1 AS (SELECT rg, seg, r, cm,
-           |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
-           |           AS p FROM grid),
-           |c1 AS (SELECT rg, seg, r, cm,
-           |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
-           |           AS p FROM r1),
-           |r2 AS (SELECT rg, seg, r, cm,
-           |         p * r * 1000000 // (sum(p) OVER (PARTITION BY rg))
-           |           AS p FROM c1),
-           |c2 AS (SELECT rg, seg, r, cm,
-           |         p * cm * 1000000 // (sum(p) OVER (PARTITION BY seg))
-           |           AS p FROM r2),
-           |re AS (SELECT CAST(sum(abs(rs - CAST(r AS HUGEINT)
-           |         * 1000000)) AS BIGINT) AS row_l1_e6
-           |       FROM (SELECT rg, r, sum(p) AS rs FROM c2
-           |             GROUP BY 1, 2)),
-           |ce AS (SELECT CAST(sum(abs(cs - CAST(cm AS HUGEINT)
-           |         * 1000000)) AS BIGINT) AS col_l1_e6
-           |       FROM (SELECT seg, cm, sum(p) AS cs FROM c2
-           |             GROUP BY 1, 2))
-           |SELECT rg, seg, CAST(p AS BIGINT) AS plan_e6,
-           |       row_l1_e6, col_l1_e6
-           |FROM c2 CROSS JOIN re CROSS JOIN ce""".stripMargin
+           |$sinkhornIterSql""".stripMargin
       }),
 
     /* 1-D Wasserstein (`q_wasserstein_1d`): earth-mover distance between
@@ -586,14 +520,7 @@ object DivergenceQueries extends QueryCatalog {
     //    order-value distributions, thousand-dollar buckets.
     QueryDef("q_wasserstein_1d",
       (s, d) => {
-        val g = Tables.orders(s, d)
-          .select(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)" +
-            " div 100000").as("bucket"),
-            col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("urgent"))
-          .groupBy(col("bucket"))
-          .agg(sum(when(col("urgent"), 1L).otherwise(0L)).as("ca"),
-            sum(when(col("urgent"), 0L).otherwise(1L)).as("cb"))
-        val tot = g.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+        val (g, tot) = urgentBuckets(s, d)
         val w = Window.orderBy(col("bucket"))
         g.crossJoin(broadcast(tot))
           .withColumn("cum_a", sum(col("ca")).over(w))
@@ -608,19 +535,7 @@ object DivergenceQueries extends QueryCatalog {
             s"CAST(s * 1000000 div (CAST(na AS $dec) * nb) AS BIGINT)" +
               " AS w1_buckets_e6")
       },
-      Some("""WITH b AS (
-             |  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-             |           // 100000 AS bucket,
-             |         o_orderpriority IN ('1-URGENT', '2-HIGH') AS urgent
-             |  FROM orders),
-             |g AS (SELECT bucket,
-             |        CAST(sum(CASE WHEN urgent THEN 1 ELSE 0 END)
-             |          AS BIGINT) AS ca,
-             |        CAST(sum(CASE WHEN urgent THEN 0 ELSE 1 END)
-             |          AS BIGINT) AS cb
-             |      FROM b GROUP BY 1),
-             |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-             |               CAST(sum(cb) AS BIGINT) AS nb FROM g),
+      Some(s"""WITH $urgentBucketsSql,
              |c AS (SELECT bucket, ca, cb, na, nb,
              |        sum(ca) OVER (ORDER BY bucket) AS cum_a,
              |        sum(cb) OVER (ORDER BY bucket) AS cum_b,
@@ -706,14 +621,7 @@ object DivergenceQueries extends QueryCatalog {
     //    order-value bucket distributions.
     QueryDef("q_jsd_buckets",
       (s, d) => {
-        val g = Tables.orders(s, d)
-          .select(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)" +
-            " div 100000").as("bucket"),
-            col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("urgent"))
-          .groupBy(col("bucket"))
-          .agg(sum(when(col("urgent"), 1L).otherwise(0L)).as("ca"),
-            sum(when(col("urgent"), 0L).otherwise(1L)).as("cb"))
-        val tot = g.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+        val (g, tot) = urgentBuckets(s, d)
         // log arguments stay BIGINT (2·c·n ≤ ~10¹⁸ headroom; the shared
         // log₂ shifts need an integral type in both engines)
         val t = g.crossJoin(broadcast(tot))
@@ -744,19 +652,7 @@ object DivergenceQueries extends QueryCatalog {
         val la = Bm25.log2E6Sql("2 * ca * nb")
         val lb = Bm25.log2E6Sql("2 * cb * na")
         val lm = Bm25.log2E6Sql("mnum")
-        s"""WITH b AS (
-           |  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-           |           // 100000 AS bucket,
-           |         o_orderpriority IN ('1-URGENT', '2-HIGH') AS urgent
-           |  FROM orders),
-           |g AS (SELECT bucket,
-           |        CAST(sum(CASE WHEN urgent THEN 1 ELSE 0 END)
-           |          AS BIGINT) AS ca,
-           |        CAST(sum(CASE WHEN urgent THEN 0 ELSE 1 END)
-           |          AS BIGINT) AS cb
-           |      FROM b GROUP BY 1),
-           |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-           |               CAST(sum(cb) AS BIGINT) AS nb FROM g),
+        s"""WITH $urgentBucketsSql,
            |c AS (SELECT bucket, ca, cb, na, nb,
            |        ca * nb + cb * na AS mnum
            |      FROM g CROSS JOIN tot),

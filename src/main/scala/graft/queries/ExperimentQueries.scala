@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Dedup, Experiment, OffPolicy}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Online experiments and inference machinery: A/B reads, sequential tests,
@@ -42,6 +43,38 @@ object ExperimentQueries extends QueryCatalog {
 
   private def byCritArr: String = byCritE6.mkString("array(", ", ", ")")
   private def byCritList: String = byCritE6.mkString("[", ", ", "]")
+  /** Orders per nation and how many are urgent: (n_name, n, k). */
+  private def nationUrgent(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .join(Tables.customer(s, d).select(col("c_custkey"),
+        col("c_nationkey")), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)
+        .select(col("n_nationkey"), col("n_name"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .groupBy(col("n_name"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("o_orderpriority") === "1-URGENT", 1L)
+          .otherwise(0L)).as("k"))
+
+  /** Spark SQL z-score (e6) of a nation's urgent share k / n against the
+    * pooled share kk / nn. */
+  private val nationUrgentZ =
+    """CAST(round((CAST(k AS DOUBLE) * CAST(nn AS DOUBLE)
+      |        - CAST(n AS DOUBLE) * CAST(kk AS DOUBLE))
+      |      / sqrt(CAST(n AS DOUBLE) * CAST(kk AS DOUBLE)
+      |             * CAST(nn - kk AS DOUBLE))
+      |   * CAST('1000000' AS DOUBLE), 0) AS BIGINT)""".stripMargin
+
+  /** DuckDB twin of [[nationUrgent]] (CTE `per`). */
+  private val nationUrgentSql =
+    """per AS (
+      |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
+      |         CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
+      |                       THEN 1 ELSE 0 END) AS BIGINT) AS k
+      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  JOIN nation ON c_nationkey = n_nationkey
+      |  GROUP BY 1)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── A/B readout: users split by id parity, conversion = any premium
@@ -461,11 +494,7 @@ object ExperimentQueries extends QueryCatalog {
     //    p = (1 + #{|placebo| ≥ |real|}) / 21 in e6.
     QueryDef("q_permutation_test",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("spend"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"), "left")
+        val u = customerSpend(s, d)
           .select(col("c_custkey").as("ck"),
             coalesce(col("spend"), lit(0L)).as("y"))
         val splits = u.withColumn("k", explode(expr("sequence(0, 20)")))
@@ -497,10 +526,7 @@ object ExperimentQueries extends QueryCatalog {
       Some {
         val h = PortableSql.hash48(
           "concat(CAST(ck AS VARCHAR), '#', CAST(k AS VARCHAR))", "'perm'")
-        s"""WITH spend AS (SELECT o_custkey,
-           |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-           |                   AS BIGINT)) AS BIGINT) AS spend
-           |               FROM orders GROUP BY 1),
+        s"""WITH $customerSpendSql,
            |u AS (SELECT c_custkey AS ck, coalesce(spend, 0) AS y
            |      FROM customer LEFT JOIN spend ON c_custkey = o_custkey),
            |splits AS (
@@ -671,26 +697,12 @@ object ExperimentQueries extends QueryCatalog {
     //    ladder comparison is exact-integer.
     QueryDef("q_holm_step",
       (s, d) => {
-        val per = Tables.orders(s, d)
-          .join(Tables.customer(s, d).select(col("c_custkey"),
-            col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_name"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("o_orderpriority") === "1-URGENT", 1L)
-              .otherwise(0L)).as("k"))
+        val per = nationUrgent(s, d)
           .localCheckpoint(false) // nation axis; reused by the pooled rollup
         val tot = per.agg(sum(col("n")).as("nn"), sum(col("k")).as("kk"),
           count(lit(1)).as("m"))
         per.crossJoin(broadcast(tot))
-          .withColumn("z_e6", expr(
-            """CAST(round((CAST(k AS DOUBLE) * CAST(nn AS DOUBLE)
-              |        - CAST(n AS DOUBLE) * CAST(kk AS DOUBLE))
-              |      / sqrt(CAST(n AS DOUBLE) * CAST(kk AS DOUBLE)
-              |             * CAST(nn - kk AS DOUBLE))
-              |   * CAST('1000000' AS DOUBLE), 0) AS BIGINT)""".stripMargin))
+          .withColumn("z_e6", expr(nationUrgentZ))
           .withColumn("rk", row_number().over(
             Window.orderBy(abs(col("z_e6")).desc, col("n_name"))))
           .withColumn("crit_e6",
@@ -704,13 +716,7 @@ object ExperimentQueries extends QueryCatalog {
             "CAST(k AS BIGINT) AS k", "z_e6", "CAST(rk AS BIGINT) AS rk",
             "crit_e6", "CAST(reject AS BIGINT) AS reject")
       },
-      Some(s"""WITH per AS (
-             |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
-             |         CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-             |                       THEN 1 ELSE 0 END) AS BIGINT) AS k
-             |  FROM orders JOIN customer ON o_custkey = c_custkey
-             |  JOIN nation ON c_nationkey = n_nationkey
-             |  GROUP BY 1),
+      Some(s"""WITH $nationUrgentSql,
              |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
              |               CAST(sum(k) AS BIGINT) AS kk,
              |               CAST(count(*) AS BIGINT) AS m FROM per),
@@ -750,28 +756,14 @@ object ExperimentQueries extends QueryCatalog {
     //    clearing rank (running max from the bottom).
     QueryDef("q_by_fdr",
       (s, d) => {
-        val per = Tables.orders(s, d)
-          .join(Tables.customer(s, d).select(col("c_custkey"),
-            col("c_nationkey")), col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_name"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .groupBy(col("n_name"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("o_orderpriority") === "1-URGENT", 1L)
-              .otherwise(0L)).as("k"))
+        val per = nationUrgent(s, d)
           .localCheckpoint(false) // nation axis; pooled rollup reuses it
         val tot = per.agg(sum(col("n")).as("nn"), sum(col("k")).as("kk"),
           count(lit(1)).as("m"),
           expr("aggregate(sequence(1, CAST(count(1) AS INT)), 0L, " +
             "(acc, i) -> acc + 1000000000 div i)").as("cm_e9"))
         per.crossJoin(broadcast(tot))
-          .withColumn("z_e6", expr(
-            """CAST(round((CAST(k AS DOUBLE) * CAST(nn AS DOUBLE)
-              |        - CAST(n AS DOUBLE) * CAST(kk AS DOUBLE))
-              |      / sqrt(CAST(n AS DOUBLE) * CAST(kk AS DOUBLE)
-              |             * CAST(nn - kk AS DOUBLE))
-              |   * CAST('1000000' AS DOUBLE), 0) AS BIGINT)""".stripMargin))
+          .withColumn("z_e6", expr(nationUrgentZ))
           .withColumn("rk", row_number().over(
             Window.orderBy(abs(col("z_e6")).desc, col("n_name")))
             .cast("long"))
@@ -791,13 +783,7 @@ object ExperimentQueries extends QueryCatalog {
           .selectExpr("n_name AS nation", "z_e6", "rk", "eff_den",
             "crit_e6", "CAST(reject AS BIGINT) AS reject")
       },
-      Some(s"""WITH per AS (
-             |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
-             |         CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
-             |                       THEN 1 ELSE 0 END) AS BIGINT) AS k
-             |  FROM orders JOIN customer ON o_custkey = c_custkey
-             |  JOIN nation ON c_nationkey = n_nationkey
-             |  GROUP BY 1),
+      Some(s"""WITH $nationUrgentSql,
              |hm AS (SELECT CAST(sum(1000000000 // i.i) AS BIGINT)
              |                AS cm_e9
              |       FROM (SELECT unnest(generate_series(1,

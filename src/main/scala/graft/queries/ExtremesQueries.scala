@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Sketches}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Tails, extremes and risk: tail-index estimators, GPD/Gumbel/Weibull
@@ -10,6 +11,14 @@ import org.apache.spark.sql.functions._
 object ExtremesQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** [[ordersDailyHectoSql]] keyed by the raw order date (CTE `daily`). */
+  private val ordersDailyHectoDtSql =
+    """daily AS (
+      |  SELECT o_orderdate AS dt,
+      |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
+      |           AS BIGINT)) AS BIGINT) AS x
+      |  FROM orders GROUP BY 1)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -166,11 +175,7 @@ object ExtremesQueries extends QueryCatalog {
     //    beside the exact positional median (both engines identical).
     QueryDef("q_lognormal_fit",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("y"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"))
+        val u = spenders(s, d)
           .select(col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
             col("y")).where(col("y") > 0)
           .withColumn("lg", Bm25.log2E6(col("y")))
@@ -197,10 +202,7 @@ object ExtremesQueries extends QueryCatalog {
       },
       Some {
         val lg = Bm25.log2E6Sql("y")
-        s"""WITH spend AS (SELECT o_custkey,
-           |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-           |                   AS BIGINT)) AS BIGINT) AS y
-           |               FROM orders GROUP BY 1),
+        s"""WITH $spendYSql,
            |u AS (SELECT c_mktsegment AS seg, c_custkey AS ck, y,
            |             CAST($lg AS BIGINT) AS lg
            |      FROM customer JOIN spend ON c_custkey = o_custkey
@@ -230,9 +232,7 @@ object ExtremesQueries extends QueryCatalog {
     //    β̂ = s√6/π, μ̂ = m − γβ̂ with γ, √6/π as literal constants.
     QueryDef("q_block_maxima",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = eventsPerDay(s, d)
         val blocks = daily
           .withColumn("m", expr("day div 30"))
           .groupBy(col("m")).agg(max(col("c")).as("mx"))
@@ -251,9 +251,7 @@ object ExtremesQueries extends QueryCatalog {
               |   * CAST('0.7796968' AS DOUBLE)), 6) AS mu_hat"""
               .stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDaySql,
              |blocks AS (SELECT day // 30 AS m, CAST(max(c) AS BIGINT) AS mx
              |           FROM daily GROUP BY 1),
              |mom AS (SELECT CAST(count(*) AS HUGEINT) AS n,
@@ -286,9 +284,7 @@ object ExtremesQueries extends QueryCatalog {
     //    selects the identical multiset positions.
     QueryDef("q_mean_excess",
       (s, d) => {
-        val v = Tables.orders(s, d)
-          .select(floor(col("o_totalprice") * 100 + 0.5).cast("long")
-            .as("v"))
+        val v = orderCents(s, d)
           .localCheckpoint(false) // histogram + bucket probe + excess pass
         val hist = v.groupBy(expr("v div 100000").as("bkt"))
           .agg(count(lit(1)).as("bc"))
@@ -942,10 +938,7 @@ object ExtremesQueries extends QueryCatalog {
     // ── Record-high revenue days vs the H_n expectation.
     QueryDef("q_records_count",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .groupBy(col("o_orderdate").as("dt"))
-          .agg(sum(expr("CAST(floor(o_totalprice / 100 + 0.5) AS BIGINT)"))
-            .as("x"))
+        val daily = ordersDailyHecto(s, d)
           .localCheckpoint(false) // calendar-bounded, self-joined
         val idx = daily.as("a")
           .join(broadcast(daily.as("b")), col("b.dt") < col("a.dt"),
@@ -960,11 +953,7 @@ object ExtremesQueries extends QueryCatalog {
             sum(expr("(1000000000 div t)")).as("h_e9"))
           .selectExpr("n_days", "records", "h_e9 div 1000 AS expected_e6")
       },
-      Some("""WITH daily AS (
-             |  SELECT o_orderdate AS dt,
-             |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS x
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersDailyHectoDtSql,
              |idx AS (SELECT a.dt, a.x,
              |          CAST(count(b.dt) + 1 AS BIGINT) AS t,
              |          CAST(sum(CASE WHEN b.x >= a.x THEN 1 ELSE 0 END)
@@ -1019,11 +1008,7 @@ object ExtremesQueries extends QueryCatalog {
               |             / CAST('12.0' AS DOUBLE)))) AS BIGINT)
               |END AS rl12_hecto""".stripMargin)
       },
-      Some("""WITH daily AS (
-             |  SELECT o_orderdate AS dt,
-             |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS x
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersDailyHectoDtSql,
              |mx AS (SELECT CAST(date_trunc('month', dt) AS DATE) AS mo,
              |         CAST(max(x) AS BIGINT) AS z
              |       FROM daily GROUP BY 1),

@@ -99,9 +99,7 @@ object ForecastQueries extends QueryCatalog {
     //    start from the same accumulator).
     QueryDef("q_ewma_smooth",
       (s, d) => TimeSeries.ewmaHalf(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some("""WITH e AS (SELECT event_type, epoch_us(ts) AS t, event_id,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events)
@@ -543,7 +541,6 @@ object ForecastQueries extends QueryCatalog {
     //    sign-factored e6 integer arithmetic.
     QueryDef("q_ar2_forecast",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val ax = Tables.events(s, d)
           .groupBy(col("event_type"),
             expr("unix_micros(ts) div 86400000000").as("day"))

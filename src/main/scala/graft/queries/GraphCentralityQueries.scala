@@ -18,7 +18,7 @@ object GraphCentralityQueries extends QueryCatalog {
     * HUGEINT sum promotion off the output schema. */
   private def pageRankSql(iters: Int): String = {
     val head =
-      """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      s"""WITH nodes AS (${RingGraph.nodesSql}),
         |e AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
         |      UNION ALL
         |      SELECT id AS src, (id * 7 + 3) % 100 AS dst FROM nodes WHERE id % 2 = 0),
@@ -38,7 +38,7 @@ object GraphCentralityQueries extends QueryCatalog {
     * the even-node chord weight 1, so mass splits 3:1 instead of 1:1. */
   private def pageRankWeightedSql(iters: Int): String = {
     val head =
-      """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      s"""WITH nodes AS (${RingGraph.nodesSql}),
         |e AS (SELECT id AS src, (id + 1) % 100 AS dst, 3 AS w FROM nodes
         |      UNION ALL
         |      SELECT id AS src, (id * 7 + 3) % 100 AS dst, 1 AS w FROM nodes WHERE id % 2 = 0),
@@ -59,7 +59,7 @@ object GraphCentralityQueries extends QueryCatalog {
     * on ids divisible by 10. */
   private def pprSql(iters: Int): String = {
     val head =
-      """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      s"""WITH nodes AS (${RingGraph.nodesSql}),
         |e AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
         |      UNION ALL
         |      SELECT id AS src, (id * 7 + 3) % 100 AS dst FROM nodes WHERE id % 2 = 0),
@@ -106,7 +106,7 @@ object GraphCentralityQueries extends QueryCatalog {
     * preserving, so the uniform start actually has to converge). */
   private def prConvergedSql(iters: Int): String = {
     val head =
-      """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      s"""WITH nodes AS (${RingGraph.nodesSql}),
         |e AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
         |      UNION
         |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
@@ -127,7 +127,7 @@ object GraphCentralityQueries extends QueryCatalog {
     * on the asymmetric graph with seeds {0, 30, 60}. */
   private def multiSeedSql(iters: Int): String = {
     val head =
-      """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      s"""WITH nodes AS (${RingGraph.nodesSql}),
         |e AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
         |      UNION
         |      SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
@@ -242,8 +242,7 @@ object GraphCentralityQueries extends QueryCatalog {
     //    as chained CTEs — same joins, same truncating division.
     QueryDef("q_pagerank",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
         val edges = nodes
           .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
           .unionByName(nodes.filter(col("id") % 2 === 0)
@@ -256,8 +255,7 @@ object GraphCentralityQueries extends QueryCatalog {
     //    edges carry weight 3, chords weight 1 — mass splits 3:1.
     QueryDef("q_pagerank_weighted",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
         val edges = nodes
           .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"),
             lit(3L).as("w"))
@@ -272,8 +270,7 @@ object GraphCentralityQueries extends QueryCatalog {
     //    — relevance-to-seeds ranking; sinks far from the seeds decay to 0.
     QueryDef("q_pagerank_personalized",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
           .withColumn("is_src", col("id") % 10 === 0)
         val edges = nodes
           .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
@@ -288,13 +285,7 @@ object GraphCentralityQueries extends QueryCatalog {
     //    comes from a pure-Scala simulation of the same integer fixpoint).
     QueryDef("q_pagerank_converged",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
-        val edges = nodes
-          .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-          .unionByName(nodes.filter(col("id") % 3 === 0)
-            .select(col("id").as("src"),
-              ((col("id") * col("id") + 7) % 100).as("dst")))
+        val (nodes, edges) = RingGraph.multi(s, d)
         Graph.pageRankConverged(nodes, edges, 5000000L, 50)
       },
       Some(prConvergedSql(simulatedRounds(5000000L, 50)))),
@@ -304,13 +295,7 @@ object GraphCentralityQueries extends QueryCatalog {
     //    one round-shape. Oracle unrolls the same grain.
     QueryDef("q_pagerank_multiseed",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
-        val edges = nodes
-          .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-          .unionByName(nodes.filter(col("id") % 3 === 0)
-            .select(col("id").as("src"),
-              ((col("id") * col("id") + 7) % 100).as("dst")))
+        val (nodes, edges) = RingGraph.multi(s, d)
         val seeds = nodes.filter(col("id").isin(0, 30, 60))
           .select(col("id").as("seed"))
         Graph.pageRankMultiSeed(nodes, edges, seeds, 3)
@@ -346,14 +331,8 @@ object GraphCentralityQueries extends QueryCatalog {
         Graph.closeness(nodes.withColumn("is_seed", col("id") % 25 === 0),
           edges, "is_seed", 20)
       },
-      Some((ringEdgesSql +
-        """,
-          |bfs AS (
-          |  SELECT id AS seed, id, 0 AS d FROM nodes WHERE id % 25 = 0
-          |  UNION
-          |  SELECT bfs.seed, e.dst AS id, bfs.d + 1 AS d
-          |  FROM bfs JOIN e ON e.src = bfs.id WHERE bfs.d < 20),
-          |md AS (SELECT seed, id, min(d) AS dist FROM bfs GROUP BY 1, 2)
+      Some((ringSeedDistSql +
+        """
           |SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
           |       CAST(sum(dist) AS BIGINT) AS sum_dist,
           |       CAST(CASE WHEN sum(dist) = 0 THEN NULL
@@ -633,14 +612,7 @@ object GraphCentralityQueries extends QueryCatalog {
     // ── Global efficiency of the ring graph over sampled sources.
     QueryDef("q_global_efficiency",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
-        val edges = nodes
-          .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"))
-          .unionByName(nodes.filter(col("id") % 3 === 0)
-            .select(col("id").as("src"),
-              ((col("id") * col("id") + 7) % 100).as("dst")))
-          .distinct()
+        val (nodes, edges) = RingGraph.directed(s, d)
         val meta = nodes.agg(count(lit(1)).as("n_nodes"),
           sum(when(col("id") % 5 === 0, 1L).otherwise(0L)).as("n_seeds"))
         Graph.multiSourceBfs(

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Graph}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Link prediction and communities: neighborhood similarity scores, label
@@ -10,6 +11,14 @@ import org.apache.spark.sql.functions._
 object GraphCommunityQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** [[ringEdgesSql]] plus the undirected pairs `und` (a < b) and both
+    * directions of them, `adj` (u, v). */
+  private val ringAdjSql = ringEdgesSql +
+    """,
+      |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |        FROM e WHERE src <> dst),
+      |adj AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -20,11 +29,8 @@ object GraphCommunityQueries extends QueryCatalog {
         val (_, edges) = RingGraph.directed(s, d)
         Graph.commonNeighbors(edges.select(col("src").as("a"), col("dst").as("b")), 2L)
       },
-      Some(ringEdgesSql +
+      Some(ringAdjSql +
         """,
-          |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |        FROM e WHERE src <> dst),
-          |adj AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
           |wedge AS (SELECT l.u AS a, r.v AS b FROM adj l JOIN adj r
           |          ON l.v = r.u AND l.u < r.v),
           |scored AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n_common
@@ -41,11 +47,8 @@ object GraphCommunityQueries extends QueryCatalog {
         Graph.resourceAllocation(
           edges.select(col("src").as("a"), col("dst").as("b")), 2L)
       },
-      Some(ringEdgesSql +
+      Some(ringAdjSql +
         """,
-          |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |        FROM e WHERE src <> dst),
-          |adj AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
           |deg AS (SELECT u AS z, count(*) AS degz FROM adj GROUP BY u),
           |wedge AS (SELECT l.u AS a, r.v AS b, 1000000 // deg.degz AS ra
           |          FROM adj l JOIN adj r ON l.v = r.u AND l.u < r.v
@@ -91,23 +94,8 @@ object GraphCommunityQueries extends QueryCatalog {
         val (nodes, edges) = RingGraph.simple(s, d)
         Graph.labelPropagation(nodes, edges, 4)
       },
-      Some {
-        val head = RingGraph.sql +
-          ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
-        val rounds = (1 to 4).map { i =>
-          s"""r$i AS (SELECT v AS id, label FROM (
-             |        SELECT v, label, row_number() OVER
-             |            (PARTITION BY v ORDER BY cnt DESC, label ASC) AS rn
-             |        FROM (SELECT adj.v, p.label, count(*) AS cnt
-             |              FROM adj JOIN l${i - 1} p ON p.id = adj.u
-             |              GROUP BY adj.v, p.label))
-             |      WHERE rn = 1),
-             |l$i AS MATERIALIZED (SELECT n.id, coalesce(r$i.label, n.label) AS label
-             |      FROM l${i - 1} n LEFT JOIN r$i ON r$i.id = n.id)""".stripMargin
-        }
-        (head +: rounds.map("," + _)).mkString("\n") +
-          "\nSELECT CAST(id AS BIGINT) AS id, CAST(label AS BIGINT) AS label FROM l4"
-      }),
+      Some(RingGraph.labelPropSql +
+        "\nSELECT CAST(id AS BIGINT) AS id, CAST(label AS BIGINT) AS label FROM l4")),
 
     // ── Edge embeddedness: neighborhood Jaccard of each adjacent pair
     //    on the undirected ring graph — the tie-strength score.
@@ -118,11 +106,8 @@ object GraphCommunityQueries extends QueryCatalog {
           .select(least(col("src"), col("dst")).as("a"),
             greatest(col("src"), col("dst")).as("b")))
       },
-      Some(ringEdgesSql +
+      Some(ringAdjSql +
         """,
-          |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          |        FROM e WHERE src <> dst),
-          |adj AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
           |deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM adj GROUP BY 1),
           |common AS (SELECT l.v AS x, r.v AS y, CAST(count(*) AS BIGINT) AS c
           |           FROM adj l JOIN adj r ON l.u = r.u AND l.v < r.v
@@ -173,19 +158,6 @@ object GraphCommunityQueries extends QueryCatalog {
         Graph.modularity(edges, Graph.labelPropagation(nodes, edges, 4))
       },
       Some {
-        val head = RingGraph.sql +
-          ",\nl0 AS MATERIALIZED (SELECT id, id AS label FROM nodes)"
-        val rounds = (1 to 4).map { i =>
-          s"""r$i AS (SELECT v AS id, label FROM (
-             |        SELECT v, label, row_number() OVER
-             |            (PARTITION BY v ORDER BY cnt DESC, label ASC) AS rn
-             |        FROM (SELECT adj.v, p.label, count(*) AS cnt
-             |              FROM adj JOIN l${i - 1} p ON p.id = adj.u
-             |              GROUP BY adj.v, p.label))
-             |      WHERE rn = 1),
-             |l$i AS MATERIALIZED (SELECT n.id, coalesce(r$i.label, n.label) AS label
-             |      FROM l${i - 1} n LEFT JOIN r$i ON r$i.id = n.id)""".stripMargin
-        }
         val tail =
           """j AS (SELECT adj.u, adj.v, pu.label AS lu, pv.label AS lv
             |      FROM adj JOIN l4 pu ON pu.id = adj.u
@@ -203,7 +175,7 @@ object GraphCommunityQueries extends QueryCatalog {
             |              THEN -((-num) * 1000000 // (aa * aa))
             |              ELSE num * 1000000 // (aa * aa) END AS BIGINT) AS q_e6
             |FROM ag""".stripMargin
-        (head +: rounds.map("," + _)).mkString("\n") + ",\n" + tail
+        RingGraph.labelPropSql + ",\n" + tail
       }),
 
     // ── Two-hop mean aggregation on the ring graph, features x = id·100.
@@ -315,8 +287,7 @@ object GraphCommunityQueries extends QueryCatalog {
     //    no all-pairs term at any scale.
     QueryDef("q_louvain_pass",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
         val dir = nodes.select(col("id").as("src"),
             ((col("id") + 1) % 100).as("dst"))
           .unionByName(nodes.filter(col("id") % 2 === 0)
@@ -355,7 +326,7 @@ object GraphCommunityQueries extends QueryCatalog {
             coalesce(col("comm"), nodes("id")).cast("long").as("comm"))
           .orderBy(col("id"))
       },
-      Some("""WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some(s"""WITH nodes AS (${RingGraph.nodesSql}),
              |dir AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
              |        UNION ALL
              |        SELECT id AS src, (id * 7 + 3) % 100 AS dst

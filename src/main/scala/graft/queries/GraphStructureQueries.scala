@@ -16,8 +16,7 @@ object GraphStructureQueries extends QueryCatalog {
     * (chains with loose ends) + the quadratic chords, as raw (a, b)
     * pairs (duplicates and self-loops kept). */
   private def brokenRing(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
+    val nodes = RingGraph.nodes(s, d)
     nodes.filter(col("id") % 7 =!= 0)
       .select(col("id").as("a"), ((col("id") + 1) % 100).as("b"))
       .unionByName(nodes.filter(col("id") % 3 === 0)
@@ -27,7 +26,7 @@ object GraphStructureQueries extends QueryCatalog {
   /** DuckDB twin of [[brokenRing]], canonicalized: CTEs `nodes`, `raw`,
     * `e0` (a < b pairs). */
   private val brokenRingSql =
-    """WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+    s"""WITH nodes AS (${RingGraph.nodesSql}),
       |raw AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes WHERE id % 7 <> 0
       |        UNION
       |        SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
@@ -82,7 +81,7 @@ object GraphStructureQueries extends QueryCatalog {
     * uncovered chain edges each (25 bridges total); even chains are
     * fully cycle-covered. */
   private val bridgeGraphSql =
-    """nodes AS MATERIALIZED (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+    s"""nodes AS MATERIALIZED (${RingGraph.nodesSql}),
       |e AS MATERIALIZED (
       |  SELECT id AS src, id + 1 AS dst FROM nodes WHERE id % 10 <> 9
       |  UNION SELECT id, id + 4 FROM nodes WHERE id % 10 = 0
@@ -101,7 +100,7 @@ object GraphStructureQueries extends QueryCatalog {
     * flip id parity) — the (c, c+4) chord closes a 5-cycle, so this
     * graph certifies the NON-bipartite branch. */
   private val chainUndSql =
-    """nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+    s"""nodes AS (${RingGraph.nodesSql}),
       |e AS (
       |  SELECT id AS src, id + 1 AS dst FROM nodes WHERE id % 10 <> 9
       |  UNION SELECT id, id + 4 FROM nodes WHERE id % 10 = 0
@@ -166,8 +165,7 @@ object GraphStructureQueries extends QueryCatalog {
     * the core, OUT = chain 60..89 fed by it, OTHER = isolated chain
     * 90..99. */
   private def bowtieEdges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val nodes = Tables.part(s, d)
-      .select((col("p_partkey") % 100).as("id")).distinct()
+    val nodes = RingGraph.nodes(s, d)
     val e = nodes.filter(col("id").between(30, 59))
       .select(col("id").as("src"), (lit(30) + (col("id") - 29) % 30).as("dst"))
       .unionByName(nodes.filter(col("id").between(0, 29))
@@ -185,7 +183,7 @@ object GraphStructureQueries extends QueryCatalog {
   }
 
   private val bowtieGraphSql =
-    """nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+    s"""nodes AS (${RingGraph.nodesSql}),
       |e AS (SELECT id AS src, 30 + (id - 29) % 30 AS dst FROM nodes
       |      WHERE id BETWEEN 30 AND 59
       |      UNION SELECT id, id + 30 FROM nodes WHERE id BETWEEN 0 AND 29
@@ -281,8 +279,7 @@ object GraphStructureQueries extends QueryCatalog {
     //    {id % 25 = 0}: edge cost 1 on ring edges, 3 on chords; ≤ 8 hops.
     QueryDef("q_shortest_paths",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
           .withColumn("is_src", col("id") % 25 === 0)
         val edges = nodes
           .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"),
@@ -292,7 +289,7 @@ object GraphStructureQueries extends QueryCatalog {
               ((col("id") * col("id") + 7) % 100).as("dst"), lit(3L).as("w")))
         Graph.shortestPaths(nodes, edges, "is_src", 8)
       },
-      Some(("""WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some((s"""WITH nodes AS (${RingGraph.nodesSql}),
              |e AS (SELECT src, dst, min(w) AS w FROM (
              |        SELECT id AS src, (id + 1) % 100 AS dst, 1 AS w FROM nodes
              |        UNION ALL
@@ -325,7 +322,7 @@ object GraphStructureQueries extends QueryCatalog {
         val edges = brokenRing(s, d)
         Graph.maximalTriangles(edges)
       },
-      Some("""WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some(s"""WITH nodes AS (${RingGraph.nodesSql}),
              |raw AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes WHERE id % 7 <> 0
              |        UNION
              |        SELECT id AS src, (id * id + 7) % 100 AS dst FROM nodes WHERE id % 3 = 0),
@@ -346,8 +343,7 @@ object GraphStructureQueries extends QueryCatalog {
     //    variable-width ring + width-4 chords, ≤ 8 hops.
     QueryDef("q_widest_paths",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
           .withColumn("is_src", col("id") % 50 === 0)
         val edges = nodes
           .select(col("id").as("src"), ((col("id") + 1) % 100).as("dst"),
@@ -357,7 +353,7 @@ object GraphStructureQueries extends QueryCatalog {
               ((col("id") * col("id") + 7) % 100).as("dst"), lit(4L).as("w")))
         Graph.widestPaths(nodes, edges, "is_src", 8)
       },
-      Some(("""WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some((s"""WITH nodes AS (${RingGraph.nodesSql}),
              |e AS (SELECT src, dst, max(w) AS w FROM (
              |        SELECT id AS src, (id + 1) % 100 AS dst, 1 + id % 5 AS w FROM nodes
              |        UNION ALL
@@ -582,14 +578,8 @@ object GraphStructureQueries extends QueryCatalog {
         Graph.eccentricity(nodes.withColumn("is_seed", col("id") % 25 === 0),
           edges, "is_seed", 20)
       },
-      Some((ringEdgesSql +
-        """,
-          |bfs AS (
-          |  SELECT id AS seed, id, 0 AS d FROM nodes WHERE id % 25 = 0
-          |  UNION
-          |  SELECT bfs.seed, e.dst AS id, bfs.d + 1 AS d
-          |  FROM bfs JOIN e ON e.src = bfs.id WHERE bfs.d < 20),
-          |md AS (SELECT seed, id, min(d) AS dist FROM bfs GROUP BY 1, 2)
+      Some((ringSeedDistSql +
+        """
           |SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
           |       CAST(max(dist) AS BIGINT) AS ecc
           |FROM md GROUP BY 1""".stripMargin)
@@ -655,14 +645,13 @@ object GraphStructureQueries extends QueryCatalog {
     //    tails are singletons. Pointer-doubling closure (log rounds).
     QueryDef("q_scc",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
         val edges = nodes.select(col("id").as("src"),
           ((col("id") * 7 + 3) % 100).as("dst"))
         Graph.sccMinLabel(nodes, edges, 8)
       },
-      Some("""WITH RECURSIVE
-             |nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some(s"""WITH RECURSIVE
+             |nodes AS (${RingGraph.nodesSql}),
              |e AS (SELECT id AS u, (id * 7 + 3) % 100 AS v FROM nodes),
              |reach(u, v) AS (
              |  SELECT u, v FROM e
@@ -967,8 +956,8 @@ object GraphStructureQueries extends QueryCatalog {
             "horizon - es - tail_len AS slack",
             "horizon - es - tail_len = 0 AS critical")
       },
-      Some("""WITH RECURSIVE
-             |nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some(s"""WITH RECURSIVE
+             |nodes AS (${RingGraph.nodesSql}),
              |ce AS (
              |  SELECT id AS src, id + 1 AS dst FROM nodes WHERE id % 10 <> 9
              |  UNION SELECT id, id + 4 FROM nodes WHERE id % 10 = 0
@@ -1276,8 +1265,7 @@ object GraphStructureQueries extends QueryCatalog {
     //    count distinct endpoints per source.
     QueryDef("q_two_hop_reach",
       (s, d) => {
-        val nodes = Tables.part(s, d)
-          .select((col("p_partkey") % 100).as("id")).distinct()
+        val nodes = RingGraph.nodes(s, d)
         val dir = nodes.select(col("id").as("src"),
             ((col("id") + 1) % 100).as("dst"))
           .unionByName(nodes.filter(col("id") % 2 === 0)
@@ -1300,7 +1288,7 @@ object GraphStructureQueries extends QueryCatalog {
             col("deg").cast("long").as("deg"),
             coalesce(col("reach2"), lit(0L)).cast("long").as("reach2"))
       },
-      Some("""WITH nodes AS (SELECT DISTINCT p_partkey % 100 AS id FROM part),
+      Some(s"""WITH nodes AS (${RingGraph.nodesSql}),
              |dir AS (SELECT id AS src, (id + 1) % 100 AS dst FROM nodes
              |        UNION ALL
              |        SELECT id AS src, (id * 7 + 3) % 100 AS dst

@@ -158,11 +158,7 @@ object InequalityQueries extends QueryCatalog {
     //    customer spend by nation; fixed-point log₂·ln2 throughout.
     QueryDef("q_theil_index",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("y"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"))
+        val u = spenders(s, d)
           .select(col("c_nationkey").cast("long").as("nk"), col("y"))
           .where(col("y") > 0)
           .localCheckpoint(false) // member terms + margins
@@ -203,10 +199,7 @@ object InequalityQueries extends QueryCatalog {
         val lgb = s"CAST(${Bm25.log2E6Sql("sg")} + " +
           s"${Bm25.log2E6Sql("n")} - ${Bm25.log2E6Sql("s")} - " +
           s"${Bm25.log2E6Sql("ng")} AS BIGINT)"
-        s"""WITH spend AS (SELECT o_custkey,
-           |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-           |                   AS BIGINT)) AS BIGINT) AS y
-           |               FROM orders GROUP BY 1),
+        s"""WITH $spendYSql,
            |u AS (SELECT CAST(c_nationkey AS BIGINT) AS nk, y
            |      FROM customer JOIN spend ON c_custkey = o_custkey
            |      WHERE y > 0),
@@ -242,9 +235,7 @@ object InequalityQueries extends QueryCatalog {
     //    giant-order tail.
     QueryDef("q_lorenz_asymmetry",
       (s, d) => {
-        val v = Tables.orders(s, d)
-          .select(floor(col("o_totalprice") * 100 + 0.5).cast("long")
-            .as("v"))
+        val v = orderCents(s, d)
         val tot = v.agg(count(lit(1)).as("n"), sum(col("v")).as("t"))
         v.crossJoin(broadcast(tot))
           .agg(max(col("n")).as("n"), max(col("t")).as("t"),
@@ -291,7 +282,6 @@ object InequalityQueries extends QueryCatalog {
     //    truncating div needs no sign factor.
     QueryDef("q_mld",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val y = Tables.orders(s, d).groupBy(col("o_custkey"))
           .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
             .as("y"))
@@ -548,10 +538,7 @@ object InequalityQueries extends QueryCatalog {
      * q_yule_k (same spectrum, different functional), all integers. */
     // ── Simpson diversity of word use per source.
     QueryDef("q_simpson_diversity",
-      (s, d) => Tables.documents(s, d)
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .groupBy(col("source"), col("w"))
-        .agg(count(lit(1)).as("m"))
+      (s, d) => sourceWordCounts(s, d)
         .groupBy(col("source"))
         .agg(sum(col("m")).as("n_tokens"), count(lit(1)).as("vocab"),
           sum(expr(s"CAST(m AS $dec) * (m - 1)")).as("rep"))
@@ -564,11 +551,7 @@ object InequalityQueries extends QueryCatalog {
              |ELSE CAST(CAST(n_tokens AS $dec) * (n_tokens - 1) * 1000
              |  div rep AS BIGINT)
              |END AS inv_simpson_e3""".stripMargin),
-      Some("""WITH wc AS (
-             |  SELECT source, w, CAST(count(*) AS BIGINT) AS m
-             |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
-             |        FROM documents)
-             |  GROUP BY 1, 2),
+      Some(s"""WITH $sourceWordCountsSql,
              |agg AS (SELECT source, CAST(sum(m) AS BIGINT) AS n_tokens,
              |          CAST(count(*) AS BIGINT) AS vocab,
              |          sum(CAST(m AS HUGEINT) * (m - 1)) AS rep

@@ -339,7 +339,6 @@ object MobilityQueries extends QueryCatalog {
     //    K·w_o·w_d/d² expectations (7×7 band grid, decimal-normalized).
     QueryDef("q_od_gravity",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val pts = Tables.events(s, d).select(col("user_id").as("u"),
           expr("unix_micros(ts)").as("t"), col("event_id").as("eid"),
           expr("((event_id * 91 % 35000) div 50) div 100").as("band"))

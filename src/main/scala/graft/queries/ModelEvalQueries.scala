@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Classify, Ranking}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Classifier evaluation: confusion-matrix metrics, ROC/PR areas,
@@ -40,6 +41,39 @@ object ModelEvalQueries extends QueryCatalog {
       .groupBy(col("band"))
       .agg(sum(when(col("r"), 1L).otherwise(0L)).as("pos"),
         sum(when(col("r"), 0L).otherwise(1L)).as("neg"))
+
+  /** The held-out fifth of [[users]] scored with its activity bucket's
+    * train rate (p, e6), unseen buckets falling back to the global
+    * train rate. */
+  private def bucketScored(s: org.apache.spark.sql.SparkSession,
+                           d: String) = {
+    val u = users(s, d)
+      .withColumn("bucket", expr("least(activity div 3, 9L)"))
+      .localCheckpoint(false) // train rates + test scoring reuse it
+    val train = u.where(expr("user_id % 5 < 4"))
+    val rates = train.groupBy(col("bucket"))
+      .agg(expr("sum(y) * 1000000 div count(*)").as("p_e6"))
+    val fallback = train.agg(
+      expr("sum(y) * 1000000 div count(*)").as("p0_e6"))
+    u.where(expr("user_id % 5 = 4"))
+      .join(broadcast(rates), Seq("bucket"), "left")
+      .crossJoin(broadcast(fallback))
+      .withColumn("p", coalesce(col("p_e6"), col("p0_e6")))
+  }
+
+  /** DuckDB twin of the train rates of [[bucketScored]]: CTEs `u`, `b`
+    * (user_id, y, bucket), `rates` (bucket, p_e6), `fb` (p0_e6). */
+  private val bucketRatesSql =
+    s"""u AS ($userSql),
+      |b AS (SELECT user_id, y, least(activity // 3, 9) AS bucket
+      |      FROM u),
+      |rates AS (SELECT bucket,
+      |                 CAST(sum(y) AS BIGINT) * 1000000 // count(*)
+      |                   AS p_e6
+      |          FROM b WHERE user_id % 5 < 4 GROUP BY 1),
+      |fb AS (SELECT CAST(sum(y) AS BIGINT) * 1000000 // count(*)
+      |                AS p0_e6
+      |       FROM b WHERE user_id % 5 < 4)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -252,33 +286,13 @@ object ModelEvalQueries extends QueryCatalog {
     //    broadcasts; unseen buckets fall back to the global train rate.
     QueryDef("q_brier",
       (s, d) => {
-        val u = users(s, d)
-          .withColumn("bucket", expr("least(activity div 3, 9L)"))
-          .localCheckpoint(false) // train rates + test scoring reuse it
-        val train = u.where(expr("user_id % 5 < 4"))
-        val rates = train.groupBy(col("bucket"))
-          .agg(expr("sum(y) * 1000000 div count(*)").as("p_e6"))
-        val fallback = train.agg(
-          expr("sum(y) * 1000000 div count(*)").as("p0_e6"))
-        u.where(expr("user_id % 5 = 4"))
-          .join(broadcast(rates), Seq("bucket"), "left")
-          .crossJoin(broadcast(fallback))
-          .withColumn("p", coalesce(col("p_e6"), col("p0_e6")))
+        bucketScored(s, d)
           .agg(count(lit(1)).as("n_test"),
             expr("sum((p - y * 1000000) * (p - y * 1000000))").as("se"))
           .selectExpr("CAST(n_test AS BIGINT) AS n_test",
             "se div n_test AS brier_e12")
       },
-      Some(s"""WITH u AS ($userSql),
-              |b AS (SELECT user_id, y, least(activity // 3, 9) AS bucket
-              |      FROM u),
-              |rates AS (SELECT bucket,
-              |                 CAST(sum(y) AS BIGINT) * 1000000 // count(*)
-              |                   AS p_e6
-              |          FROM b WHERE user_id % 5 < 4 GROUP BY 1),
-              |fb AS (SELECT CAST(sum(y) AS BIGINT) * 1000000 // count(*)
-              |                AS p0_e6
-              |       FROM b WHERE user_id % 5 < 4)
+      Some(s"""WITH $bucketRatesSql
               |SELECT CAST(count(*) AS BIGINT) AS n_test,
               |       CAST(sum((coalesce(p_e6, p0_e6) - y * 1000000)
               |                * (coalesce(p_e6, p0_e6) - y * 1000000))
@@ -356,18 +370,7 @@ object ModelEvalQueries extends QueryCatalog {
     //    (window total over the ≤10-bin axis) in one result.
     QueryDef("q_ece",
       (s, d) => {
-        val u = users(s, d)
-          .withColumn("bucket", expr("least(activity div 3, 9L)"))
-          .localCheckpoint(false)
-        val train = u.where(expr("user_id % 5 < 4"))
-        val rates = train.groupBy(col("bucket"))
-          .agg(expr("sum(y) * 1000000 div count(*)").as("p_e6"))
-        val fallback = train.agg(
-          expr("sum(y) * 1000000 div count(*)").as("p0_e6"))
-        val bins = u.where(expr("user_id % 5 = 4"))
-          .join(broadcast(rates), Seq("bucket"), "left")
-          .crossJoin(broadcast(fallback))
-          .withColumn("p", coalesce(col("p_e6"), col("p0_e6")))
+        val bins = bucketScored(s, d)
           .groupBy(expr("least(p div 100000, 9L)").as("bin"))
           .agg(count(lit(1)).as("n_b"),
             expr("sum(p) div count(*)").as("conf_e6"),
@@ -381,16 +384,7 @@ object ModelEvalQueries extends QueryCatalog {
           .selectExpr("bin", "n_b", "conf_e6", "acc_e6",
             "wsum div n AS ece_e6")
       },
-      Some(s"""WITH u AS ($userSql),
-              |b AS (SELECT user_id, y, least(activity // 3, 9) AS bucket
-              |      FROM u),
-              |rates AS (SELECT bucket,
-              |                 CAST(sum(y) AS BIGINT) * 1000000 // count(*)
-              |                   AS p_e6
-              |          FROM b WHERE user_id % 5 < 4 GROUP BY 1),
-              |fb AS (SELECT CAST(sum(y) AS BIGINT) * 1000000 // count(*)
-              |                AS p0_e6
-              |       FROM b WHERE user_id % 5 < 4),
+      Some(s"""WITH $bucketRatesSql,
               |te AS (SELECT y, coalesce(p_e6, p0_e6) AS p
               |       FROM b LEFT JOIN rates USING (bucket) CROSS JOIN fb
               |       WHERE user_id % 5 = 4),
@@ -431,12 +425,7 @@ object ModelEvalQueries extends QueryCatalog {
             |             * sqrt(CAST(tn + fp AS DOUBLE))
             |             * sqrt(CAST(tn + fn AS DOUBLE))), 6)
             |END AS mcc""".stripMargin),
-      Some("""WITH u AS (SELECT user_id,
-             |                  max(CASE WHEN event_type = 'click'
-             |                      THEN 1 ELSE 0 END) AS x,
-             |                  max(CASE WHEN event_type = 'purchase'
-             |                      THEN 1 ELSE 0 END) AS y
-             |           FROM events GROUP BY 1),
+      Some(s"""WITH $clickPurchaseUsersSql,
              |c AS (SELECT
              |        CAST(sum(CASE WHEN x = 1 AND y = 1 THEN 1 ELSE 0 END)
              |          AS BIGINT) AS tp,

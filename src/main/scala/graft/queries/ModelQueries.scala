@@ -148,13 +148,6 @@ object ModelQueries extends QueryCatalog {
        |  ELSE 1000000 - (1000000000000 // (1000000 + $pn)) END)""".stripMargin
   }
 
-  private def prioCells(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.orders(s, d)
-      .select(col("o_orderpriority").as("v"),
-        (col("o_totalprice") >= 150000.0).as("yy"))
-      .groupBy(col("v"), col("yy")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // ≤ 10 cells, reused by every margin
-
   def defs: Seq[QueryDef] = Seq(
 
     // ── Hashing-trick featurization load report: project the corpus
@@ -240,11 +233,7 @@ object ModelQueries extends QueryCatalog {
     //    learner counterpart of q_naive_bayes, confusion-matrix output.
     QueryDef("q_knn_classify",
       (s, d) => Similarity.knnClassify(Tables.embeddings(s, d), 5),
-      Some("""WITH q AS MATERIALIZED (
-             |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-             |         list_transform(CAST(embedding AS DOUBLE[]),
-             |           x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS qv
-             |  FROM embeddings),
+      Some(s"""WITH $quantEmbeddingsSql,
              |pairs AS (
              |  SELECT t.vec_id, t.label, r.vec_id AS tid, r.label AS tlabel,
              |         list_sum(list_transform(generate_series(1, len(t.qv)),
@@ -269,19 +258,7 @@ object ModelQueries extends QueryCatalog {
     QueryDef("q_linear_score",
       (s, d) => TextAnalysis.linearScore(
         Tables.documents(s, d).select(col("doc_id"), col("text")), 256, 20),
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-              |  FROM documents),
-              |f AS (
-              |  SELECT doc_id,
-              |         ${PortableSql.hash48("token", "'fh'")} % 256 AS dim
-              |  FROM tok WHERE token <> ''),
-              |w AS (
-              |  SELECT doc_id,
-              |         ${PortableSql.hash48(
-                          "CAST(dim AS VARCHAR)", "'lw'")} % 2001 - 1000
-              |           AS wt
-              |  FROM f)
+      Some(s"""WITH $hashedWeightsSql
               |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
               |       CAST(sum(wt) AS BIGINT) AS margin
               |FROM w GROUP BY doc_id
@@ -347,17 +324,13 @@ object ModelQueries extends QueryCatalog {
     //    by the exact integer numerator pos_sg·n − n_sg·pos.
     QueryDef("q_subgroup_discovery",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("spend"))
         // Checkpoint u once — the threshold, the totals, and the cell
         // rollup all reuse it (previously the orders aggregate + join
         // ran twice and the threshold was a GLOBAL single-partition
         // row_number window; the stage fan-out made this query the
         // registry's worst contention amplifier, 0.83 s quiet -> 7.6 s
         // loaded).
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"), "left")
+        val u = customerSpend(s, d)
           .select(col("c_mktsegment").as("seg"),
             col("c_nationkey").cast("long").as("nk"),
             col("c_custkey").as("ck"),
@@ -386,10 +359,7 @@ object ModelQueries extends QueryCatalog {
           .where(col("rk") <= 10)
           .selectExpr("seg", "nk", "n_sg", "pos_sg", "wracc_num", "rk")
       },
-      Some("""WITH spend AS (SELECT o_custkey,
-             |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |                   AS BIGINT)) AS BIGINT) AS spend
-             |               FROM orders GROUP BY 1),
+      Some(s"""WITH $customerSpendSql,
              |u AS (SELECT c_mktsegment AS seg,
              |             CAST(c_nationkey AS BIGINT) AS nk,
              |             c_custkey AS ck, coalesce(spend, 0) AS y
@@ -419,11 +389,7 @@ object ModelQueries extends QueryCatalog {
     //    (ck%4=1) the 90% residual quantile, test (ck%4=3) coverage.
     QueryDef("q_conformal",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("spend"))
-        val u = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"), "left")
+        val u = customerSpend(s, d)
           .select(col("c_mktsegment").as("seg"), col("c_custkey").as("ck"),
             coalesce(col("spend"), lit(0L)).as("y"))
           .localCheckpoint(false) // fit/calibration/test splits
@@ -446,10 +412,7 @@ object ModelQueries extends QueryCatalog {
               .otherwise(0L)).as("n_covered"))
           .withColumn("coverage_e6", expr("n_covered * 1000000 div n_test"))
       },
-      Some("""WITH spend AS (SELECT o_custkey,
-             |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |                   AS BIGINT)) AS BIGINT) AS spend
-             |               FROM orders GROUP BY 1),
+      Some(s"""WITH $customerSpendSql,
              |u AS (SELECT c_mktsegment AS seg, c_custkey AS ck,
              |             coalesce(spend, 0) AS y
              |      FROM customer LEFT JOIN spend ON c_custkey = o_custkey),
@@ -892,15 +855,7 @@ object ModelQueries extends QueryCatalog {
     // ── Mutual information (= info gain) + gain ratio of priority.
     QueryDef("q_info_gain",
       (s, d) => {
-        val cells = prioCells(s, d)
-        val tc = cells.agg(sum(col("c")).as("n"),
-          sum(col("c") * Bm25.log2E6(col("c"))).as("t_cells"))
-        val tv = cells.groupBy(col("v")).agg(sum(col("c")).as("nv"))
-          .agg(sum(col("nv") * Bm25.log2E6(col("nv"))).as("t_v"))
-        val ty = cells.groupBy(col("yy")).agg(sum(col("c")).as("cy"))
-          .agg(sum(col("cy") * Bm25.log2E6(col("cy"))).as("t_y"))
-        tc.crossJoin(broadcast(tv)).crossJoin(broadcast(ty))
-          .withColumn("t_n", col("n") * Bm25.log2E6(col("n")))
+        prioCellEntropy(s, d)
           .withColumn("mi_num",
             expr("t_cells - t_v - t_y + t_n"))
           .withColumn("hv_num", expr("t_n - t_v"))
@@ -916,19 +871,8 @@ object ModelQueries extends QueryCatalog {
       },
       Some {
         def L(v: String) = Bm25.log2E6Sql(v)
-        prioCellsSql +
+        prioCellEntropySql +
           s""",
-             |tc AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-             |         CAST(sum(c * CAST(${L("c")} AS BIGINT)) AS BIGINT)
-             |           AS t_cells FROM cells),
-             |tv AS (SELECT CAST(sum(nv * CAST(${L("nv")} AS BIGINT))
-             |           AS BIGINT) AS t_v
-             |       FROM (SELECT CAST(sum(c) AS BIGINT) AS nv FROM cells
-             |             GROUP BY v)),
-             |ty AS (SELECT CAST(sum(cy * CAST(${L("cy")} AS BIGINT))
-             |           AS BIGINT) AS t_y
-             |       FROM (SELECT CAST(sum(c) AS BIGINT) AS cy FROM cells
-             |             GROUP BY yy)),
              |j AS (SELECT n, t_cells, t_v, t_y,
              |        n * CAST(${L("n")} AS BIGINT) AS t_n
              |      FROM tc CROSS JOIN tv CROSS JOIN ty),

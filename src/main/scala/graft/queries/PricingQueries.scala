@@ -18,7 +18,6 @@ object PricingQueries extends QueryCatalog {
     //    across parts (fixed-point e6 logs, exact moments).
     QueryDef("q_price_elasticity",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val qty = Tables.lineitem(s, d).groupBy(col("l_partkey"))
           .agg(sum(floor(col("l_quantity") + 0.5).cast("long")).as("q"))
           .where(col("q") > 0)
@@ -132,7 +131,6 @@ object PricingQueries extends QueryCatalog {
     //    p = avg unit price (cents, truncating), q = yearly quantity.
     QueryDef("q_price_index",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val py = Tables.lineitem(s, d)
           .select(col("l_partkey").as("pk"),
             expr("year(l_shipdate)").as("yr"),

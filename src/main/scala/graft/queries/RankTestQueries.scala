@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Quantiles, Stats}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** k-sample, paired and trend rank tests: ANOVA family, Kruskal-Wallis,
@@ -10,6 +11,23 @@ import org.apache.spark.sql.functions._
 object RankTestQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** [[prioMonthCells]] zero-filled over every (g, mo) of its axes. */
+  private def prioMonthGrid(s: SparkSession, d: String): DataFrame = {
+    val cell = prioMonthCells(s, d)
+    val axes = cell.select(col("g")).distinct()
+      .crossJoin(cell.select(col("mo")).distinct())
+    axes.join(cell, Seq("g", "mo"), "left")
+      .select(col("g"), col("mo"), coalesce(col("x"), lit(0L)).as("x"))
+  }
+
+  /** DuckDB twin of [[prioMonthGrid]]: [[prioMonthCellsSql]] plus CTE
+    * `grid`. */
+  private val prioMonthGridSql = prioMonthCellsSql + """,
+    |grid AS (SELECT ga.g, ma.mo, coalesce(c.x, 0) AS x
+    |         FROM (SELECT DISTINCT g FROM cell) ga
+    |         CROSS JOIN (SELECT DISTINCT mo FROM cell) ma
+    |         LEFT JOIN cell c ON c.g = ga.g AND c.mo = ma.mo)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -248,11 +266,7 @@ object RankTestQueries extends QueryCatalog {
     //    division; denominator margins floored at 1.
     QueryDef("q_mood_median",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type").as("et"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("et"), col("day")).agg(count(lit(1)).as("c"))
+        val daily = clickViewDaily(s, d)
           .localCheckpoint(false) // median walk + the 2×2 rollup
         val n = daily.agg(count(lit(1)).as("n_all"))
         val med = daily.crossJoin(broadcast(n))
@@ -277,12 +291,7 @@ object RankTestQueries extends QueryCatalog {
               |  div greatest((a + b) * (cc + dd) * (a + cc) * (b + dd), 1)
               |  AS chi2_e6""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT event_type AS et,
-             |                      epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(count(*) AS BIGINT) AS c
-             |               FROM events
-             |               WHERE event_type IN ('click', 'view')
-             |               GROUP BY 1, 2),
+      Some(s"""WITH $clickViewDailySql,
              |n AS (SELECT CAST(count(*) AS BIGINT) AS n_all FROM daily),
              |r AS (SELECT c, n_all,
              |             row_number() OVER (ORDER BY c) AS rk
@@ -386,11 +395,7 @@ object RankTestQueries extends QueryCatalog {
     //    (months)² × C(5,2) — bounded by the calendar, not the data.
     QueryDef("q_jonckheere",
       (s, d) => {
-        val cell = prioMonthCells(s, d)
-        val axes = cell.select(col("g")).distinct()
-          .crossJoin(cell.select(col("mo")).distinct())
-        val grid = axes.join(cell, Seq("g", "mo"), "left")
-          .select(col("g"), col("mo"), coalesce(col("x"), lit(0L)).as("x"))
+        val grid = prioMonthGrid(s, d)
           .localCheckpoint(false) // both pair sides + the group-size rollup
         val j2 = grid.as("a").join(grid.as("b"), col("a.g") < col("b.g"))
           .agg(sum(when(col("a.x") < col("b.x"), 2L)
@@ -413,11 +418,7 @@ object RankTestQueries extends QueryCatalog {
               |                   AS DOUBLE) / CAST('72.0' AS DOUBLE)), 6)
               |END AS z""".stripMargin)
       },
-      Some(s"""WITH $prioMonthCellsSql,
-             |grid AS (SELECT ga.g, ma.mo, coalesce(c.x, 0) AS x
-             |         FROM (SELECT DISTINCT g FROM cell) ga
-             |         CROSS JOIN (SELECT DISTINCT mo FROM cell) ma
-             |         LEFT JOIN cell c ON c.g = ga.g AND c.mo = ma.mo),
+      Some(s"""WITH $prioMonthGridSql,
              |jj AS (SELECT CAST(sum(CASE WHEN a.x < b.x THEN 2
              |                            WHEN a.x = b.x THEN 1
              |                            ELSE 0 END) AS BIGINT) AS j2
@@ -452,11 +453,7 @@ object RankTestQueries extends QueryCatalog {
     //    group, three tiny rollups.
     QueryDef("q_brown_forsythe",
       (s, d) => {
-        val cell = prioMonthCells(s, d)
-        val axes = cell.select(col("g")).distinct()
-          .crossJoin(cell.select(col("mo")).distinct())
-        val grid = axes.join(cell, Seq("g", "mo"), "left")
-          .select(col("g"), col("mo"), coalesce(col("x"), lit(0L)).as("x"))
+        val grid = prioMonthGrid(s, d)
           .localCheckpoint(false) // median rank pass + deviation pass
         val med = grid
           .withColumn("rn", row_number().over(
@@ -485,11 +482,7 @@ object RankTestQueries extends QueryCatalog {
               |          / CAST((k - 1) * (n * q - ss2) AS DOUBLE), 6)
               |END AS bf_w""".stripMargin)
       },
-      Some(s"""WITH $prioMonthCellsSql,
-             |grid AS (SELECT ga.g, ma.mo, coalesce(c.x, 0) AS x
-             |         FROM (SELECT DISTINCT g FROM cell) ga
-             |         CROSS JOIN (SELECT DISTINCT mo FROM cell) ma
-             |         LEFT JOIN cell c ON c.g = ga.g AND c.mo = ma.mo),
+      Some(s"""WITH $prioMonthGridSql,
              |rk AS (SELECT g, x,
              |              row_number() OVER (PARTITION BY g
              |                                 ORDER BY x, mo) AS rn,
@@ -593,11 +586,7 @@ object RankTestQueries extends QueryCatalog {
     //    reported statistic. All pair structure lives on the k=5 axis.
     QueryDef("q_tukey_hsd",
       (s, d) => {
-        val cell = prioMonthCells(s, d)
-        val axes = cell.select(col("g")).distinct()
-          .crossJoin(cell.select(col("mo")).distinct())
-        val grid = axes.join(cell, Seq("g", "mo"), "left")
-          .select(col("g"), col("mo"), coalesce(col("x"), lit(0L)).as("x"))
+        val grid = prioMonthGrid(s, d)
         val per = grid.groupBy(col("g"))
           .agg(count(lit(1)).as("n"), sum(col("x")).as("sg"),
             sum(expr("x * x")).as("qg"))
@@ -620,11 +609,7 @@ object RankTestQueries extends QueryCatalog {
             "CAST(dabs AS BIGINT) AS mean_gap_xn", "q_stat",
             "CAST(sig AS BIGINT) AS significant")
       },
-      Some(s"""WITH $prioMonthCellsSql,
-             |grid AS (SELECT ga.g, ma.mo, coalesce(c.x, 0) AS x
-             |         FROM (SELECT DISTINCT g FROM cell) ga
-             |         CROSS JOIN (SELECT DISTINCT mo FROM cell) ma
-             |         LEFT JOIN cell c ON c.g = ga.g AND c.mo = ma.mo),
+      Some(s"""WITH $prioMonthGridSql,
              |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
              |               CAST(sum(x) AS BIGINT) AS sg,
              |               CAST(sum(x * x) AS BIGINT) AS qg
@@ -656,11 +641,7 @@ object RankTestQueries extends QueryCatalog {
     //    integer until the final division.
     QueryDef("q_quade",
       (s, d) => {
-        val cell = prioMonthCells(s, d)
-        val axes = cell.select(col("g")).distinct()
-          .crossJoin(cell.select(col("mo")).distinct())
-        val grid = axes.join(cell, Seq("g", "mo"), "left")
-          .select(col("g"), col("mo"), coalesce(col("x"), lit(0L)).as("x"))
+        val grid = prioMonthGrid(s, d)
           .localCheckpoint(false) // in-block ranks + block ranges
         val kk = grid.agg(countDistinct(col("g")).as("k"))
         val ranked = grid
@@ -688,11 +669,7 @@ object RankTestQueries extends QueryCatalog {
               |     / CAST(n * a2 - b2 AS DOUBLE), 6)
               |END AS f_stat""".stripMargin)
       },
-      Some(s"""WITH $prioMonthCellsSql,
-             |grid AS (SELECT ga.g, ma.mo, coalesce(c.x, 0) AS x
-             |         FROM (SELECT DISTINCT g FROM cell) ga
-             |         CROSS JOIN (SELECT DISTINCT mo FROM cell) ma
-             |         LEFT JOIN cell c ON c.g = ga.g AND c.mo = ma.mo),
+      Some(s"""WITH $prioMonthGridSql,
              |kk AS (SELECT CAST(count(DISTINCT g) AS BIGINT) AS k
              |       FROM grid),
              |ranked AS (SELECT g, mo,
@@ -867,17 +844,7 @@ object RankTestQueries extends QueryCatalog {
     // ── Bartlett's variance-homogeneity test across priority classes.
     QueryDef("q_bartlett",
       (s, d) => {
-        val g = Tables.orders(s, d)
-          .select(col("o_orderpriority").as("pri"),
-            expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("x"))
-          .groupBy(col("pri"))
-          .agg(count(lit(1)).as("ni"), sum(col("x")).as("si"),
-            sum(expr(s"CAST(x AS $dec) * x")).as("qi"))
-          .filter(col("ni") >= 2L)
-          .withColumn("si2",
-            expr(s"CAST((CAST(ni AS $dec) * qi - CAST(si AS $dec) * si)" +
-              s" div (CAST(ni AS $dec) * (ni - 1)) AS BIGINT)"))
+        val g = prioPriceVariance(s, d)
           .withColumn("l_si2", Bm25.log2E6(greatest(col("si2"), lit(1L))))
         val t = g.agg(count(lit(1)).as("k"), sum(col("ni")).as("n"),
           sum(expr(s"CAST(ni - 1 AS $dec) * si2")).as("wss"),
@@ -900,16 +867,7 @@ object RankTestQueries extends QueryCatalog {
       Some {
         val lsi2 = Bm25.log2E6Sql("greatest(si2, 1)")
         val lsp2 = Bm25.log2E6Sql("greatest(sp2, 1)")
-        s"""WITH g0 AS (
-           |  SELECT o_orderpriority AS pri,
-           |         CAST(count(*) AS BIGINT) AS ni,
-           |         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-           |           AS BIGINT)) AS BIGINT) AS si,
-           |         sum(CAST(CAST(floor(o_totalprice * 100 + 0.5)
-           |           AS BIGINT) AS HUGEINT)
-           |           * CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           |           AS qi
-           |  FROM orders GROUP BY 1 HAVING count(*) >= 2),
+        s"""WITH $prioPriceMomentsSql,
            |g AS (SELECT pri, ni, si,
            |        CAST((CAST(ni AS HUGEINT) * qi
            |          - CAST(si AS HUGEINT) * si)

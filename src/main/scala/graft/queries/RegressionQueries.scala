@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Dedup, Stats, TimeSeries}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Regression fitting and diagnostics: OLS, ridge, WLS, robust slopes, GLM
@@ -39,15 +39,29 @@ object RegressionQueries extends QueryCatalog {
       |        CAST(sum(t * y) AS BIGINT) AS sxy
       |      FROM ax)""".stripMargin
 
+  /** Pearson r of columns a and b from the moment columns n, s_a, q_a
+    * and the cross sum x_a_b, as SQL text valid in both engines. */
+  private def corrR(a: String, b: String) =
+    s"""(CAST(n * x_${a}_$b - s_$a * s_$b AS DOUBLE) /
+       |sqrt(CAST(n * q_$a - s_$a * s_$a AS DOUBLE) *
+       |     CAST(n * q_$b - s_$b * s_$b AS DOUBLE)))""".stripMargin
+
+  /** Variance inflation factor of `me` against o1, o2 from the closed
+    * form 3-variable R² over the r_* columns. */
+  private def vif3(me: String, o1: String, o2: String) =
+    s"""round(CAST('1.0' AS DOUBLE) / (CAST('1.0' AS DOUBLE) -
+       |  (r_${me}_$o1 * r_${me}_$o1 + r_${me}_$o2 * r_${me}_$o2
+       |   - 2 * r_${me}_$o1 * r_${me}_$o2 * r_${o1}_$o2)
+       |  / (CAST('1.0' AS DOUBLE) - r_${o1}_$o2 * r_${o1}_$o2)), 6)
+       |""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── Per-type linear trend of event values: e6 cents-per-second
     //    least-squares slope on centered time, all integer.
     QueryDef("q_trend_slope",
       (s, d) => TimeSeries.trendSlope(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "cents"),
       Some("""WITH e AS (SELECT event_type AS key, epoch_us(ts) // 1000000 AS t,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS cv
@@ -171,16 +185,6 @@ object RegressionQueries extends QueryCatalog {
     //    R²_x = (r_xy² + r_xz² − 2 r_xy r_xz r_yz)/(1 − r_yz²).
     QueryDef("q_vif",
       (s, d) => {
-        def r(a: String, b: String) =
-          s"""(CAST(n * x_${a}_$b - s_$a * s_$b AS DOUBLE) /
-             |sqrt(CAST(n * q_$a - s_$a * s_$a AS DOUBLE) *
-             |     CAST(n * q_$b - s_$b * s_$b AS DOUBLE)))""".stripMargin
-        def vif(me: String, o1: String, o2: String) =
-          s"""round(CAST('1.0' AS DOUBLE) / (CAST('1.0' AS DOUBLE) -
-             |  (r_${me}_$o1 * r_${me}_$o1 + r_${me}_$o2 * r_${me}_$o2
-             |   - 2 * r_${me}_$o1 * r_${me}_$o2 * r_${o1}_$o2)
-             |  / (CAST('1.0' AS DOUBLE) - r_${o1}_$o2 * r_${o1}_$o2)), 6)
-             |""".stripMargin
         perOrder(s, d)
           .agg(count(lit(1)).cast(dec).as("n"),
             sum(col("x").cast(dec)).as("s_x"),
@@ -193,27 +197,17 @@ object RegressionQueries extends QueryCatalog {
             sum(col("x").cast(dec) * col("z").cast(dec)).as("x_x_z"),
             sum(col("y").cast(dec) * col("z").cast(dec)).as("x_y_z"))
           .selectExpr("CAST(n AS BIGINT) AS n",
-            s"${r("x", "y")} AS r_x_y", s"${r("x", "z")} AS r_x_z",
-            s"${r("y", "z")} AS r_y_z")
+            s"${corrR("x", "y")} AS r_x_y", s"${corrR("x", "z")} AS r_x_z",
+            s"${corrR("y", "z")} AS r_y_z")
           .selectExpr("n",
-            s"${vif("x", "y", "z").replace("r_x_y", "r_x_y")
+            s"${vif3("x", "y", "z").replace("r_x_y", "r_x_y")
               .replace("r_x_z", "r_x_z").replace("r_y_z", "r_y_z")} AS vif_x",
-            s"${vif("y", "x", "z").replace("r_y_x", "r_x_y")
+            s"${vif3("y", "x", "z").replace("r_y_x", "r_x_y")
               .replace("r_x_z", "r_x_z")} AS vif_y",
-            s"${vif("z", "x", "y").replace("r_z_x", "r_x_z")
+            s"${vif3("z", "x", "y").replace("r_z_x", "r_x_z")
               .replace("r_z_y", "r_y_z")} AS vif_z")
       },
       Some {
-        def r(a: String, b: String) =
-          s"""(CAST(n * x_${a}_$b - s_$a * s_$b AS DOUBLE) /
-             |sqrt(CAST(n * q_$a - s_$a * s_$a AS DOUBLE) *
-             |     CAST(n * q_$b - s_$b * s_$b AS DOUBLE)))""".stripMargin
-        def vif(me: String, o1: String, o2: String) =
-          s"""round(CAST('1.0' AS DOUBLE) / (CAST('1.0' AS DOUBLE) -
-             |  (r_${me}_$o1 * r_${me}_$o1 + r_${me}_$o2 * r_${me}_$o2
-             |   - 2 * r_${me}_$o1 * r_${me}_$o2 * r_${o1}_$o2)
-             |  / (CAST('1.0' AS DOUBLE) - r_${o1}_$o2 * r_${o1}_$o2)), 6)
-             |""".stripMargin
         s"""WITH $perOrderSql,
            |mom AS (SELECT CAST(count(*) AS HUGEINT) AS n,
            |               CAST(sum(x) AS HUGEINT) AS s_x,
@@ -232,13 +226,13 @@ object RegressionQueries extends QueryCatalog {
            |               sum(CAST(y AS HUGEINT) * CAST(z AS HUGEINT))
            |                 AS x_y_z
            |        FROM per),
-           |rs AS (SELECT CAST(n AS BIGINT) AS n, ${r("x", "y")} AS r_x_y,
-           |              ${r("x", "z")} AS r_x_z, ${r("y", "z")} AS r_y_z
+           |rs AS (SELECT CAST(n AS BIGINT) AS n, ${corrR("x", "y")} AS r_x_y,
+           |              ${corrR("x", "z")} AS r_x_z, ${corrR("y", "z")} AS r_y_z
            |       FROM mom)
            |SELECT n,
-           |       ${vif("x", "y", "z")} AS vif_x,
-           |       ${vif("y", "x", "z").replace("r_y_x", "r_x_y")} AS vif_y,
-           |       ${vif("z", "x", "y").replace("r_z_x", "r_x_z")
+           |       ${vif3("x", "y", "z")} AS vif_x,
+           |       ${vif3("y", "x", "z").replace("r_y_x", "r_x_y")} AS vif_y,
+           |       ${vif3("z", "x", "y").replace("r_z_x", "r_x_z")
                     .replace("r_z_y", "r_y_z")} AS vif_z
            |FROM rs""".stripMargin
       }),
@@ -295,7 +289,6 @@ object RegressionQueries extends QueryCatalog {
     //    exact decimal moments, one double close.
     QueryDef("q_wls_slope",
       (s, d) => {
-        val dec = "decimal(38,0)"
         Tables.lineitem(s, d)
           .select(col("l_returnflag").as("g"),
             floor(col("l_discount") * 100 + 0.5).cast(dec).as("x"),
@@ -339,11 +332,7 @@ object RegressionQueries extends QueryCatalog {
     //    trendSlope convention). Top-3 most influential days.
     QueryDef("q_cooks_distance",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
-          .groupBy(col("day"))
-          .agg(sum(col("cents")).as("sc"), count(lit(1)).as("cnt"))
+        val daily = eventsDailyCents(s, d)
           .withColumn("y", expr("sc div cnt"))
           .withColumn("t", expr("day - min(day) OVER ()"))
           .localCheckpoint(false) // moments + the per-day pass reuse it
@@ -377,11 +366,7 @@ object RegressionQueries extends QueryCatalog {
           .selectExpr("CAST(rk AS BIGINT) AS rk", "day", "y AS y_cents",
             "round(h, 6) AS leverage", "round(cooks, 6) AS cooks_d")
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(sum(CAST(floor(value * 100 + 0.5)
-             |                        AS BIGINT)) AS BIGINT) AS sc,
-             |                      CAST(count(*) AS BIGINT) AS cnt
-             |               FROM events GROUP BY 1),
+      Some(s"""WITH $eventsDailyCentsSql,
              |ax AS (SELECT day, sc // cnt AS y,
              |              day - min(day) OVER () AS t FROM daily),
              |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -757,14 +742,7 @@ object RegressionQueries extends QueryCatalog {
     QueryDef("q_cochrane_orcutt",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val monthly = Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_nationkey"))),
-            col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_regionkey"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .where(col("n_regionkey").isin(0, 1))
+        val monthly = region01Orders(s, d)
           .groupBy(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))" +
             " div 2592000000000").as("mo"))
           .agg(sum(when(col("n_regionkey") === 0,

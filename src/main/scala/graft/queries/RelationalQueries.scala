@@ -435,12 +435,7 @@ object RelationalQueries extends QueryCatalog {
         // latter would re-plan the whole rank subtree under the broadcast
         val tot = Tables.customer(s, d).agg(count(lit(1)).as("nt"))
         ranked.crossJoin(broadcast(tot))
-          .withColumn("decile", expr(
-            """CASE WHEN r <= (nt % 10) * (nt div 10 + 1)
-              |     THEN (r - 1) div (nt div 10 + 1) + 1
-              |     ELSE (nt % 10) +
-              |          (r - (nt % 10) * (nt div 10 + 1) - 1) div (nt div 10) + 1
-              |END""".stripMargin).cast("long"))
+          .withColumn("decile", expr(decileOfRank).cast("long"))
           .groupBy(col("decile"))
           .agg(count(lit(1)).as("n"), min(col("bal_c")).as("min_bal_c"),
             max(col("bal_c")).as("max_bal_c"))

@@ -3,12 +3,38 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Diversify, Ranking, Recsys, Similarity}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Retrieval, ranking and recommendation: BM25 and hybrid retrieval, rank
   * fusion, ranking metrics, rank distances, preference aggregation, and
   * recommenders. */
 object RetrievalQueries extends QueryCatalog {
+
+  /** 1996 brand revenue ranked within each ship month: (m, p_brand,
+    * rev = cents, rk). */
+  private def monthlyBrandRanks(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .join(broadcast(Tables.part(s, d)
+        .select(col("p_partkey"), col("p_brand"))),
+        col("l_partkey") === col("p_partkey"))
+      .where(expr("year(l_shipdate) = 1996"))
+      .groupBy(expr("month(l_shipdate)").as("m"), col("p_brand"))
+      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5)
+        .cast("long")).as("rev"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("m"))
+          .orderBy(col("rev").desc, col("p_brand"))).cast("long"))
+
+  /** The revenue CTE `rev` (m, p_brand, rev) of [[monthlyBrandRanks]]. */
+  private val brandRevSql =
+    """rev AS (
+      |  SELECT month(l_shipdate) AS m, p_brand,
+      |         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5)
+      |           AS BIGINT)) AS BIGINT) AS rev
+      |  FROM lineitem JOIN part ON p_partkey = l_partkey
+      |  WHERE year(l_shipdate) = 1996
+      |  GROUP BY 1, 2)""".stripMargin
 
   /** The q_bm25_topk oracle pipeline as CTE text, LIMIT `k`. */
   private def bm25Sql(k: Int): String = {
@@ -872,18 +898,7 @@ object RetrievalQueries extends QueryCatalog {
     // ── Borda + Copeland over the 12 monthly 1996 brand rankings.
     QueryDef("q_borda_brands",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val ranks = Tables.lineitem(s, d)
-          .join(broadcast(Tables.part(s, d)
-            .select(col("p_partkey"), col("p_brand"))),
-            col("l_partkey") === col("p_partkey"))
-          .where(expr("year(l_shipdate) = 1996"))
-          .groupBy(expr("month(l_shipdate)").as("m"), col("p_brand"))
-          .agg(sum(floor(col("l_extendedprice") * 100 + 0.5)
-            .cast("long")).as("rev"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("m"))
-              .orderBy(col("rev").desc, col("p_brand"))).cast("long"))
+        val ranks = monthlyBrandRanks(s, d)
           .localCheckpoint(false) // borda agg + pairwise majority
         val nb = ranks.agg(countDistinct(col("p_brand")).as("nb"))
         val borda = ranks.crossJoin(broadcast(nb))
@@ -907,13 +922,7 @@ object RetrievalQueries extends QueryCatalog {
         borda.join(duels, "p_brand")
           .selectExpr("p_brand", "months", "borda", "copeland2")
       },
-      Some("""WITH rev AS (
-             |  SELECT month(l_shipdate) AS m, p_brand,
-             |         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS rev
-             |  FROM lineitem JOIN part ON p_partkey = l_partkey
-             |  WHERE year(l_shipdate) = 1996
-             |  GROUP BY 1, 2),
+      Some(s"""WITH $brandRevSql,
              |rk AS (SELECT m, p_brand, CAST(row_number() OVER (
              |         PARTITION BY m ORDER BY rev DESC, p_brand)
              |         AS BIGINT) AS rk
@@ -950,18 +959,7 @@ object RetrievalQueries extends QueryCatalog {
     // ── Kemeny objective of Borda / Copeland / revenue orders.
     QueryDef("q_kemeny_objective",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val ranks = Tables.lineitem(s, d)
-          .join(broadcast(Tables.part(s, d)
-            .select(col("p_partkey"), col("p_brand"))),
-            col("l_partkey") === col("p_partkey"))
-          .where(expr("year(l_shipdate) = 1996"))
-          .groupBy(expr("month(l_shipdate)").as("m"), col("p_brand"))
-          .agg(sum(floor(col("l_extendedprice") * 100 + 0.5)
-            .cast("long")).as("rev"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("m"))
-              .orderBy(col("rev").desc, col("p_brand"))).cast("long"))
+        val ranks = monthlyBrandRanks(s, d)
           .localCheckpoint(false) // duel matrix + three candidate orders
         // duel margins: wins of a over b across months
         val duels = ranks.as("a")
@@ -1010,13 +1008,7 @@ object RetrievalQueries extends QueryCatalog {
               |WHEN 2 * wx < mm AND cx.pos < cy.pos THEN 1
               |ELSE 0 END""".stripMargin)).as("kemeny_violations"))
       },
-      Some("""WITH rev AS (
-             |  SELECT month(l_shipdate) AS m, p_brand,
-             |         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS rev
-             |  FROM lineitem JOIN part ON p_partkey = l_partkey
-             |  WHERE year(l_shipdate) = 1996
-             |  GROUP BY 1, 2),
+      Some(s"""WITH $brandRevSql,
              |rk AS MATERIALIZED (SELECT m, p_brand, rev,
              |         CAST(row_number() OVER (PARTITION BY m
              |           ORDER BY rev DESC, p_brand) AS BIGINT) AS rk

@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Stats, TimeSeries, Viterbi}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Series regularization, decomposition and shape: resampling and gap fill,
@@ -54,10 +54,7 @@ object SeriesShapeQueries extends QueryCatalog {
   }
 
   private val paaSql =
-    s"""(WITH daily AS (
-       |  SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-       |         count(*) AS c
-       |  FROM events GROUP BY 1, 2),
+    s"""(WITH $eventTypeDailySql,
        |r AS (SELECT k, c, row_number() OVER (PARTITION BY k ORDER BY day)
        |        AS rn FROM daily),
        |fr AS (SELECT k, (rn - 1) // 4 AS f, sum(c) // 4 AS pa,
@@ -70,9 +67,7 @@ object SeriesShapeQueries extends QueryCatalog {
   private val m = 7 // subsequence length (days)
 
   private def windowsDf(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val daily = Tables.events(s, d)
-      .select(expr("unix_micros(ts) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("c"))
+    val daily = eventsPerDay(s, d)
     val ord = Window.orderBy(col("day"))
     val leads = (1 until m).foldLeft(
       daily.withColumn("i", row_number().over(ord))
@@ -109,6 +104,43 @@ object SeriesShapeQueries extends QueryCatalog {
   private val E00 = -321928L; private val E01 = -2321928L
   private val E10 = -2000000L; private val E11 = -415037L
   private val PI = -1000000L
+  /** The Viterbi observation sequence: per day (in dense order `idx`
+    * from 0) whether its event count n beats the integer mean (o). */
+  private def highDayObs(s: SparkSession, d: String): DataFrame = {
+    val daily = Tables.events(s, d)
+      .selectExpr("unix_micros(ts) div 86400000000 AS day")
+      .groupBy(col("day")).agg(count(lit(1)).as("n"))
+    val tot = daily.agg(expr("sum(n) div count(1)").as("mean_n"))
+    daily.crossJoin(broadcast(tot))
+      .withColumn("o", (col("n") > col("mean_n")).cast("long"))
+      .withColumn("idx", row_number().over(Window.orderBy(col("day"))) - 1)
+  }
+
+  /** DuckDB twin of [[highDayObs]]: CTEs `daily`, `tot`, `obs` (idx, o). */
+  private val highDayObsSql =
+    """daily AS (
+      |  SELECT epoch_us(ts) // 86400000000 AS day,
+      |         CAST(count(*) AS BIGINT) AS n
+      |  FROM events GROUP BY 1),
+      |tot AS (SELECT CAST(sum(n) AS BIGINT) // count(*) AS mean_n
+      |        FROM daily),
+      |obs AS (SELECT row_number() OVER (ORDER BY day) - 1 AS idx,
+      |               CASE WHEN n > mean_n THEN 1 ELSE 0 END AS o
+      |        FROM daily CROSS JOIN tot)""".stripMargin
+
+  /** DuckDB twin of the 5-minute resample per user group (user_id % 3)
+    * and its dense bucket grid: CTEs `r` (grp, bucket_es, cnt, avg_e4),
+    * `span`, `spine` (grp, bucket_es). */
+  private val groupSpineSql =
+    """r AS (SELECT user_id % 3 AS grp,
+      |                  (CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 AS bucket_es,
+      |                  count(*) AS cnt,
+      |                  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 100
+      |                       // count(*) AS BIGINT) AS avg_e4
+      |           FROM events GROUP BY 1, 2),
+      |span AS (SELECT grp, min(bucket_es) AS b0, max(bucket_es) AS b1 FROM r GROUP BY 1),
+      |spine AS (SELECT grp, unnest(range(b0, b1 + 300, 300)) AS bucket_es FROM span)""".stripMargin
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── Resample events to a dense 5-min grid per user-group with
@@ -119,14 +151,7 @@ object SeriesShapeQueries extends QueryCatalog {
         graft.ops.TimeSeries.fillGaps(
           graft.ops.TimeSeries.resample(ev, "grp", "ts", "value", 300L), "grp", 300L)
       },
-      Some("""WITH r AS (SELECT user_id % 3 AS grp,
-             |                  (CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 AS bucket_es,
-             |                  count(*) AS cnt,
-             |                  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 100
-             |                       // count(*) AS BIGINT) AS avg_e4
-             |           FROM events GROUP BY 1, 2),
-             |span AS (SELECT grp, min(bucket_es) AS b0, max(bucket_es) AS b1 FROM r GROUP BY 1),
-             |spine AS (SELECT grp, unnest(range(b0, b1 + 300, 300)) AS bucket_es FROM span),
+      Some(s"""WITH $groupSpineSql,
              |j AS (SELECT s.grp, s.bucket_es, coalesce(r.cnt, 0) AS cnt, r.avg_e4
              |      FROM spine s LEFT JOIN r USING (grp, bucket_es))
              |SELECT grp, bucket_es, cnt,
@@ -145,14 +170,7 @@ object SeriesShapeQueries extends QueryCatalog {
         TimeSeries.interpolate(
           TimeSeries.resample(ev, "grp", "ts", "value", 300L), "grp", 300L)
       },
-      Some("""WITH r AS (SELECT user_id % 3 AS grp,
-             |                  (CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 AS bucket_es,
-             |                  count(*) AS cnt,
-             |                  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 100
-             |                       // count(*) AS BIGINT) AS avg_e4
-             |           FROM events GROUP BY 1, 2),
-             |span AS (SELECT grp, min(bucket_es) AS b0, max(bucket_es) AS b1 FROM r GROUP BY 1),
-             |spine AS (SELECT grp, unnest(range(b0, b1 + 300, 300)) AS bucket_es FROM span),
+      Some(s"""WITH $groupSpineSql,
              |j AS (SELECT s.grp, s.bucket_es, coalesce(r.cnt, 0) AS cnt, r.avg_e4,
              |             CASE WHEN r.avg_e4 IS NOT NULL THEN s.bucket_es END AS obs_es
              |      FROM spine s LEFT JOIN r USING (grp, bucket_es)),
@@ -177,9 +195,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    weighted by its dwell time to the next event (seconds).
     QueryDef("q_time_weighted_avg",
       (s, d) => TimeSeries.timeWeightedAvg(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some("""WITH e AS (SELECT event_type AS key, epoch_us(ts) AS t, event_id,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events),
@@ -196,9 +212,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    truncated mean + cross-multiplied seasonal lift.
     QueryDef("q_seasonal_profile",
       (s, d) => TimeSeries.seasonalProfile(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "cents"),
       Some("""WITH e AS (SELECT event_type AS key,
              |                 ((epoch_us(ts) // 86400000000) + 3) % 7 AS dow,
@@ -331,10 +345,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    alignment buys).
     QueryDef("q_dtw_paa",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("k"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("c"))
+        val daily = eventTypeDaily(s, d)
         val p = paa(daily).localCheckpoint(false)
         val a = p.select(col("k").as("ka") +:
           (1 to N).map(i => col(s"p$i").as(s"a$i")): _*)
@@ -397,9 +408,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    distance is the discord.
     QueryDef("q_ts_discord",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = eventsPerDay(s, d)
           .withColumn("w", expr("day div 7"))
           .withColumn("dw", expr("day % 7"))
         val weeks = daily.groupBy(col("w"))
@@ -428,9 +437,7 @@ object SeriesShapeQueries extends QueryCatalog {
             s"(coalesce(a.d$i, 0) - coalesce(b.d$i, 0))").mkString(" + ")
         val piv = (0 to 6).map(i =>
           s"max(CASE WHEN day % 7 = $i THEN c END) AS d$i").mkString(", ")
-        s"""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-           |                     CAST(count(*) AS BIGINT) AS c
-           |              FROM events GROUP BY 1),
+        s"""WITH $eventsPerDaySql,
            |weeks AS (SELECT day // 7 AS w, $piv
            |          FROM daily GROUP BY 1),
            |pairs AS (SELECT a.w, min($d2) AS nn_d2
@@ -446,9 +453,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    best burst = max over t of prefix_t − min(prefix before t).
     QueryDef("q_max_subarray",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = eventsPerDay(s, d)
         val tot = daily.agg(count(lit(1)).as("n"), sum(col("c")).as("s"))
         val ord = Window.orderBy(col("day"))
         val p = daily.crossJoin(broadcast(tot))
@@ -468,9 +473,7 @@ object SeriesShapeQueries extends QueryCatalog {
           .selectExpr("day AS burst_end_day", "burst_n AS burst_sum_nscaled",
             "CAST(n AS BIGINT) AS n_days")
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDaySql,
              |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
              |               CAST(sum(c) AS BIGINT) AS s FROM daily),
              |p AS (SELECT day, n,
@@ -551,11 +554,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    instead of emitting biased ones.
     QueryDef("q_kz_filter",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr(
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000")
-            .as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
         val w2 = Window.orderBy(col("day")).rangeBetween(-2, 2)
         val p1 = daily
           .withColumn("s1", sum(col("c")).over(w2))
@@ -568,10 +567,7 @@ object SeriesShapeQueries extends QueryCatalog {
           .filter(col("n2") === 5L)
           .select(col("day"), col("s2").as("kz_x25"))
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |p1 AS (SELECT day,
              |              CAST(sum(c) OVER w AS BIGINT) AS s1,
              |              count(*) OVER w AS n1
@@ -661,13 +657,7 @@ object SeriesShapeQueries extends QueryCatalog {
     //    = max over end states of (v0 ⊗ M_1 ⊗ … ⊗ M_{T−1}).
     QueryDef("q_viterbi_maxplus",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .selectExpr("unix_micros(ts) div 86400000000 AS day")
-          .groupBy(col("day")).agg(count(lit(1)).as("n"))
-        val tot = daily.agg(expr("sum(n) div count(1)").as("mean_n"))
-        val obs = daily.crossJoin(broadcast(tot))
-          .withColumn("o", (col("n") > col("mean_n")).cast("long"))
-          .withColumn("idx", row_number().over(Window.orderBy(col("day"))) - 1)
+        val obs = highDayObs(s, d)
           .select(col("idx"), col("o"))
           .localCheckpoint(false) // bounded day axis, feeds v0 AND chain
         val mats = obs.filter(col("idx") > 0)
@@ -690,15 +680,7 @@ object SeriesShapeQueries extends QueryCatalog {
             "CASE WHEN v_end0 >= v_end1 THEN 0L ELSE 1L END AS best_state",
             "greatest(v_end0, v_end1) AS best_logp_e6")
       },
-      Some(s"""WITH daily AS (
-              |  SELECT epoch_us(ts) // 86400000000 AS day,
-              |         CAST(count(*) AS BIGINT) AS n
-              |  FROM events GROUP BY 1),
-              |tot AS (SELECT CAST(sum(n) AS BIGINT) // count(*) AS mean_n
-              |        FROM daily),
-              |obs AS (SELECT row_number() OVER (ORDER BY day) - 1 AS idx,
-              |               CASE WHEN n > mean_n THEN 1 ELSE 0 END AS o
-              |        FROM daily CROSS JOIN tot),
+      Some(s"""WITH $highDayObsSql,
               |dp AS (
               |  SELECT 0 AS d,
               |         CASE WHEN o = 0 THEN $PI + $E00
@@ -741,13 +723,7 @@ object SeriesShapeQueries extends QueryCatalog {
 
     QueryDef("q_viterbi_path",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .selectExpr("unix_micros(ts) div 86400000000 AS day")
-          .groupBy(col("day")).agg(count(lit(1)).as("n"))
-        val tot = daily.agg(expr("sum(n) div count(1)").as("mean_n"))
-        val obs = daily.crossJoin(broadcast(tot))
-          .withColumn("o", (col("n") > col("mean_n")).cast("long"))
-          .withColumn("idx", row_number().over(Window.orderBy(col("day"))) - 1)
+        val obs = highDayObs(s, d)
           .select(col("idx"), col("o"))
           .localCheckpoint(false)
         val mats = obs.filter(col("idx") > 0)
@@ -779,15 +755,7 @@ object SeriesShapeQueries extends QueryCatalog {
             "CASE WHEN f0 + b0 >= f1 + b1 THEN 0L ELSE 1L END AS state",
             "greatest(f0 + b0, f1 + b1) AS path_score_e6")
       },
-      Some(s"""WITH daily AS (
-              |  SELECT epoch_us(ts) // 86400000000 AS day,
-              |         CAST(count(*) AS BIGINT) AS n
-              |  FROM events GROUP BY 1),
-              |tot AS (SELECT CAST(sum(n) AS BIGINT) // count(*) AS mean_n
-              |        FROM daily),
-              |obs AS (SELECT row_number() OVER (ORDER BY day) - 1 AS idx,
-              |               CASE WHEN n > mean_n THEN 1 ELSE 0 END AS o
-              |        FROM daily CROSS JOIN tot),
+      Some(s"""WITH $highDayObsSql,
               |mx AS (SELECT CAST(max(idx) AS BIGINT) AS t_last FROM obs),
               |fwd AS (
               |  SELECT 0 AS d,

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{ClusterEval, Similarity}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Similarity search and embedding analytics over `embeddings`: exact and
@@ -11,6 +12,31 @@ import org.apache.spark.sql.functions._
 object SimilarityQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** The IVF probe inputs: vectors e (vec_id, ev), the 8 fixed
+    * centroids (c_id, cv) and the query vector qv of vec_id 0. */
+  private def ivfInputs(s: SparkSession, d: String) = {
+    val e = Similarity.cast(Tables.embeddings(s, d)).select(col("vec_id"), col("ev"))
+    val cents = e.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("c_id"), col("ev").as("cv"))
+    (e, cents, e.filter(col("vec_id") === 0).select(col("ev").as("qv")))
+  }
+
+  /** DuckDB twin of [[ivfInputs]] with each vector assigned to its
+    * nearest centroid by cosine: CTEs `cents`, `e`, `asn` (vec_id, ev,
+    * c_id). */
+  private val ivfCellsSql =
+    """cents AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv
+      |               FROM embeddings WHERE vec_id < 8),
+      |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+      |asn AS (SELECT vec_id, ev, c_id FROM (
+      |          SELECT e.vec_id, e.ev, c.c_id,
+      |                 row_number() OVER (PARTITION BY e.vec_id
+      |                   ORDER BY list_dot_product(e.ev, c.cv) /
+      |                     (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+      |                   c.c_id ASC) AS rn
+      |          FROM e CROSS JOIN cents c) t
+      |        WHERE rn = 1)""".stripMargin
 
   /** 8 integer hyperplanes in [-1000,1000]^64, seeded — embedded as
     * literals in both the Spark plan and the oracle SQL. */
@@ -195,13 +221,7 @@ object SimilarityQueries extends QueryCatalog {
         val q = e.filter(col("vec_id") === 0).select(col("ev").as("qv"))
         Similarity.topK(e.filter(col("vec_id") > 0).select(col("vec_id"), col("ev")), q, 10)
       },
-      Some("""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings WHERE vec_id > 0)
-             |SELECT vec_id,
-             |       round(list_dot_product(ev, qv) /
-             |             (sqrt(list_dot_product(ev, ev)) * sqrt(list_dot_product(qv, qv))), 6) AS cos
-             |FROM e, q
-             |ORDER BY cos DESC, vec_id ASC LIMIT 10""".stripMargin)),
+      Some(cosineTop10Sql)),
 
     // ── LSH-bucketed ANN candidate pairs (the 100 TB path: pairs only ever
     //    form inside a bucket). Injected scaled copies land in the same
@@ -248,23 +268,10 @@ object SimilarityQueries extends QueryCatalog {
     //    path for 100 TB; a production index k-means-trains centroids).
     QueryDef("q_sim_ivf",
       (s, d) => {
-        val e = Similarity.cast(Tables.embeddings(s, d)).select(col("vec_id"), col("ev"))
-        val cents = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("c_id"), col("ev").as("cv"))
-        val q = e.filter(col("vec_id") === 0).select(col("ev").as("qv"))
+        val (e, cents, q) = ivfInputs(s, d)
         Similarity.ivfProbe(Similarity.ivfAssign(e, cents), cents, q, 5)
       },
-      Some("""WITH cents AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv
-             |               FROM embeddings WHERE vec_id < 8),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-             |asn AS (SELECT vec_id, ev, c_id FROM (
-             |          SELECT e.vec_id, e.ev, c.c_id,
-             |                 row_number() OVER (PARTITION BY e.vec_id
-             |                   ORDER BY list_dot_product(e.ev, c.cv) /
-             |                     (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-             |                   c.c_id ASC) AS rn
-             |          FROM e CROSS JOIN cents c) t
-             |        WHERE rn = 1),
+      Some(s"""WITH $ivfCellsSql,
              |q AS (SELECT ev AS qv, c_id AS q_cell FROM asn WHERE vec_id = 0)
              |SELECT a.vec_id,
              |       round(list_dot_product(a.ev, q.qv) /
@@ -278,10 +285,7 @@ object SimilarityQueries extends QueryCatalog {
     //    ships. Both legs reuse the library operators.
     QueryDef("q_sim_recall",
       (s, d) => {
-        val e = Similarity.cast(Tables.embeddings(s, d)).select(col("vec_id"), col("ev"))
-        val cents = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("c_id"), col("ev").as("cv"))
-        val q = e.filter(col("vec_id") === 0).select(col("ev").as("qv"))
+        val (e, cents, q) = ivfInputs(s, d)
         val ivf = Similarity.ivfProbe(Similarity.ivfAssign(e, cents), cents, q, 5)
           .select(col("vec_id"))
         val brute = Similarity.topK(e, q, 5).select(col("vec_id"))
@@ -290,17 +294,7 @@ object SimilarityQueries extends QueryCatalog {
           .select(lit(5L).as("k"), col("n_hits"),
             round(col("n_hits").cast("double") / 5.0, 2).as("recall"))
       },
-      Some("""WITH cents AS (SELECT vec_id AS c_id, CAST(embedding AS DOUBLE[]) AS cv
-             |               FROM embeddings WHERE vec_id < 8),
-             |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-             |asn AS (SELECT vec_id, ev, c_id FROM (
-             |          SELECT e.vec_id, e.ev, c.c_id,
-             |                 row_number() OVER (PARTITION BY e.vec_id
-             |                   ORDER BY list_dot_product(e.ev, c.cv) /
-             |                     (sqrt(list_dot_product(e.ev, e.ev)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-             |                   c.c_id ASC) AS rn
-             |          FROM e CROSS JOIN cents c) t
-             |        WHERE rn = 1),
+      Some(s"""WITH $ivfCellsSql,
              |q AS (SELECT ev AS qv, c_id AS q_cell FROM asn WHERE vec_id = 0),
              |ivf AS (SELECT a.vec_id,
              |               round(list_dot_product(a.ev, q.qv) /
@@ -568,7 +562,6 @@ object SimilarityQueries extends QueryCatalog {
     //    Rayleigh quotient over the q_pca_power iterate.
     QueryDef("q_isotropy",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val gram = Similarity.gramMatrix(Tables.embeddings(s, d), 8)
           .localCheckpoint(false)
         val x1 = Similarity.powerIteration(gram, 8, 3)

@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Dedup, Quantiles, Sampling, Sketches}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sketches, synopses and samples: distinct-count, frequency and quantile
@@ -85,6 +85,22 @@ object SketchQueries extends QueryCatalog {
     s"CASE WHEN substring(md5(concat(CAST($key AS VARCHAR), '_$j')), 1, 1)" +
       s" IN ('0','1','2','3','4','5','6','7') THEN 1 ELSE -1 END"
 
+  /** Per event type the log-bucket counts of the value cents (bucket
+    * width 57536 in log2 e6 units) with running and total counts: CTEs
+    * `e`, `b`, `c`, `w` (g, bucket, cnt, cum, n). */
+  private val logBucketsSql = {
+    val lg = Bm25.log2E6Sql("v")
+    s"""e AS (SELECT event_type AS g,
+       |                 greatest(1, CAST(floor(value * 100 + 0.5) AS BIGINT)) AS v
+       |           FROM events),
+       |b AS (SELECT g, $lg // 57536 AS bucket FROM e),
+       |c AS (SELECT g, bucket, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY 1, 2),
+       |w AS (SELECT g, bucket, cnt,
+       |             CAST(sum(cnt) OVER (PARTITION BY g ORDER BY bucket) AS BIGINT) AS cum,
+       |             CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
+       |      FROM c)""".stripMargin
+  }
+
   def defs: Seq[QueryDef] = Seq(
 
     // ── Count-min heavy hitters ([[Sketches]]): 3×64 integer counter table
@@ -154,16 +170,7 @@ object SketchQueries extends QueryCatalog {
           floor(col("value") * 100 + 0.5).cast("long").as("cents")),
         "g", "cents", 57536L, Seq(500000L, 950000L, 990000L)),
       Some {
-        val lg = Bm25.log2E6Sql("v")
-        s"""WITH e AS (SELECT event_type AS g,
-           |                 greatest(1, CAST(floor(value * 100 + 0.5) AS BIGINT)) AS v
-           |           FROM events),
-           |b AS (SELECT g, $lg // 57536 AS bucket FROM e),
-           |c AS (SELECT g, bucket, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY 1, 2),
-           |w AS (SELECT g, bucket, cnt,
-           |             CAST(sum(cnt) OVER (PARTITION BY g ORDER BY bucket) AS BIGINT) AS cum,
-           |             CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
-           |      FROM c),
+        s"""WITH $logBucketsSql,
            |ps AS (SELECT unnest([500000, 950000, 990000]) AS p_e6)
            |SELECT g, CAST(ps.p_e6 AS BIGINT) AS p_e6, CAST(bucket AS BIGINT) AS bucket,
            |       CAST((n * ps.p_e6 + 999999) // 1000000 AS BIGINT) AS k, n
@@ -219,16 +226,7 @@ object SketchQueries extends QueryCatalog {
           graft.ops.Sketches.mergeLogBuckets(perShard), Seq(500000L, 950000L))
       },
       Some {
-        val lg = Bm25.log2E6Sql("v")
-        s"""WITH e AS (SELECT event_type AS g,
-           |                 greatest(1, CAST(floor(value * 100 + 0.5) AS BIGINT)) AS v
-           |           FROM events),
-           |b AS (SELECT g, $lg // 57536 AS bucket FROM e),
-           |c AS (SELECT g, bucket, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY 1, 2),
-           |w AS (SELECT g, bucket, cnt,
-           |             CAST(sum(cnt) OVER (PARTITION BY g ORDER BY bucket) AS BIGINT) AS cum,
-           |             CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
-           |      FROM c),
+        s"""WITH $logBucketsSql,
            |ps AS (SELECT unnest([500000, 950000]) AS p_e6)
            |SELECT g, CAST(ps.p_e6 AS BIGINT) AS p_e6, CAST(bucket AS BIGINT) AS bucket,
            |       CAST((n * ps.p_e6 + 999999) // 1000000 AS BIGINT) AS k, n
@@ -525,11 +523,7 @@ object SketchQueries extends QueryCatalog {
     //    deleted — exact integer pseudo-means, influence ranking.
     QueryDef("q_jackknife_groups",
       (s, d) => {
-        val spend = Tables.orders(s, d).groupBy(col("o_custkey"))
-          .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-            .as("y"))
-        val g = Tables.customer(s, d)
-          .join(spend, col("c_custkey") === col("o_custkey"))
+        val g = spenders(s, d)
           .groupBy(col("c_nationkey").cast("long").as("nk"))
           .agg(count(lit(1)).as("ng"), sum(col("y")).as("sg"))
         val tot = g.agg(sum(col("ng")).as("n"), sum(col("sg")).as("s"))
@@ -538,10 +532,7 @@ object SketchQueries extends QueryCatalog {
             "(s - sg) div (n - ng) AS mean_wo_cents",
             "(s - sg) div (n - ng) - s div n AS influence_cents")
       },
-      Some("""WITH spend AS (SELECT o_custkey,
-             |                 CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |                   AS BIGINT)) AS BIGINT) AS y
-             |               FROM orders GROUP BY 1),
+      Some(s"""WITH $spendYSql,
              |g AS (SELECT CAST(c_nationkey AS BIGINT) AS nk,
              |             CAST(count(*) AS BIGINT) AS ng,
              |             CAST(sum(y) AS BIGINT) AS sg
@@ -911,9 +902,7 @@ object SketchQueries extends QueryCatalog {
     //    One rank window (value-sorted, calendar-free) + one rollup.
     QueryDef("q_equidepth_hist",
       (s, d) => {
-        val v = Tables.orders(s, d)
-          .select(floor(col("o_totalprice") * 100 + 0.5).cast("long")
-            .as("v"))
+        val v = orderCents(s, d)
         val n = v.agg(count(lit(1)).as("n"))
         v.crossJoin(broadcast(n))
           .withColumn("rn", row_number().over(
@@ -1091,17 +1080,7 @@ object SketchQueries extends QueryCatalog {
     // ── Neyman allocation across priority strata (budget 10000).
     QueryDef("q_neyman_alloc",
       (s, d) => {
-        val g = Tables.orders(s, d)
-          .select(col("o_orderpriority").as("pri"),
-            expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)")
-              .as("x"))
-          .groupBy(col("pri"))
-          .agg(count(lit(1)).as("ni"), sum(col("x")).as("si"),
-            sum(expr(s"CAST(x AS $dec) * x")).as("qi"))
-          .filter(col("ni") >= 2L)
-          .withColumn("si2",
-            expr(s"CAST((CAST(ni AS $dec) * qi - CAST(si AS $dec) * si)" +
-              s" div (CAST(ni AS $dec) * (ni - 1)) AS BIGINT)"))
+        val g = prioPriceVariance(s, d)
           .withColumn("s_cents",
             expr("CAST(floor(sqrt(CAST(si2 AS DOUBLE)) + 0.5) AS BIGINT)"))
           .withColumn("wh", expr(s"CAST(ni AS $dec) * s_cents"))
@@ -1111,16 +1090,7 @@ object SketchQueries extends QueryCatalog {
             "CAST(wh * 1000000 div wtot AS BIGINT) AS share_e6",
             "CAST(wh * 10000 div wtot AS BIGINT) AS alloc_10k")
       },
-      Some("""WITH g0 AS (
-             |  SELECT o_orderpriority AS pri,
-             |         CAST(count(*) AS BIGINT) AS ni,
-             |         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS si,
-             |         sum(CAST(CAST(floor(o_totalprice * 100 + 0.5)
-             |           AS BIGINT) AS HUGEINT)
-             |           * CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-             |           AS qi
-             |  FROM orders GROUP BY 1 HAVING count(*) >= 2),
+      Some(s"""WITH $prioPriceMomentsSql,
              |g AS (SELECT pri, ni,
              |        CAST(floor(sqrt(CAST(
              |          CAST((CAST(ni AS HUGEINT) * qi

@@ -4,6 +4,7 @@ import graft.{QueryCatalog, QueryDef, Tables}
 import graft.geo.{Geofence, HexSql, Hilbert, RadiusJoin}
 import graft.stream.Pipeline
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spatial statistics and spatial joins: autocorrelation (global and
@@ -12,6 +13,24 @@ import org.apache.spark.sql.functions._
 object SpatialQueries extends QueryCatalog {
 
   import Fixtures._
+
+  /** Events per synthetic latitude band: (band, x). */
+  private def userBands(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(expr("(user_id * 37 % 17000) div 500").as("band"))
+      .groupBy(col("band")).agg(count(lit(1)).as("x"))
+
+  /** DuckDB twin of [[userBands]] (CTE `bands`). */
+  private val userBandsSql =
+    """bands AS (
+      |  SELECT (user_id * 37 % 17000) // 500 AS band,
+      |         CAST(count(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1)""".stripMargin
+
+  /** [[userBandsSql]] plus the band totals `tot` (n, sx). */
+  private val userBandsTotSql = userBandsSql + """,
+    |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+    |               CAST(sum(x) AS BIGINT) AS sx FROM bands)""".stripMargin
 
   /** Hexagonal fence (centidegrees) centered on the always-populated
     * southern latitude band of the synthetic positions. */
@@ -68,10 +87,7 @@ object SpatialQueries extends QueryCatalog {
     //    (|Δband| = 1): exact n²-scaled integer moments, one close.
     QueryDef("q_morans_i",
       (s, d) => {
-        val dec = "decimal(38,0)"
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false) // both adjacency sides + moments
         val tot = bands.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
         val z = bands.crossJoin(broadcast(tot))
@@ -89,12 +105,7 @@ object SpatialQueries extends QueryCatalog {
               |/ (CAST(2 * w_half AS DOUBLE) * CAST(zz AS DOUBLE)), 6)
               |AS morans_i""".stripMargin)
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             |               CAST(sum(x) AS BIGINT) AS sx FROM bands),
+      Some(s"""WITH $userBandsTotSql,
              |z AS (SELECT band, CAST(n * x - sx AS HUGEINT) AS z
              |      FROM bands CROSS JOIN tot),
              |num AS (SELECT sum(a.z * b.z) AS cross2,
@@ -116,12 +127,7 @@ object SpatialQueries extends QueryCatalog {
     //    bucket is one connected blob — fewer files per viewport scan.
     QueryDef("q_hilbert_layout",
       (s, d) => {
-        val cells = Pipeline.snap(Pipeline.sanitize(Tables.positions(s, d)), res)
-          .groupBy(col("cellId")).agg(count(lit(1)).as("cnt"))
-          .withColumn("parts", split(col("cellId"), ":"))
-          .select(col("cnt"),
-            element_at(col("parts"), 2).cast("long").as("qi"),
-            element_at(col("parts"), 3).cast("long").as("ri"))
+        val cells = cellCounts(s, d, res)
         Hilbert.withHilbert(cells, col("qi"), col("ri"), "hd", bits = 10)
           .groupBy(expr("hd div 1024").as("d_bucket"))
           .agg(count(lit(1)).as("n_cells"), sum(col("cnt")).as("n_events"),
@@ -144,9 +150,7 @@ object SpatialQueries extends QueryCatalog {
     //    engines. Gi* > 0 marks a hot band, < 0 a cold one.
     QueryDef("q_getis_ord",
       (s, d) => {
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false) // band axis: window + global moments
         val tot = bands.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(expr("x * x")).as("sxx"))
@@ -167,10 +171,7 @@ object SpatialQueries extends QueryCatalog {
               |            / CAST(n - 1 AS DOUBLE))), 6) END AS gi"""
               .stripMargin)
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
+      Some(s"""WITH $userBandsSql,
              |w AS (SELECT band, x,
              |             CAST(count(*) OVER nb AS BIGINT) AS w_i,
              |             CAST(sum(x) OVER nb AS BIGINT) AS s_i
@@ -198,9 +199,7 @@ object SpatialQueries extends QueryCatalog {
     //    integer; the three radii ride one checkpointed 34-band axis.
     QueryDef("q_ripley_k",
       (s, d) => {
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false) // three radii share the axis
         def nb(r: Int) = Window.orderBy(col("band")).rangeBetween(-r, r)
         val m = bands
@@ -217,10 +216,7 @@ object SpatialQueries extends QueryCatalog {
           s"($p - n) * 1000000 div (n * (n - 1)) AS k_e6")
         row(1, "p1").unionByName(row(2, "p2")).unionByName(row(4, "p4"))
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
+      Some(s"""WITH $userBandsSql,
              |w AS (SELECT x,
              |        CAST(sum(x) OVER (ORDER BY band RANGE BETWEEN
              |          1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS s1,
@@ -368,9 +364,7 @@ object SpatialQueries extends QueryCatalog {
     // ── LISA: z and neighbor-lag per band; quadrant from the signs.
     QueryDef("q_local_morans",
       (s, d) => {
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false) // reused: z build + both neighbor shifts
         val tot = bands.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
         val z = bands.crossJoin(broadcast(tot))
@@ -396,12 +390,7 @@ object SpatialQueries extends QueryCatalog {
               |     WHEN z > 0 THEN 'HL' ELSE 'LH' END AS quadrant"""
               .stripMargin)
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             |               CAST(sum(x) AS BIGINT) AS sx FROM bands),
+      Some(s"""WITH $userBandsTotSql,
              |z AS (SELECT band, x, n,
              |             CAST(n * x - sx AS HUGEINT) AS z
              |      FROM bands CROSS JOIN tot),
@@ -429,9 +418,7 @@ object SpatialQueries extends QueryCatalog {
     // ── Geary's C: (n−1)·Σ_adj(z_i−z_j)² / (2·W_unordered·Σz²).
     QueryDef("q_gearys_c",
       (s, d) => {
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false)
         val tot = bands.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
         val z = bands.crossJoin(broadcast(tot))
@@ -449,12 +436,7 @@ object SpatialQueries extends QueryCatalog {
                |/ (CAST('2.0' AS DOUBLE) * CAST(w_half AS DOUBLE)
                |   * CAST(zz AS DOUBLE)), 6) AS gearys_c""".stripMargin)
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             |               CAST(sum(x) AS BIGINT) AS sx FROM bands),
+      Some(s"""WITH $userBandsTotSql,
              |z AS (SELECT band, CAST(n * x - sx AS HUGEINT) AS z, n
              |      FROM bands CROSS JOIN tot),
              |adj AS (SELECT sum((a.z - b.z) * (a.z - b.z)) AS dsum,
@@ -472,9 +454,7 @@ object SpatialQueries extends QueryCatalog {
     //    rook pairs vs free-sampling expectations, e6 integers.
     QueryDef("q_join_counts",
       (s, d) => {
-        val bands = Tables.events(s, d)
-          .select(expr("(user_id * 37 % 17000) div 500").as("band"))
-          .groupBy(col("band")).agg(count(lit(1)).as("x"))
+        val bands = userBands(s, d)
           .localCheckpoint(false)
         val tot = bands.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
         val h = bands.crossJoin(broadcast(tot))
@@ -495,12 +475,7 @@ object SpatialQueries extends QueryCatalog {
             "w * nb * nb * 1000000 div (n * n) AS e_bb_e6",
             "w * 2 * nb * (n - nb) * 1000000 div (n * n) AS e_bw_e6")
       },
-      Some("""WITH bands AS (
-             |  SELECT (user_id * 37 % 17000) // 500 AS band,
-             |         CAST(count(*) AS BIGINT) AS x
-             |  FROM events GROUP BY 1),
-             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             |               CAST(sum(x) AS BIGINT) AS sx FROM bands),
+      Some(s"""WITH $userBandsTotSql,
              |h AS (SELECT band,
              |             CASE WHEN n * x - sx > 0 THEN 1 ELSE 0 END
              |               AS hot, n
@@ -527,10 +502,7 @@ object SpatialQueries extends QueryCatalog {
     // ── Madogram + variogram of daily revenue at lags 1..7.
     QueryDef("q_madogram",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .groupBy(col("o_orderdate").as("dt"))
-          .agg(sum(expr("CAST(floor(o_totalprice / 100 + 0.5) AS BIGINT)"))
-            .as("x"))
+        val daily = ordersDailyHecto(s, d)
           .localCheckpoint(false) // calendar-bounded (~days, not SF)
         val lagged = daily
           .withColumn("h", explode(array((1 to 7).map(lit(_)): _*)))
@@ -546,11 +518,7 @@ object SpatialQueries extends QueryCatalog {
             s"CAST(CAST(ssq AS $dec) * 1000000 div (2 * nh) AS BIGINT)" +
               " AS vario_e6")
       },
-      Some("""WITH daily AS (
-             |  SELECT CAST(o_orderdate AS DATE) AS dt,
-             |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS x
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersDailyHectoSql,
              |lagged AS (SELECT a.x, a.dt + l.h AS dt2, l.h
              |           FROM daily a CROSS JOIN
              |             (SELECT unnest([1,2,3,4,5,6,7]) AS h) l)

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.Anomaly
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Statistical process control and change detection: Shewhart charts, CUSUM
@@ -21,6 +22,18 @@ object SpcQueries extends QueryCatalog {
        |   * (CAST($sxy AS DOUBLE) - CAST($sx AS DOUBLE) * $sy / $n)
        |   / (CAST($sxx AS DOUBLE) - CAST($sx AS DOUBLE) * $sx / $n))"""
       .stripMargin
+
+  /** Events per day as (day, x). */
+  private def eventsPerDayX(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(expr("unix_micros(ts) div 86400000000").as("day"))
+      .groupBy(col("day")).agg(count(lit(1)).as("x"))
+
+  /** DuckDB twin of [[eventsPerDayX]] (CTE `daily`). */
+  private val eventsPerDayXSql =
+    """daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
+      |                     CAST(count(*) AS BIGINT) AS x
+      |              FROM events GROUP BY 1)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -48,9 +61,7 @@ object SpcQueries extends QueryCatalog {
     //    mean shift per event type (earliest split on ties).
     QueryDef("q_changepoint",
       (s, d) => Anomaly.changepoint(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some("""WITH e AS (SELECT event_type AS key, epoch_us(ts) AS t, event_id,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS cv
@@ -77,9 +88,7 @@ object SpcQueries extends QueryCatalog {
     //    the best split inside each resulting half.
     QueryDef("q_binary_segmentation",
       (s, d) => Anomaly.binarySegmentation(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some("""WITH e AS (SELECT event_type AS key, epoch_us(ts) AS t, event_id AS tie,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
@@ -135,10 +144,7 @@ object SpcQueries extends QueryCatalog {
     //    var18 = n(n−1)(2n+5) − Σ t(t−1)(2t+5)  (= 18·Var(S), exact).
     QueryDef("q_mann_kendall",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("k"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("c"))
+        val daily = eventTypeDaily(s, d)
         val a = daily.select(col("k"), col("day").as("day_a"), col("c").as("c_a"))
         val b = daily.select(col("k"), col("day").as("day_b"), col("c").as("c_b"))
         val pairs = a.join(b, Seq("k")).filter(col("day_a") < col("day_b"))
@@ -161,10 +167,7 @@ object SpcQueries extends QueryCatalog {
             (col("n_days") * (col("n_days") - 1) * (col("n_days") * 2 + 5)
               - col("tie_term")).as("var18"))
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-             |         count(*) AS c
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $eventTypeDailySql,
              |p AS (
              |  SELECT a.k,
              |         sum(CAST(CASE WHEN b.c > a.c THEN 1
@@ -196,10 +199,7 @@ object SpcQueries extends QueryCatalog {
     //    q_burstiness (dispersion).
     QueryDef("q_runs_test",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("k"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("c"))
+        val daily = eventTypeDaily(s, d)
         val wd = Window.partitionBy(col("k")).orderBy(col("day"))
         val signs = daily
           .withColumn("delta", col("c") - lag(col("c"), 1).over(wd))
@@ -218,10 +218,7 @@ object SpcQueries extends QueryCatalog {
             expr("1000000 + (2 * n_plus * n_minus * 1000000) "
               + "div (n_plus + n_minus)"))
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-             |         count(*) AS c
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $eventTypeDailySql,
              |d AS (
              |  SELECT k, day, c - lag(c) OVER (PARTITION BY k ORDER BY day)
              |           AS delta
@@ -253,10 +250,7 @@ object SpcQueries extends QueryCatalog {
     //    ingest pipeline runs.
     QueryDef("q_volume_anomaly",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("k"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("c"))
+        val daily = eventTypeDaily(s, d)
         val m = daily.groupBy(col("k"))
           .agg(count(lit(1)).as("n"), sum(col("c")).as("s"),
             sum(col("c") * col("c")).as("q"))
@@ -268,10 +262,7 @@ object SpcQueries extends QueryCatalog {
             expr("""CAST((n * c - s) * (n * c - s) > 4 * (n * q - s * s)
                    |AS BIGINT)""".stripMargin).as("anomaly"))
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-             |         count(*) AS c
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $eventTypeDailySql,
              |m AS (
              |  SELECT k, count(*) AS n, sum(c) AS s, sum(c * c) AS q
              |  FROM daily GROUP BY 1)
@@ -347,9 +338,7 @@ object SpcQueries extends QueryCatalog {
     //    banded day emitted, breaches labeled high/low.
     QueryDef("q_bollinger",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("x"))
+        val daily = eventsPerDayX(s, d)
         val w = Window.orderBy(col("day")).rowsBetween(-6, 0)
         daily
           .withColumn("nw", count(lit(1)).over(w))
@@ -366,9 +355,7 @@ object SpcQueries extends QueryCatalog {
               |       - 2 * sigma7 THEN 'low'
               |     ELSE 'in' END AS band""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS x
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDayXSql,
              |wnd AS (SELECT day, x,
              |               CAST(count(*) OVER w AS BIGINT) AS nw,
              |               CAST(sum(x) OVER w AS BIGINT) AS sw,
@@ -395,9 +382,7 @@ object SpcQueries extends QueryCatalog {
     //    the argmax |U| locates the change point.
     QueryDef("q_pettitt",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("x"))
+        val daily = eventsPerDayX(s, d)
           .localCheckpoint(false) // both pair sides
         val b = daily.select(col("day").as("d2"), col("x").as("x2"))
         val u = daily.join(b, col("day") < col("d2"))
@@ -414,9 +399,7 @@ object SpcQueries extends QueryCatalog {
           .where(col("rk") === 1)
           .select(col("day").as("change_day"), col("ut").as("u_stat"))
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS x
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDayXSql,
              |pairs AS (SELECT a.day,
              |                 CASE WHEN b.x > a.x THEN 1
              |                      WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
@@ -435,9 +418,7 @@ object SpcQueries extends QueryCatalog {
     //    expectation, z via the exact variance (16n−29)/90.
     QueryDef("q_turning_points",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("x"))
+        val daily = eventsPerDayX(s, d)
         val w = Window.orderBy(col("day"))
         daily
           .withColumn("xp", lag(col("x"), 1).over(w))
@@ -455,9 +436,7 @@ object SpcQueries extends QueryCatalog {
               |/ sqrt(CAST(16 * (n_interior + 2) - 29 AS DOUBLE)
               |       / CAST('90.0' AS DOUBLE)), 6) AS z""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS x
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDayXSql,
              |t AS (SELECT x, lag(x) OVER (ORDER BY day) AS xp,
              |             lead(x) OVER (ORDER BY day) AS xn
              |      FROM daily),
@@ -485,11 +464,7 @@ object SpcQueries extends QueryCatalog {
     //    the bounded post-aggregate day axis.
     QueryDef("q_page_hinkley",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
-          .groupBy(col("day"))
-          .agg(sum(col("cents")).as("sc"), count(lit(1)).as("cnt"))
+        val daily = eventsDailyCents(s, d)
           .withColumn("x_e6", expr("sc * 10000 div cnt"))
         val ord = Window.orderBy(col("day"))
         val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -505,11 +480,7 @@ object SpcQueries extends QueryCatalog {
           .select(col("day"), col("x_e6"), col("u_e6"), col("ph_e6"),
             col("alarm"))
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(sum(CAST(floor(value * 100 + 0.5)
-             |                        AS BIGINT)) AS BIGINT) AS sc,
-             |                      CAST(count(*) AS BIGINT) AS cnt
-             |               FROM events GROUP BY 1),
+      Some(s"""WITH $eventsDailyCentsSql,
              |x AS (SELECT day, sc * 10000 // cnt AS x_e6 FROM daily),
              |c AS (SELECT day, x_e6,
              |             CAST(row_number() OVER w AS BIGINT) AS t,
@@ -537,9 +508,7 @@ object SpcQueries extends QueryCatalog {
     //    from a short subgroup is biased. All integer e6.
     QueryDef("q_xbar_r",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .select(expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = eventsPerDay(s, d)
         val weeks = daily
           .groupBy(expr("day div 7").as("wk"))
           .agg(count(lit(1)).as("n_days"), sum(col("c")).as("s"),
@@ -561,9 +530,7 @@ object SpcQueries extends QueryCatalog {
             "(r_sum_e6 div n_sub) * 1924 div 1000 AS ucl_r_e6",
             "(r_sum_e6 div n_sub) * 76 div 1000 AS lcl_r_e6")
       },
-      Some("""WITH daily AS (SELECT epoch_us(ts) // 86400000000 AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM events GROUP BY 1),
+      Some(s"""WITH $eventsPerDaySql,
              |weeks AS (SELECT day // 7 AS wk,
              |                 CAST(count(*) AS BIGINT) AS n_days,
              |                 CAST(sum(c) AS BIGINT) AS s,
@@ -650,10 +617,7 @@ object SpcQueries extends QueryCatalog {
     //    dev·20000 > 44478·mad4 is exact integer. Emits flagged days.
     QueryDef("q_hampel",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
-            "div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
           .localCheckpoint(false) // center + member sides of the window
         val mem = daily.select(col("day").as("ctr"), col("c").as("cc"),
             explode(sequence(lit(-3), lit(3))).as("off"))
@@ -689,10 +653,7 @@ object SpcQueries extends QueryCatalog {
           .selectExpr("ctr AS day", "cc AS c", "m2 AS med_x2",
             "mad4 AS mad_x4")
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |mem AS (SELECT a.day AS ctr, a.c AS cc, b.day AS mday,
              |               b.c AS mc
              |        FROM daily a
@@ -736,11 +697,7 @@ object SpcQueries extends QueryCatalog {
     //    by horizon — one exchange over a calendar-bounded frame.
     QueryDef("q_variance_ratio",
       (s, d) => {
-        val dec = "decimal(38,0)"
-        val daily = Tables.orders(s, d)
-          .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
-            "div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
           .withColumn("rn", row_number().over(Window.orderBy(col("day"))))
           .localCheckpoint(false) // one frame, three horizon windows
         val qs = daily.select(col("c"), col("rn"),
@@ -785,10 +742,7 @@ object SpcQueries extends QueryCatalog {
           .selectExpr("CAST(q AS BIGINT) AS q", "CAST(m AS BIGINT) AS m",
             "vr_e6", "z")
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |idx AS (SELECT c, row_number() OVER (ORDER BY day) AS rn
              |        FROM daily),
              |qs AS (SELECT q, c, rn FROM idx
@@ -846,10 +800,7 @@ object SpcQueries extends QueryCatalog {
     //    large-sample z from the exact variance polynomial.
     QueryDef("q_bartels_rank",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
-            "div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
         val rk = daily
           .withColumn("r", row_number().over(
             Window.orderBy(col("c"), col("day"))).cast("long"))
@@ -872,10 +823,7 @@ object SpcQueries extends QueryCatalog {
               |               * CAST((n - 1) * (n - 1) AS DOUBLE))), 6)
               |AS z""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |rk AS (SELECT day,
              |              CAST(row_number() OVER (ORDER BY c, day)
              |                AS BIGINT) AS r
@@ -990,7 +938,6 @@ object SpcQueries extends QueryCatalog {
     //    day axis (calendar-sized, never data-sized).
     QueryDef("q_cusum_squares",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val daily = Tables.lineitem(s, d)
           .groupBy(expr("unix_micros(CAST(l_shipdate AS TIMESTAMP)) " +
             "div 86400000000").as("day"))
@@ -1434,11 +1381,7 @@ object SpcQueries extends QueryCatalog {
               |  * CAST('1000000.0' AS DOUBLE)) AS BIGINT)
               |END AS z_e6""".stripMargin)
       },
-      Some("""WITH daily AS (
-             |  SELECT CAST(o_orderdate AS DATE) AS dt,
-             |         CAST(sum(CAST(floor(o_totalprice / 100 + 0.5)
-             |           AS BIGINT)) AS BIGINT) AS x
-             |  FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersDailyHectoSql,
              |diffs AS (SELECT a.dt,
              |            CASE WHEN b.x >= a.x THEN 1 ELSE -1 END AS sg
              |          FROM daily a JOIN daily b ON b.dt = a.dt + 1),

@@ -3,11 +3,43 @@ package graft.queries
 import graft.{QueryCatalog, QueryDef, Tables}
 import graft.ops.{Bm25, Sketches, Stats}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Survival and event-history analysis: Kaplan-Meier, Nelson-Aalen,
   * log-rank, Cox scores, concordance, RMST, and competing risks. */
 object SurvivalQueries extends QueryCatalog {
+
+  /** Per customer the first and last order day (f, l) with the corpus
+    * end day e: the churn subjects of the survival queries. */
+  private def customerSpans(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .withColumn("day",
+        expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
+      .groupBy(col("o_custkey"))
+      .agg(min(col("day")).as("f"), max(col("day")).as("l"))
+      .crossJoin(broadcast(
+        Tables.orders(s, d).agg(max(
+          expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
+          .as("e"))))
+
+  /** DuckDB twin of the churn subjects (t = l − f, ev = quiet > 60
+    * days) and their risk-set walk: CTEs `od`, `cu`, `g`, `subj`, `grp`
+    * (t, d, leave), `tot`, `walk` (t, d, leave, n_risk). */
+  private val churnSubjectsSql =
+    """od AS (SELECT o_custkey, epoch_us(o_orderdate) // 86400000000 AS day
+      |           FROM orders),
+      |cu AS (SELECT o_custkey, min(day) AS f, max(day) AS l FROM od GROUP BY 1),
+      |g AS (SELECT max(day) AS e FROM od),
+      |subj AS (SELECT l - f AS t, CASE WHEN e - l > 60 THEN 1 ELSE 0 END AS ev
+      |         FROM cu CROSS JOIN g),
+      |grp AS (SELECT t, CAST(sum(ev) AS BIGINT) AS d,
+      |               CAST(count(*) AS BIGINT) AS leave FROM subj GROUP BY t),
+      |tot AS (SELECT CAST(sum(leave) AS BIGINT) AS n_all FROM grp),
+      |walk AS (SELECT t, d, leave,
+      |            CAST(n_all - (sum(leave) OVER w - leave) AS BIGINT) AS n_risk
+      |         FROM grp CROSS JOIN tot
+      |         WINDOW w AS (ORDER BY t ROWS UNBOUNDED PRECEDING))""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -17,33 +49,13 @@ object SurvivalQueries extends QueryCatalog {
     //    inverted by the 2^-x table — all integer.
     QueryDef("q_kaplan_meier",
       (s, d) => Stats.kaplanMeier(
-        Tables.orders(s, d)
-          .withColumn("day",
-            expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-          .groupBy(col("o_custkey"))
-          .agg(min(col("day")).as("f"), max(col("day")).as("l"))
-          .crossJoin(broadcast(
-            Tables.orders(s, d).agg(max(
-              expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-              .as("e"))))
+        customerSpans(s, d)
           .select((col("l") - col("f")).as("t"),
             when(col("e") - col("l") > 60L, 1L).otherwise(0L).as("ev")),
         "t", "ev"),
       Some {
         val stepL = Bm25.log2E6Sql("(n_risk - d)") + " - " + Bm25.log2E6Sql("n_risk")
-        s"""WITH od AS (SELECT o_custkey, epoch_us(o_orderdate) // 86400000000 AS day
-           |           FROM orders),
-           |cu AS (SELECT o_custkey, min(day) AS f, max(day) AS l FROM od GROUP BY 1),
-           |g AS (SELECT max(day) AS e FROM od),
-           |subj AS (SELECT l - f AS t, CASE WHEN e - l > 60 THEN 1 ELSE 0 END AS ev
-           |         FROM cu CROSS JOIN g),
-           |grp AS (SELECT t, CAST(sum(ev) AS BIGINT) AS d,
-           |               CAST(count(*) AS BIGINT) AS leave FROM subj GROUP BY t),
-           |tot AS (SELECT CAST(sum(leave) AS BIGINT) AS n_all FROM grp),
-           |walk AS (SELECT t, d, leave,
-           |            CAST(n_all - (sum(leave) OVER w - leave) AS BIGINT) AS n_risk
-           |         FROM grp CROSS JOIN tot
-           |         WINDOW w AS (ORDER BY t ROWS UNBOUNDED PRECEDING)),
+        s"""WITH $churnSubjectsSql,
            |evs AS (SELECT t, n_risk, d FROM walk WHERE d > 0),
            |sc AS (SELECT t, n_risk, d,
            |          CAST(sum(CASE WHEN n_risk > d THEN $stepL ELSE 0 END) OVER w AS BIGINT) AS sl,
@@ -59,31 +71,11 @@ object SurvivalQueries extends QueryCatalog {
     //    customers inactive > 60 days before corpus end are events.
     QueryDef("q_nelson_aalen",
       (s, d) => Stats.nelsonAalen(
-        Tables.orders(s, d)
-          .withColumn("day",
-            expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-          .groupBy(col("o_custkey"))
-          .agg(min(col("day")).as("f"), max(col("day")).as("l"))
-          .crossJoin(broadcast(
-            Tables.orders(s, d).agg(max(
-              expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-              .as("e"))))
+        customerSpans(s, d)
           .select((col("l") - col("f")).as("t"),
             when(col("e") - col("l") > 60L, 1L).otherwise(0L).as("ev")),
         "t", "ev"),
-      Some("""WITH od AS (SELECT o_custkey, epoch_us(o_orderdate) // 86400000000 AS day
-             |           FROM orders),
-             |cu AS (SELECT o_custkey, min(day) AS f, max(day) AS l FROM od GROUP BY 1),
-             |g AS (SELECT max(day) AS e FROM od),
-             |subj AS (SELECT l - f AS t, CASE WHEN e - l > 60 THEN 1 ELSE 0 END AS ev
-             |         FROM cu CROSS JOIN g),
-             |grp AS (SELECT t, CAST(sum(ev) AS BIGINT) AS d,
-             |               CAST(count(*) AS BIGINT) AS leave FROM subj GROUP BY t),
-             |tot AS (SELECT CAST(sum(leave) AS BIGINT) AS n_all FROM grp),
-             |walk AS (SELECT t, d, leave,
-             |            CAST(n_all - (sum(leave) OVER w - leave) AS BIGINT) AS n_risk
-             |         FROM grp CROSS JOIN tot
-             |         WINDOW w AS (ORDER BY t ROWS UNBOUNDED PRECEDING)),
+      Some(s"""WITH $churnSubjectsSql,
              |evs AS (SELECT t, n_risk, d,
              |          CAST(d * 1000000 // n_risk AS BIGINT) AS term_e6
              |        FROM walk WHERE d > 0)
@@ -98,15 +90,7 @@ object SurvivalQueries extends QueryCatalog {
     //    and variance — all integer e6, overflow-ordered.
     QueryDef("q_logrank",
       (s, d) => Stats.logRank(
-        Tables.orders(s, d)
-          .withColumn("day",
-            expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-          .groupBy(col("o_custkey"))
-          .agg(min(col("day")).as("f"), max(col("day")).as("l"))
-          .crossJoin(broadcast(
-            Tables.orders(s, d).agg(max(
-              expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000"))
-              .as("e"))))
+        customerSpans(s, d)
           .select((col("l") - col("f")).as("t"),
             when(col("e") - col("l") > 60L, 1L).otherwise(0L).as("ev"),
             (col("o_custkey") % 2).as("g"))),

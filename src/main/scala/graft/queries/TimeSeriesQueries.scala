@@ -69,9 +69,7 @@ object TimeSeriesQueries extends QueryCatalog {
     //    exact int128/decimal sums, one IEEE ratio at the end.
     QueryDef("q_autocorr",
       (s, d) => TimeSeries.autocorr(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some("""WITH e AS (SELECT event_type AS key, epoch_us(ts) AS t, event_id,
              |                 CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events),
@@ -174,10 +172,7 @@ object TimeSeriesQueries extends QueryCatalog {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("k")).orderBy(col("day"))
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("k"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("c"))
+        val daily = eventTypeDaily(s, d)
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= 28)
         val scales = daily
@@ -220,10 +215,7 @@ object TimeSeriesQueries extends QueryCatalog {
         val lgM = Bm25.log2E6Sql("CAST(m AS BIGINT)")
         val lgV = Bm25.log2E6Sql("CAST(nb * qb - sb * sb AS BIGINT)")
         val lgN = Bm25.log2E6Sql("CAST(nb AS BIGINT)")
-        s"""WITH daily AS (
-           |  SELECT event_type AS k, epoch_us(ts) // 86400000000 AS day,
-           |         count(*) AS c
-           |  FROM events GROUP BY 1, 2),
+        s"""WITH $eventTypeDailySql,
            |r AS (SELECT k, c, row_number() OVER (PARTITION BY k
            |        ORDER BY day) AS rn FROM daily),
            |blk AS (
@@ -267,9 +259,7 @@ object TimeSeriesQueries extends QueryCatalog {
     //    ordinal patterns over (ts, event_id)-ordered triples.
     QueryDef("q_permutation_entropy",
       (s, d) => TimeSeries.permutationEntropy(
-        Tables.events(s, d)
-          .withColumn("t_us", unix_micros(col("ts")))
-          .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long")),
+        eventsTimedCents(s, d),
         "event_type", "t_us", "event_id", "cents"),
       Some {
         val lg = Bm25.log2E6Sql("n") + " - " + Bm25.log2E6Sql("c")
@@ -378,7 +368,6 @@ object TimeSeriesQueries extends QueryCatalog {
     //    integer arithmetic.
     QueryDef("q_goertzel_power",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val prof = Tables.events(s, d)
           .select(expr("(unix_micros(ts) div 3600000000) % 24").as("hod"))
           .groupBy(col("hod")).agg(count(lit(1)).as("c"))
@@ -424,7 +413,6 @@ object TimeSeriesQueries extends QueryCatalog {
     //    count moments; one deterministic double sequence closes it.
     QueryDef("q_pacf",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val days = Tables.events(s, d)
           .select(expr("unix_micros(ts) div 86400000000").as("day"))
           .groupBy(col("day")).agg(count(lit(1)).as("x"))
@@ -567,12 +555,7 @@ object TimeSeriesQueries extends QueryCatalog {
     //    the 7-year order horizon, not by data volume).
     QueryDef("q_durbin_watson",
       (s, d) => {
-        val dec = "decimal(38,0)"
-        val daily = Tables.orders(s, d)
-          .select(expr(
-            "unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000")
-            .as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
         val tot = daily.agg(count(lit(1)).as("n"), sum(col("c")).as("s"))
         daily.crossJoin(broadcast(tot))
           .withColumn("z", expr(s"CAST(n * c - s AS $dec)"))
@@ -585,10 +568,7 @@ object TimeSeriesQueries extends QueryCatalog {
             """round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6)
               |AS dw""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
              |               CAST(sum(c) AS BIGINT) AS s FROM daily),
              |z AS (SELECT day, n,
@@ -616,10 +596,7 @@ object TimeSeriesQueries extends QueryCatalog {
     //    lb_cum_e6 accumulated over the lag axis in exact longs.
     QueryDef("q_ljung_box",
       (s, d) => {
-        val daily = Tables.orders(s, d)
-          .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
-            "div 86400000000").as("day"))
-          .groupBy(col("day")).agg(count(lit(1)).as("c"))
+        val daily = ordersPerDay(s, d)
         val tot = daily.agg(count(lit(1)).as("n"), sum(col("c")).as("s"))
         val cen = daily.crossJoin(broadcast(tot))
           .select(col("day"), col("n"), expr("n * c - s").as("v"))
@@ -647,10 +624,7 @@ object TimeSeriesQueries extends QueryCatalog {
             "CAST(pairs AS BIGINT) AS pairs", "r_e6", "q_k_e6",
             "lb_cum_e6")
       },
-      Some("""WITH daily AS (SELECT epoch_us(o_orderdate) // 86400000000
-             |                        AS day,
-             |                     CAST(count(*) AS BIGINT) AS c
-             |              FROM orders GROUP BY 1),
+      Some(s"""WITH $ordersPerDaySql,
              |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
              |               CAST(sum(c) AS BIGINT) AS s FROM daily),
              |cen AS (SELECT day, n, n * c - s AS v
@@ -687,7 +661,6 @@ object TimeSeriesQueries extends QueryCatalog {
     //    those exact integers — identical trees both engines.
     QueryDef("q_granger_lite",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val oy = Tables.orders(s, d)
           .select(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
             "div 86400000000").as("day"))
@@ -793,7 +766,6 @@ object TimeSeriesQueries extends QueryCatalog {
     //    calendar-bounded, so the unpartitioned window is safe.
     QueryDef("q_rolling_beta",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val daily = Tables.lineitem(s, d)
           .join(Tables.orders(s, d).select(col("o_orderkey"),
             col("o_custkey")), col("l_orderkey") === col("o_orderkey"))
@@ -879,11 +851,7 @@ object TimeSeriesQueries extends QueryCatalog {
     //    fixed-point integer log₂ — Σ p·log2(ΣP/P_k) in e6 bits.
     QueryDef("q_spectral_entropy",
       (s, d) => {
-        val dec = "decimal(38,0)"
-        val prof = Tables.events(s, d)
-          .groupBy(col("event_type"),
-            expr("(unix_micros(ts) div 3600000000) % 24").as("hod"))
-          .agg(count(lit(1)).as("c"))
+        val prof = hourProfile(s, d)
         val freqs = s.range(1, 9).select(col("id").as("freq"))
         val pw = prof.crossJoin(broadcast(freqs))
           .withColumn("idx", expr("(freq * hod) % 24"))
@@ -959,7 +927,6 @@ object TimeSeriesQueries extends QueryCatalog {
     //    factored). The 4×4 joint grid is bounded.
     QueryDef("q_auto_mutual_info",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val b = binned(s, d).localCheckpoint(false) // 3 lag self-joins
         val lags = s.range(0, 3)
           .select(expr("CAST(CASE id WHEN 0 THEN 1 WHEN 1 THEN 7 " +
@@ -1110,14 +1077,7 @@ object TimeSeriesQueries extends QueryCatalog {
     QueryDef("q_engle_granger",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val monthly = Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)
-            .select(col("c_custkey"), col("c_nationkey"))),
-            col("o_custkey") === col("c_custkey"))
-          .join(broadcast(Tables.nation(s, d)
-            .select(col("n_nationkey"), col("n_regionkey"))),
-            col("c_nationkey") === col("n_nationkey"))
-          .where(col("n_regionkey").isin(0, 1))
+        val monthly = region01Orders(s, d)
           .groupBy(trunc(col("o_orderdate"), "month").as("mo"))
           .agg(sum(when(col("n_regionkey") === 0,
             floor(col("o_totalprice") * 100 + 0.5).cast("long"))

@@ -200,7 +200,6 @@ object TwoSampleQueries extends QueryCatalog {
     //    distinct value axis, e12-normalized at the end.
     QueryDef("q_cvm_test",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val cells = Tables.documents(s, d)
           .select((col("lang") === "en").as("isA"), col("n_chars").as("v"))
           .groupBy(col("v"))
@@ -257,11 +256,7 @@ object TwoSampleQueries extends QueryCatalog {
     //    Nearest-rank (lower) median keeps everything integer.
     QueryDef("q_hodges_lehmann",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type").as("et"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("et"), col("day")).agg(count(lit(1)).as("c"))
+        val daily = clickViewDaily(s, d)
           .localCheckpoint(false) // both sides of the 30×30 pair grid
         val x = daily.filter(col("et") === "click")
           .select(col("c").as("cx"))
@@ -275,12 +270,7 @@ object TwoSampleQueries extends QueryCatalog {
           .selectExpr("CAST(n_pairs AS BIGINT) AS n_pairs",
             "CAST(diff AS BIGINT) AS hl_shift")
       },
-      Some("""WITH daily AS (SELECT event_type AS et,
-             |                      epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(count(*) AS BIGINT) AS c
-             |               FROM events
-             |               WHERE event_type IN ('click', 'view')
-             |               GROUP BY 1, 2),
+      Some(s"""WITH $clickViewDailySql,
              |pairs AS (SELECT x.c - y.c AS diff
              |          FROM (SELECT c FROM daily WHERE et = 'click') x
              |          CROSS JOIN (SELECT c FROM daily WHERE et = 'view') y),
@@ -300,11 +290,7 @@ object TwoSampleQueries extends QueryCatalog {
     //    (parity-exact e6 form).
     QueryDef("q_ansari_bradley",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .filter(col("event_type").isin("click", "view"))
-          .select(col("event_type").as("et"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .groupBy(col("et"), col("day")).agg(count(lit(1)).as("c"))
+        val daily = clickViewDaily(s, d)
           .localCheckpoint(false) // rank walk + group sizes
         val n = daily.agg(count(lit(1)).as("n_all"))
         daily.crossJoin(broadcast(n))
@@ -322,12 +308,7 @@ object TwoSampleQueries extends QueryCatalog {
               |     ELSE n1 * (n_all + 1) * (n_all + 1) * 1000000
               |          div (4 * n_all) END AS e_ab_e6""".stripMargin)
       },
-      Some("""WITH daily AS (SELECT event_type AS et,
-             |                      epoch_us(ts) // 86400000000 AS day,
-             |                      CAST(count(*) AS BIGINT) AS c
-             |               FROM events
-             |               WHERE event_type IN ('click', 'view')
-             |               GROUP BY 1, 2),
+      Some(s"""WITH $clickViewDailySql,
              |n AS (SELECT CAST(count(*) AS BIGINT) AS n_all FROM daily),
              |r AS (SELECT et, n_all,
              |             CAST(row_number() OVER (ORDER BY c, et, day)
@@ -784,7 +765,6 @@ object TwoSampleQueries extends QueryCatalog {
     //    B = (B_X + B_Y)/2 e6.
     QueryDef("q_bws_test",
       (s, d) => {
-        val dec = "decimal(38,0)"
         val p = pooled(s, d)
           .withColumn("i", row_number().over(
             Window.partitionBy(col("g")).orderBy(col("r"))).cast("long"))
@@ -999,14 +979,7 @@ object TwoSampleQueries extends QueryCatalog {
     // ── Kuiper V between urgent and relaxed order-value CDFs.
     QueryDef("q_kuiper_orders",
       (s, d) => {
-        val g = Tables.orders(s, d)
-          .select(expr("CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)" +
-            " div 100000").as("bucket"),
-            col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("urgent"))
-          .groupBy(col("bucket"))
-          .agg(sum(when(col("urgent"), 1L).otherwise(0L)).as("ca"),
-            sum(when(col("urgent"), 0L).otherwise(1L)).as("cb"))
-        val tot = g.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+        val (g, tot) = urgentBuckets(s, d)
         val w = Window.orderBy(col("bucket"))
         g.crossJoin(broadcast(tot))
           .withColumn("d",
@@ -1023,19 +996,7 @@ object TwoSampleQueries extends QueryCatalog {
             s"CAST((dplus + dminus) * 1000000" +
               s" div (CAST(na AS $dec) * nb) AS BIGINT) AS kuiper_v_e6")
       },
-      Some("""WITH b AS (
-             |  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)
-             |           // 100000 AS bucket,
-             |         o_orderpriority IN ('1-URGENT', '2-HIGH') AS urgent
-             |  FROM orders),
-             |g AS (SELECT bucket,
-             |        CAST(sum(CASE WHEN urgent THEN 1 ELSE 0 END)
-             |          AS BIGINT) AS ca,
-             |        CAST(sum(CASE WHEN urgent THEN 0 ELSE 1 END)
-             |          AS BIGINT) AS cb
-             |      FROM b GROUP BY 1),
-             |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-             |               CAST(sum(cb) AS BIGINT) AS nb FROM g),
+      Some(s"""WITH $urgentBucketsSql,
              |c AS (SELECT bucket, na, nb,
              |        CAST(sum(ca) OVER (ORDER BY bucket) AS HUGEINT) * nb
              |          - CAST(sum(cb) OVER (ORDER BY bucket) AS HUGEINT)

@@ -19,19 +19,19 @@ object StatefulLatest {
   private def newer(a: KeyedPos, b: KeyedPos): KeyedPos =
     if (b.ts_us > a.ts_us || (b.ts_us == a.ts_us && b.event_id > a.event_id)) b else a
 
+  /** The key's new latest position, or None when every incoming row is
+    * stale against `prev` (stale updates emit nothing). */
+  private def advance(prev: Option[KeyedPos],
+                      rows: Iterator[KeyedPos]): Option[KeyedPos] =
+    rows.reduceOption(newer).map(b => prev.fold(b)(newer(_, b)))
+      .filterNot(prev.contains)
+
   private def updateKey(
       key: (String, String), rows: Iterator[KeyedPos],
       state: GroupState[KeyedPos]): Iterator[KeyedPos] = {
-    val prev = state.getOption
-    val incoming = rows.reduceOption(newer)
-    (prev, incoming) match {
-      case (_, None) => Iterator.empty
-      case (None, Some(b)) => state.update(b); Iterator(b)
-      case (Some(a), Some(b)) =>
-        val best = newer(a, b)
-        if (best == a) Iterator.empty // stale updates emit nothing
-        else { state.update(best); Iterator(best) }
-    }
+    val next = advance(state.getOption, rows)
+    next.foreach(state.update)
+    next.iterator
   }
 
   /** `clean` must carry provider/vehicleId/eventTs/event-ish id/lat/lon.
@@ -66,14 +66,10 @@ object StatefulLatest {
 
     override def handleInputRows(key: (String, String), rows: Iterator[KeyedPos],
                                  timerValues: TimerValues): Iterator[KeyedPos] = {
-      val prev = if (latestState.exists()) Some(latestState.get()) else None
-      rows.reduceOption(newer) match {
-        case None => Iterator.empty
-        case Some(b) =>
-          val best = prev.map(newer(_, b)).getOrElse(b)
-          if (prev.contains(best)) Iterator.empty // stale updates emit nothing
-          else { latestState.update(best); Iterator(best) }
-      }
+      val next = advance(
+        if (latestState.exists()) Some(latestState.get()) else None, rows)
+      next.foreach(latestState.update)
+      next.iterator
     }
   }
 

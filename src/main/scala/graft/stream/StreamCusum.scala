@@ -42,49 +42,4 @@ object StreamCusum {
     points.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
-
-  /** [[alarms]] on `transformWithState` with optional per-state TTL — a
-    * key quiet past the TTL has its running sum evicted by the store and
-    * restarts from 0 on its next point. For a drift detector that reset IS
-    * the usually-wanted semantics (stale processes re-baseline); pass
-    * `None` for exact [[alarms]] behavior. RocksDB provider required. */
-  class CusumProcessor(targetCents: Long, slackCents: Long,
-                       thresholdCents: Long, ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Point, Alarm] {
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var st: ValueState[CusumState] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl == null) TTLConfig.NONE else new TTLConfig(ttl)
-      st = getHandle.getValueState[CusumState]("cusum",
-        org.apache.spark.sql.Encoders.product[CusumState], cfg)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[Point],
-                                 timerValues: TimerValues): Iterator[Alarm] = {
-      val drift = targetCents + slackCents
-      var s = if (st.exists()) st.get().s else 0L
-      val out = Seq.newBuilder[Alarm]
-      rows.toSeq.sortBy(_.t_us).foreach { p =>
-        s = math.max(0L, s + p.cents - drift)
-        if (s > thresholdCents) out += Alarm(key, p.t_us, s)
-      }
-      st.update(CusumState(s))
-      out.result().iterator
-    }
-  }
-
-  def alarmsTws(points: Dataset[Point], targetCents: Long, slackCents: Long,
-                thresholdCents: Long,
-                idleTtl: Option[java.time.Duration] = None): Dataset[Alarm] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode =
-      if (idleTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    points.groupByKey(_.key)
-      .transformWithState(
-        new CusumProcessor(targetCents, slackCents, thresholdCents, idleTtl.orNull),
-        timeMode, OutputMode.Append)
-  }
 }

@@ -29,7 +29,7 @@ object StreamEwma {
   case class Spike(key: String, t_us: Long, cents: Long, m_cents: Long,
                    dev_cents: Long)
 
-  /** Per-state TTL semantics as [[StreamCusum.alarmsTws]]: an evicted
+  /** Per-state TTL semantics as [[StreamPageHinkley.detectTws]]: an evicted
     * key re-baselines from its next point. RocksDB provider required. */
   class EwmaProcessor(k: Long, ttl: java.time.Duration)
       extends StatefulProcessor[String, Point, Spike] {

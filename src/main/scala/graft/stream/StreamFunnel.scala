@@ -55,61 +55,6 @@ object StreamFunnel {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
-  /** [[stages]] on Spark 4's `transformWithState` with optional per-state
-    * TTL: the state store itself garbage-collects entities idle past the
-    * TTL (PROCESSING-time — the TTL mechanism the new API offers), so
-    * bounded state needs no timer bookkeeping at all. Divergence from
-    * [[stagesExpiring]] is deliberate and documented: TTL eviction is
-    * silent (no terminal `closed` row) and wall-clock-based; use the
-    * event-time-timeout form when abandonment rows are the product.
-    * Requires the RocksDB state store provider at runtime. */
-  class FunnelProcessor(steps: Seq[String], ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, FunnelEvent, StageAdvance] {
-    import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var st: ValueState[FunnelState] = _
-
-    override def init(outputMode: OM, timeMode: TimeMode): Unit = {
-      val cfg = if (ttl == null) TTLConfig.NONE else new TTLConfig(ttl)
-      st = getHandle.getValueState[FunnelState]("funnel",
-        org.apache.spark.sql.Encoders.product[FunnelState], cfg)
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[FunnelEvent],
-                                 timerValues: TimerValues): Iterator[StageAdvance] = {
-      var s = if (st.exists()) st.get() else FunnelState(0, -1L)
-      val out = Seq.newBuilder[StageAdvance]
-      rows.toSeq.sortBy(e => (e.t_us, e.et)).foreach { e =>
-        if (s.stage < steps.size && e.et == steps(s.stage) && e.t_us > s.t_us) {
-          s = FunnelState(s.stage + 1, e.t_us)
-          out += StageAdvance(key, s.stage, e.t_us)
-        }
-      }
-      val advances = out.result()
-      if (advances.nonEmpty) st.update(s)
-      advances.iterator
-    }
-  }
-
-  /** [[stages]] via `transformWithState`; `idleTtl = None` keeps state
-    * forever (exact [[stages]] semantics), `Some(d)` lets the store evict
-    * entities idle past `d` of processing time. With a TTL the query runs
-    * in TimeMode.ProcessingTime, where the engine schedules batches
-    * CONTINUOUSLY (even with no new data) so TTL sweeps can fire — give
-    * such queries a real processing-time trigger in production, and poll
-    * sinks rather than `processAllAvailable` in tests. */
-  def stagesTws(events: Dataset[FunnelEvent], steps: Seq[String],
-                idleTtl: Option[java.time.Duration] = None): Dataset[StageAdvance] = {
-    require(steps.nonEmpty, "funnel steps must be non-empty")
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    val timeMode =
-      if (idleTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events.groupByKey(_.entity)
-      .transformWithState(new FunnelProcessor(steps, idleTtl.orNull),
-        timeMode, OutputMode.Append)
-  }
-
   /** [[stages]] with watermark-driven state EXPIRY: an entity idle past
     * `idleMinutes` (in EVENT time — the watermark, not the wall clock)
     * emits one terminal `closed = true` row with its final stage and is

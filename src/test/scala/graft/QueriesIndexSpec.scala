@@ -68,4 +68,9 @@ class QueriesIndexSpec extends AnyFunSuite {
     assert(indexText.contains(s"$n oracle-checked queries"),
       s"QUERIES.md headline should say '$n oracle-checked queries'")
   }
+
+  test("the registry maps are built once, not on every call") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+  }
 }
