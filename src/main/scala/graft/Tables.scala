@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.geo.HexSql
 
 /** Central IO over the shared testdata (TESTDATA.md). All readers go
@@ -10,6 +13,20 @@ import graft.geo.HexSql
   *  - `events.parquet` `ts` has shipped as both TIMESTAMP(NANOS) and
   *    timestamp[us] across testdata generations; `load` sniffs the read
   *    schema and normalizes to TimestampType(us) either way.
+  *  - A bare `spark.read.parquet` infers the schema with a Spark job (one
+  *    task reading the footers) on every call, and building one query
+  *    reads its tables many times. `load` therefore memoizes the inferred
+  *    `StructType` — only the schema, never a DataFrame — per session and
+  *    per path plus file-status signature (leaf file names, lengths and
+  *    modification times from one listing). The first read of a table in
+  *    a session infers as before and is returned as is; later reads pin
+  *    the memoized schema (`spark.read.schema`), which runs no job yet
+  *    still yields a fresh relation with new expression ids, so two reads
+  *    of one table self-join as two independent scans. The session is part
+  *    of the key because its conf (e.g. `nanosAsLong`) shapes inference,
+  *    and it is held weakly, so a dropped session takes its entries with
+  *    it; the signature makes a table rewritten at the same path infer
+  *    again.
   *  - At 100 TB the same entry point is where partition pruning / pushdown
   *    options (`mergeSchema=false`, file-size tuning) are controlled; scans
   *    stay declarative so Catalyst prunes columns per query.
@@ -18,9 +35,35 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private type Signature = (String, Seq[(String, Long, Long)])
+
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Signature, StructType]]())
+
+  private def signature(spark: SparkSession, path: String): Signature = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (path, fs.listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+  }
+
+  /** Read one Parquet path, inferring its schema at most once per session
+    * and file-status signature (see the object scaladoc). */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    val key = signature(spark, path)
+    Option(memo.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        memo.put(key, df.schema)
+        df
+    }
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     // `ts` contract: the generator has shipped TIMESTAMP(NANOS) (read back
     // as long under nanosAsLong) and plain timestamp[us] (read back as
     // TIMESTAMP_NTZ) across testdata generations. Normalize to

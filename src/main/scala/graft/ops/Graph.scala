@@ -113,8 +113,11 @@ object Graph {
     *
     * The round ends in the lazy `localCheckpoint(false)` of the header:
     * this line is where the checkpoint policy of every fixed-iteration
-    * rank loop lives. Extra keys are renamed `m_<key>` on the mass side,
-    * since `base` carries the same names. */
+    * rank loop lives. `base` is not checkpointed here: every round joins
+    * it again, so the caller checkpoints it once before the loop, or each
+    * round re-runs the scans and shuffles that built it. Extra keys are
+    * renamed `m_<key>` on the mass side, since `base` carries the same
+    * names. */
   private[graft] def propagate(edges: DataFrame, base: DataFrame,
                                keys: Seq[String], share: Column,
                                combine: Column, out: String)(
@@ -151,8 +154,9 @@ object Graph {
     val e = edges.select(col("src"), col("dst"), col("w"))
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val ew = e.join(sw, "src").localCheckpoint(false)
-    propagateFor(iters, nodes.select(col("id"), lit(1000000L).as("pr_e6")))(
-      propagate(ew, nodes, Seq("id"), expr("(pr_e6 * w) div sw"),
+    val n = nodes.select(col("id")).localCheckpoint(false)
+    propagateFor(iters, n.select(col("id"), lit(1000000L).as("pr_e6")))(
+      propagate(ew, n, Seq("id"), expr("(pr_e6 * w) div sw"),
         expr(s"150000L + $damped"), "pr_e6"))
   }
 

@@ -495,6 +495,7 @@ object GraphCentralityQueries extends QueryCatalog {
           .localCheckpoint(false) // reused by all 3 rounds
         val nodes = e.select(col("src").as("id"))
           .union(e.select(col("dst").as("id"))).distinct()
+          .localCheckpoint(false) // the base every round joins
         Graph.propagateFor(3, nodes.withColumn("x", lit(1000000L)))(
           Graph.propagate(e, nodes, Seq("id"), col("x"),
             expr("1000000L + coalesce(in_mass, 0L) div 10"), "x"))

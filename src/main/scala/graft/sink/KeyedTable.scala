@@ -112,14 +112,28 @@ final class ParquetKeyedTable(spark: SparkSession, path: String,
 
   private def cur = s"$path/gen$gen"
 
+  // The schema generation `gen` was written with, so reading it back runs
+  // no schema-inference job; null until this instance has written or read
+  // a generation (a restarted table infers the recovered one once).
+  private var schema: StructType = null
+
+  private def read(s: SparkSession): DataFrame =
+    if (schema != null) s.read.schema(schema).parquet(cur)
+    else {
+      val df = s.read.parquet(cur)
+      schema = df.schema
+      df
+    }
+
   override def merge(batch: DataFrame): Unit = {
     val merged =
       if (gen == 0) Upsert.merge(batch.limit(0), batch, keyCols, orderCols, payload)
-      else Upsert.merge(spark.read.parquet(cur), batch, keyCols, orderCols, payload)
+      else Upsert.merge(read(spark), batch, keyCols, orderCols, payload)
     val next = s"$path/gen${gen + 1}"
     merged.write.mode("overwrite").parquet(next)
     val old = gen
     gen += 1
+    schema = merged.schema
     // Retire superseded generations (keep only the newly committed one) —
     // otherwise a long-running stream leaks one table copy per epoch.
     listGens.filter(_ <= old).foreach(g => deleteRec(new java.io.File(s"$path/gen$g")))
@@ -132,5 +146,5 @@ final class ParquetKeyedTable(spark: SparkSession, path: String,
 
   override def snapshot(s: SparkSession): DataFrame =
     if (gen == 0) throw new IllegalStateException("no batch merged yet")
-    else s.read.parquet(cur)
+    else read(s)
 }

@@ -34,7 +34,11 @@ final class StreamingJob(
     * parsed / rows surviving sanitize+snap) surface per micro-batch in
     * `StreamingQueryProgress.observedMetrics` — the ops counter a
     * production pipeline alarms on (drop-rate spikes mean a producer
-    * schema broke). */
+    * schema broke).
+    *
+    * The union scans the source once per leg (tiles and latest), so a
+    * progress's `numInputRows` is twice the events the epoch read; the
+    * event count is `graft_ingest.rows_parsed`. */
   def plan(): DataFrame = {
     val parsed = Pipeline.parse(source)
       .observe("graft_ingest",

@@ -35,6 +35,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Jobs the listener bus recorded for `group` while `body` ran. A marker
+    * job in a second group is awaited first: the status store sees jobs in
+    * submission order, so once the marker shows, every earlier job does. */
+  def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, false)
+    try body finally sc.clearJobGroup()
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, marker, false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    var waited = 0
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && waited < 10000) {
+      Thread.sleep(50); waited += 50
+    }
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "marker job never reached the status store")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   override protected def afterAll(): Unit = {
     SparkSpec.drainActiveJobs()
     super.afterAll()

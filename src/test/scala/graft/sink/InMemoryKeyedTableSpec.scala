@@ -9,24 +9,6 @@ class InMemoryKeyedTableSpec extends SparkSpec {
 
   private def ts(s: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
 
-  /** Jobs the listener bus recorded for `group` while `body` ran. A marker
-    * job in a second group is awaited first: the status store sees jobs in
-    * submission order, so once the marker shows, every earlier job does. */
-  private def jobsIn(group: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, false)
-    try body finally sc.clearJobGroup()
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, marker, false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    var waited = 0
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && waited < 10000) {
-      Thread.sleep(50); waited += 50
-    }
-    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty, "marker job never reached the status store")
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   private def rows(t: InMemoryKeyedTable, df: DataFrame): Set[Row] =
     t.snapshot(spark).select(df.columns.toIndexedSeq.map(col): _*).collect().toSet
 

@@ -92,6 +92,22 @@ class StreamingHardeningSpec extends SparkSpec {
     assert(t2.snapshot(spark).collect().toSet == afterBoth)
   }
 
+  test("ParquetKeyedTable reads a generation back with the schema it was written with") {
+    val dir = Files.createTempDirectory("pkt-schema").toString
+    def table = new ParquetKeyedTable(spark, dir, Seq("provider", "vehicleId"),
+      Seq("eventTs"), Seq("event_id", "lat", "lon"))
+    val t = table
+    t.merge(Pipeline.sanitize(Tables.positions(spark, sf()))
+      .select("provider", "vehicleId", "eventTs", "event_id", "lat", "lon"))
+    var snap: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsIn("pkt-snapshot") { snap = t.snapshot(spark) }
+    assert(jobs == 0, s"snapshot re-inferred the written schema: $jobs jobs")
+    // a restarted table infers the recovered generation: same schema
+    val recovered = table.snapshot(spark)
+    assert(snap.schema == recovered.schema)
+    assert(snap.collect().toSet == recovered.collect().toSet)
+  }
+
   test("stateful sessionizer closes sessions via event-time timeout") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
