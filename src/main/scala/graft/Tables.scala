@@ -17,16 +17,17 @@ import graft.geo.HexSql
   *    task reading the footers) on every call, and building one query
   *    reads its tables many times. `load` therefore memoizes the inferred
   *    `StructType` — only the schema, never a DataFrame — per session and
-  *    per path plus file-status signature (leaf file names, lengths and
-  *    modification times from one listing). The first read of a table in
-  *    a session infers as before and is returned as is; later reads pin
-  *    the memoized schema (`spark.read.schema`), which runs no job yet
+  *    path, together with the path's file-status signature (leaf file
+  *    names, lengths and modification times from one listing) at the time
+  *    of inference. The first read of a table in a session infers as
+  *    before and is returned as is; later reads whose signature matches
+  *    pin the memoized schema (`spark.read.schema`), which runs no job yet
   *    still yields a fresh relation with new expression ids, so two reads
-  *    of one table self-join as two independent scans. The session is part
-  *    of the key because its conf (e.g. `nanosAsLong`) shapes inference,
-  *    and it is held weakly, so a dropped session takes its entries with
-  *    it; the signature makes a table rewritten at the same path infer
-  *    again.
+  *    of one table self-join as two independent scans. A table rewritten
+  *    at the same path no longer matches, so it is inferred again and
+  *    replaces its entry. The session is part of the key because its conf
+  *    (e.g. `nanosAsLong`) shapes inference, and it is held weakly, so a
+  *    dropped session takes its entries with it.
   *  - At 100 TB the same entry point is where partition pruning / pushdown
   *    options (`mergeSchema=false`, file-size tuning) are controlled; scans
   *    stay declarative so Catalyst prunes columns per query.
@@ -35,28 +36,28 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private type Signature = (String, Seq[(String, Long, Long)])
+  private type Signature = Seq[(String, Long, Long)]
 
   private val schemas = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Signature, StructType]]())
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Signature, StructType)]]())
 
   private def signature(spark: SparkSession, path: String): Signature = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (path, fs.listStatus(p).toSeq
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    fs.listStatus(p).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
   }
 
-  /** Read one Parquet path, inferring its schema at most once per session
-    * and file-status signature (see the object scaladoc). */
+  /** Read one Parquet path, inferring its schema at most once per session,
+    * path and file-status signature (see the object scaladoc). */
   private def readParquet(spark: SparkSession, path: String): DataFrame = {
     val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
-    val key = signature(spark, path)
-    Option(memo.get(key)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
+    val sig = signature(spark, path)
+    memo.get(path) match {
+      case (`sig`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
         val df = spark.read.parquet(path)
-        memo.put(key, df.schema)
+        memo.put(path, (sig, df.schema))
         df
     }
   }

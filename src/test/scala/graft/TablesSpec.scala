@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** `Tables.load`'s schema memo: later reads of a table run no inference
@@ -9,13 +9,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * reads of the shared testdata warm the memo first. */
 class TablesSpec extends SparkSpec {
 
-  /** A fresh directory holding copies of the given shared testdata tables. */
-  private def copyOf(tables: String*): String = {
+  /** A fresh directory holding a copy of one shared testdata table. */
+  private def copyOf(table: String): String = {
     val dir = Files.createTempDirectory("graft-tables")
-    tables.foreach { t =>
-      Files.copy(Paths.get(sf(), s"$t.parquet"), dir.resolve(s"$t.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    Files.copy(Paths.get(sf(), s"$table.parquet"), dir.resolve(s"$table.parquet"))
     dir.toString
   }
 
